@@ -1,13 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass array kernels backing [[CosineSimilarity]], [[LshBucket]]
-  * and [[MinhashFromHashes]] — the hot expressions of the similarity /
-  * dedup operators. Each replaces a chain of higher-order-function
-  * expressions (`zip_with` + `aggregate` + `transform`) that Catalyst
-  * evaluates interpreted, one lambda call per element, with one tight
-  * JIT-compiled loop per row inside whole-stage codegen.
+/** Single-pass array kernels backing [[CosineSimilarity]], [[LshBucket]],
+  * [[MinhashFromHashes]] and [[NgramShingles]] — the hot expressions of
+  * the similarity / dedup operators. Each replaces a chain of
+  * higher-order-function expressions (`zip_with` + `aggregate` +
+  * `transform`) that Catalyst evaluates interpreted, one lambda call per
+  * element, with one tight JIT-compiled loop per row inside whole-stage
+  * codegen.
   *
   * FLOATING-POINT CONTRACT: every accumulator reproduces the exact IEEE
   * op order of the higher-order-function form it replaces (left fold from
@@ -21,11 +23,16 @@ object VecKernels {
 
   /** Cosine similarity; same op order as
     * `dot(a,b) / (norm(a) * norm(b))` with each factor a separate left
-    * fold (dot = Σ a_i·b_i, norm² = Σ x_i²). Elements must be non-null.
+    * fold (dot = Σ a_i·b_i, norm² = Σ x_i²). Elements must be non-null;
+    * arrays of different lengths throw (the HOF form's `zip_with` would
+    * pad with nulls and yield a null cosine, never a score).
     */
   def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean,
              bFloat: Boolean): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
+    if (b.numElements() != n)
+      throw new IllegalArgumentException(
+        s"cosine of embeddings of different lengths: $n vs ${b.numElements()}")
     var d = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -36,11 +43,6 @@ object VecKernels {
       nb += y * y
       i += 1
     }
-    // zip_with pads the shorter side with null -> the HOF dot would be
-    // null; arrays here always have equal length (same embedding table)
-    var j = n
-    while (j < a.numElements()) { val x = elem(a, j, aFloat); na += x * x; j += 1 }
-    while (j < b.numElements()) { val y = elem(b, j, bFloat); nb += y * y; j += 1 }
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0)
       // a zero-norm vector: the Column form's Divide throws under ANSI
@@ -56,10 +58,14 @@ object VecKernels {
     * acc + x_i · m[p*dims + i]; bit p set iff proj >= 0 (NaN -> unset,
     * matching `when(proj >= 0, ...)`). Returns Σ_p bit_p — identical to
     * the `bits.reduce(_ + _)` sum (bits are disjoint powers of two).
+    * An embedding whose length is not `dims` throws.
     */
   def lshBucket(x: ArrayData, m: Array[Double], planes: Int, dims: Int,
                 isFloat: Boolean): Long = {
-    val n = math.min(x.numElements(), dims)
+    val n = x.numElements()
+    if (n != dims)
+      throw new IllegalArgumentException(
+        s"LSH bucket of an embedding of length $n, expected $dims")
     var bucket = 0L
     var p = 0
     while (p < planes) {
@@ -73,21 +79,23 @@ object VecKernels {
     bucket
   }
 
-  /** MinHash signature from the per-shingle xxhash64 array: slot i is
-    * min over h of rot_{r_i}(h) ^ b_i (rotate-xor bijection family,
-    * r_i/b_i derived from splitmix64 exactly as the Column form).
-    * An empty hash array yields all-null slots — `array_min(transform(
-    * [], ...))` is null — preserving the HOF form's behavior for
-    * shingle-less documents.
-    */
   /** All-null k-slot signature (the null-input value of the HOF form). */
   def minhashNulls(k: Int): ArrayData = new GenericArrayData(new Array[Any](k))
 
+  /** MinHash signature from the per-shingle xxhash64 array: slot i is
+    * min over h of rot_{r_i}(h) ^ b_i (rotate-xor bijection family,
+    * r_i/b_i derived from splitmix64 exactly as the Column form).
+    * Null elements are skipped and an array with no non-null element
+    * yields all-null slots, as `array_min(transform(...))` does — so a
+    * shingle-less document keeps the HOF form's signature.
+    */
   def minhashSig(hashes: ArrayData, rots: Array[Int],
                  xors: Array[Long]): ArrayData = {
     val k = rots.length
     val n = hashes.numElements()
-    if (n == 0) return new GenericArrayData(new Array[Any](k))
+    var first = 0
+    while (first < n && hashes.isNullAt(first)) first += 1
+    if (first == n) return minhashNulls(k)
     val out = new Array[Long](k)
     var i = 0
     while (i < k) {
@@ -96,9 +104,11 @@ object VecKernels {
       var best = Long.MaxValue
       var j = 0
       while (j < n) {
-        val h = hashes.getLong(j)
-        val v = ((h << r) | (h >>> (64 - r))) ^ b
-        if (v < best) best = v
+        if (!hashes.isNullAt(j)) {
+          val h = hashes.getLong(j)
+          val v = ((h << r) | (h >>> (64 - r))) ^ b
+          if (v < best) best = v
+        }
         j += 1
       }
       out(i) = best
@@ -125,8 +135,7 @@ object VecKernels {
         "[DIVIDE_BY_ZERO] jaccard of two empty shingle arrays")
     val (small, big, ns) =
       if (na <= nb) (a, b, na) else (b, a, nb)
-    val set = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](
-      math.max(4, ns * 2))
+    val set = new java.util.HashSet[UTF8String](math.max(4, ns * 2))
     var i = 0
     while (i < ns) { set.add(small.getUTF8String(i)); i += 1 }
     var inter = 0
@@ -156,5 +165,37 @@ object VecKernels {
       i += 1
     }
     ArrayData.toArrayData(out)
+  }
+
+  /** Distinct word n-grams of a token array in one pass: window i joins
+    * tokens i..i+n-1 with " " (`UTF8String.concatWs`, the `concat_ws`
+    * kernel, so a null token is skipped alike) and only the first
+    * occurrence of each n-gram is kept, in window order — the order
+    * `array_distinct` keeps. n = 1 is `array_distinct(tokens)`; fewer
+    * than n tokens yield an empty array.
+    */
+  def ngramShingles(tokens: ArrayData, n: Int): ArrayData = {
+    val windows = tokens.numElements() - n + 1
+    if (windows <= 0) return new GenericArrayData(new Array[Any](0))
+    val sep = UTF8String.fromString(" ")
+    val parts = new Array[UTF8String](n)
+    val seen = new java.util.HashSet[UTF8String](math.max(4, windows * 2))
+    val out = new Array[Any](windows)
+    var m = 0
+    var i = 0
+    while (i < windows) {
+      val g =
+        if (n == 1) tokens.getUTF8String(i)
+        else {
+          var j = 0
+          while (j < n) { parts(j) = tokens.getUTF8String(i + j); j += 1 }
+          UTF8String.concatWs(sep, parts: _*)
+        }
+      // java.util.HashSet admits one null, so a null token (n = 1) is
+      // kept once, like array_distinct
+      if (seen.add(g)) { out(m) = g; m += 1 }
+      i += 1
+    }
+    new GenericArrayData(if (m == windows) out else out.take(m))
   }
 }

@@ -132,3 +132,19 @@ case class HashStringArray(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
+
+/** Distinct word n-grams of a token array, in first-occurrence order —
+  * one pass per row over the already-tokenized text.
+  */
+case class NgramShingles(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"n-gram length must be >= 1, got $n")
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def nullSafeEval(a: Any): Any =
+    VecKernels.ngramShingles(a.asInstanceOf[ArrayData], n)
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t =>
+      s"graft.functions.VecKernels.ngramShingles($t, $n)")
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
