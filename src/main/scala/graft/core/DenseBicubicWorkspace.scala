@@ -1,13 +1,16 @@
 package graft.core
 
-/** Reusable [[DenseBicubic]]-equivalent for fixed grid dimensions: all
-  * derivative matrices and solver scratch are allocated once and reused
-  * across `load()` calls — the per-partition kernel state of the tile
-  * pipeline (one instance per task, thousands of images through it), so
-  * steady-state allocation per image drops to the emitted tiles only.
-  *
-  * Same math as [[DenseBicubic]] (reference bicubic derivative matrices,
-  * `bicubic.hpp:56-87` + Hermite evaluation `:89-186`).
+/** Whole-grid bicubic interpolator for fixed grid dimensions: the
+  * derivative matrices zx, zy, zxy (reference bicubic derivative
+  * matrices, `bicubic.hpp:56-87`) are computed once per `load()` over
+  * the full grid, then each evaluation is a 16-term Hermite polynomial
+  * (`:89-186`) with zero allocation — the reference's bicubic with the
+  * window spanning the whole grid; per-query windowed (6x6) semantics
+  * live in [[graft.operators.BivariateKernel]]. All matrices and solver
+  * scratch are allocated once and reused across `load()` calls — the
+  * per-partition kernel state of the tile pipeline (one instance per
+  * task, thousands of images through it), so steady-state allocation per
+  * image drops to the emitted tiles only.
   */
 final class DenseBicubicWorkspace(nx: Int, ny: Int) {
   private val zx = new Array[Double](nx * ny)

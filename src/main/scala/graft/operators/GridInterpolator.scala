@@ -1,13 +1,15 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{array, coalesce, col, collect_list,
-  count, explode, floor, least, lit, monotonically_increasing_id, pmod,
-  round, struct, sum, when}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.{array, coalesce, col, count, explode,
+  floor, least, lit, monotonically_increasing_id, pmod, round, struct, sum,
+  when}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType,
+  LongType, StructField, StructType}
 import graft.core.{Axis, Bicubic, Boundary, Interpolate}
+import graft.sources.GridLoader
 
 /** Dense 2-D grid (x-major storage) + its axes — the broadcastable analog
   * of the reference Grid2D (`/root/reference/cxx/include/pyinterp/pybind/
@@ -46,24 +48,6 @@ final case class Grid4D(xAxis: Axis, yAxis: Axis, zAxis: Axis, uAxis: Axis,
   @inline def apply(i: Int, j: Int, k: Int, l: Int): Double =
     values((((i.toLong * yAxis.size + j) * zAxis.size + k) *
       uAxis.size + l).toInt)
-  /** 3-D sub-grid at u index l. */
-  def cube(l: Int): Grid3D = {
-    val vals = new Array[Double](xAxis.size * yAxis.size * zAxis.size)
-    var i = 0
-    while (i < xAxis.size) {
-      var j = 0
-      while (j < yAxis.size) {
-        var k = 0
-        while (k < zAxis.size) {
-          vals((i * yAxis.size + j) * zAxis.size + k) = apply(i, j, k, l)
-          k += 1
-        }
-        j += 1
-      }
-      i += 1
-    }
-    Grid3D(xAxis, yAxis, zAxis, vals)
-  }
 }
 
 /** Grid interpolation as a shuffle-free map stage: the grid is broadcast
@@ -132,24 +116,309 @@ object GridInterpolator {
   private def withStableId(df: DataFrame): DataFrame =
     df.withColumn("_rid", monotonically_increasing_id()).localCheckpoint()
 
-  /** Axis-role + value-column resolution shared by the grid-as-table
-    * paths: only the O(nx + ny) distinct axis values reach the driver.
+  /** Settings of a windowed grid-as-table call: the in-plane method, the
+    * z/u combines and the half window.
     */
-  private def resolveGrid2dTable(gridTable: DataFrame, valueCol: String)
-      : (String, String, String, Axis, Axis) = {
-    import graft.sources.GridLoader
-    val roles = GridLoader.identifyAxes(gridTable)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else gridTable.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val Seq(xAxis, yAxis) = GridLoader.axesOf(gridTable, Seq(lonCol, latCol))
-    (lonCol, latCol, vCol, xAxis, yAxis)
+  private final case class Windowing(method: String, zMethod: String,
+                                     uMethod: String, halfWindow: Int)
+
+  // Axis d of a grid-as-table lattice (x, y, z, u) has probe coordinate
+  // letter Coord(d) and lattice index letter Index(d). Working columns:
+  // `_f<x>` fractional cell position, `_<i>0` bracket origin, `_t<x>`
+  // in-cell fraction, `_c<i>` cell key; windowed paths add `_wi`/`_wj`.
+  private val Coord = Seq("x", "y", "z", "u")
+  private val Index = Seq("i", "j", "k", "l")
+  private def cellKey(d: Int): String = s"_c${Index(d)}"
+  private def origin(d: Int): Column = col(s"_${Index(d)}0")
+  private def frac(d: Int): Column = col(s"_t${Coord(d)}")
+
+  /** The grid-as-table interpolation behind the six `*Table*` entry
+    * points, over the lattice axes x, y[, z[, u]] named by `probeCols`.
+    * The lattice is never collected or broadcast: only its axis values
+    * reach the driver. `window` absent = the geometric 2^d-corner join
+    * ([[cornerJoin]]); present = the windowed tile-halo plan
+    * ([[windowJoin]]). A regular lattice brackets probes with column
+    * arithmetic (fully codegen); an irregular one broadcasts the axis
+    * value arrays (O(nx + ny + ...), the d-th root of the lattice) and
+    * brackets with the broadcast kernels' `Axis.findIndexes`. Probes
+    * that cannot be framed, have a null coordinate, or touch a masked
+    * cell yield NaN.
+    */
+  private def tableInterpolate(spark: SparkSession, probe: DataFrame,
+                               probeCols: Seq[String], gridTable: DataFrame,
+                               zColName: String, uColName: String,
+                               valueCol: String, outputCol: String,
+                               xPeriod: Double, caller: String,
+                               window: Option[Windowing]): DataFrame = {
+    window.foreach { w =>
+      require(!geometricMethods.contains(w.method), s"method ${w.method} " +
+        s"is geometric — use ${caller.stripSuffix("Windowed")}")
+      require(w.halfWindow >= 1, "halfWindow must be >= 1")
+    }
+    val (axisCols, vCol) = GridLoader.latticeColumns(gridTable,
+      probeCols.size, caller, zColName, uColName, valueCol)
+    val axes = GridLoader.axesOf(gridTable, axisCols)
+    val planeNodes = window.fold(2)(2 * _.halfWindow)
+    require(axes.indices.forall { d =>
+        val a = axes(d)
+        a.size >= (if (d < 2) planeNodes else 2) && !a.isPeriodic &&
+          a.front < a.back
+      }, s"$caller requires ascending non-periodic axes of >= 2 nodes" +
+        window.fold("")(_ => ", >= 2*halfWindow on x and y"))
+    val periodic = xPeriod != 0.0
+    val regular = axes.forall(_.isRegular)
+    require(regular || !periodic,
+      "xPeriod requires a regular full-circle lattice")
+    val xAxis = axes.head
+    if (periodic) require(
+      math.abs(xAxis.size * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
+      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
+        s"${xAxis.size * xAxis.step}")
+
+    val withId = withStableId(probe)
+    val irregular =
+      if (regular) None else Some(spark.sparkContext.broadcast(axes))
+    val cells = latticeCells(gridTable, axisCols :+ vCol, axes, irregular)
+    val values = window match {
+      case None =>
+        cornerJoin(withId, cells, probeCols, axes, periodic, irregular)
+      case Some(w) => windowJoin(spark, withId, cells, probeCols, axes,
+        periodic, irregular, w)
+    }
+    withId.join(values, Seq("_rid"), "left")
+      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
+      .drop("_rid", "_v")
+  }
+
+  private def rowEncoder(fields: Seq[(String, DataType)])
+      : ExpressionEncoder[Row] =
+    ExpressionEncoder(RowEncoder.encoderFor(StructType(fields.map {
+      case (name, t) => StructField(name, t, nullable = false) })))
+
+  /** The lattice as cell rows (_ci, _cj[, _ck[, _cl]], _z) keyed by integer
+    * lattice index: affine keys on a regular lattice, the nearest-index
+    * search over the `irregular` lattice's broadcast axes otherwise.
+    * `cols` are the axis columns then the value column. A null
+    * coordinate or value is a masked cell, like an absent row: it is
+    * dropped.
+    */
+  private def latticeCells(gridTable: DataFrame, cols: Seq[String],
+                           axes: Seq[Axis],
+                           irregular: Option[Broadcast[Seq[Axis]]])
+      : DataFrame = {
+    val rank = axes.size
+    val keys = axes.indices.map(cellKey)
+    irregular match {
+      case None =>
+        gridTable.select(axes.indices.map { d =>
+            round((col(cols(d)).cast("double") - lit(axes(d).front)) /
+              lit(axes(d).step)).cast("int").as(keys(d))
+          } :+ col(cols(rank)).cast("double").as("_z"): _*)
+          .filter((keys :+ "_z").map(col(_).isNotNull).reduce(_ && _))
+      case Some(bcAxes) =>
+        gridTable.select(cols.map(c => col(c).cast("double")): _*)
+          .flatMap { r =>
+            val ax = bcAxes.value
+            if ((0 to rank).exists(r.isNullAt)) Iterator.empty
+            else {
+              val idx = (0 until rank).map(d =>
+                ax(d).findIndex(r.getDouble(d), bounded = false))
+              if (idx.exists(_ < 0)) Iterator.empty
+              else Iterator.single(Row.fromSeq(idx :+ r.getDouble(rank)))
+            }
+          }(rowEncoder(keys.map(_ -> IntegerType) :+ ("_z" -> DoubleType)))
+    }
+  }
+
+  /** Regular lattice: per axis the probe's fractional cell position, its
+    * right-edge-inclusive bracket origin (findIndexes semantics) and
+    * in-cell fraction, keeping framed rows only. With `halfWindow` > 0
+    * the (2·halfWindow)-node x/y window must also fit in the lattice
+    * (boundary `undef`; origins `_wi`/`_wj`). A periodic x normalizes
+    * into [0, nx) cell units and only rejects a null or NaN; a probe
+    * exactly on its LAST node brackets (nx-2, nx-1) like findIndexes'
+    * delta == 0 collapse, past it (nx-1, wrap-to-0), and its window
+    * origin may be negative (unwrapped frame).
+    */
+  private def regularFrame(withId: DataFrame, probeCols: Seq[String],
+                           axes: Seq[Axis], periodic: Boolean,
+                           halfWindow: Int): DataFrame = {
+    val n = 2 * halfWindow
+    val withFrame = axes.indices.foldLeft(withId) { (df, d) =>
+      val a = axes(d)
+      val f = col(s"_f${Coord(d)}")
+      val raw = (col(probeCols(d)).cast("double") - lit(a.front)) /
+        lit(a.step)
+      val i0 =
+        if (d == 0 && periodic)
+          when(f === lit((a.size - 1).toDouble), lit(a.size - 2))
+            .otherwise(floor(f).cast("int")).cast("int")
+        else least(floor(f).cast("int"), lit(a.size - 2))
+      df.withColumn(s"_f${Coord(d)}",
+          if (d == 0 && periodic) pmod(raw, lit(a.size.toDouble)) else raw)
+        .withColumn(s"_${Index(d)}0", i0)
+        .withColumn(s"_t${Coord(d)}", f - origin(d))
+    }
+    val withWindow =
+      if (halfWindow == 0) withFrame
+      else withFrame
+        .withColumn("_wi", origin(0) - lit(halfWindow - 1))
+        .withColumn("_wj", origin(1) - lit(halfWindow - 1))
+    val inFrame = axes.indices.flatMap { d =>
+      val f = col(s"_f${Coord(d)}")
+      val last = axes(d).size - 1
+      if (d == 0 && periodic) Seq(f < lit(axes(d).size.toDouble))
+      else if (halfWindow == 0 || d > 1) Seq(f >= 0.0, f <= lit(last.toDouble))
+      else {
+        val w = col(if (d == 0) "_wi" else "_wj")
+        Seq(f >= 0.0, f <= lit(last.toDouble), w >= 0,
+          w + (n - 1) <= lit(last))
+      }
+    }
+    withWindow.filter(inFrame.reduce(_ && _))
+  }
+
+  /** Irregular lattice: per axis the bracketing indexes (i0, i1) of one
+    * probe (fields 1..rank of `r`) and its fraction (v − v0)/(v1 − v0)
+    * between the axis values — the broadcast kernels' search and
+    * weight. None when a coordinate is null or cannot be framed.
+    */
+  private def bracket(axes: Seq[Axis], r: Row)
+      : Option[IndexedSeq[(Int, Int, Double)]] = {
+    val b = axes.indices.map { d =>
+      if (r.isNullAt(d + 1)) None
+      else {
+        val v = r.getDouble(d + 1)
+        axes(d).findIndexes(v).map { case (i0, i1) =>
+          val v0 = axes(d)(i0)
+          val v1 = axes(d)(i1)
+          (i0, i1, if (v1 == v0) 0.0 else (v - v0) / (v1 - v0))
+        }
+      }
+    }
+    if (b.forall(_.isDefined)) Some(b.map(_.get)) else None
+  }
+
+  /** Probe id and coordinates, cast to double, for the irregular paths. */
+  private def probeCoords(withId: DataFrame, probeCols: Seq[String])
+      : DataFrame =
+    withId.select(
+      col("_rid") +: probeCols.map(c => col(c).cast("double")): _*)
+
+  /** Geometric path: each framed probe fans out to its 2^d bracketing
+    * corners (x outermost, corner order (0,0)…(1,1)) weighted
+    * w_x·w_y[·w_z[·w_u]], an equi-join on the cell key pulls the corner
+    * values, and a groupBy reassembles sum(w·z). A corner missing from
+    * the join — an absent or null lattice cell — fails the 2^d
+    * completeness check, so the probe yields NaN like a NaN cell of the
+    * dense grid. Returns (_rid, _v).
+    */
+  private def cornerJoin(withId: DataFrame, cells: DataFrame,
+                         probeCols: Seq[String], axes: Seq[Axis],
+                         periodic: Boolean,
+                         irregular: Option[Broadcast[Seq[Axis]]])
+      : DataFrame = {
+    val rank = axes.size
+    val keys = axes.indices.map(cellKey)
+    val nx = axes.head.size
+    def bit(corner: Int, d: Int): Int = (corner >> (rank - 1 - d)) & 1
+    val corners = irregular match {
+      case None =>
+        val structs = (0 until (1 << rank)).map { c =>
+          val idx = axes.indices.map { d =>
+            val k = origin(d) + bit(c, d)
+            // seam wrap of the right corner column
+            (if (d == 0 && periodic) pmod(k, lit(nx)) else k).as(keys(d))
+          }
+          val w = axes.indices.map { d =>
+            if (bit(c, d) == 1) frac(d) else lit(1.0) - frac(d)
+          }.reduceLeft(_ * _)
+          struct(idx :+ w.as("_w"): _*)
+        }
+        regularFrame(withId, probeCols, axes, periodic, 0)
+          .select(col("_rid"), explode(array(structs: _*)).as("_c"))
+          .select(col("_rid") +:
+            (keys :+ "_w").map(k => col(s"_c.$k").as(k)): _*)
+      case Some(bcAxes) =>
+        probeCoords(withId, probeCols).flatMap { r =>
+          bracket(bcAxes.value, r) match {
+            case Some(b) =>
+              Iterator.tabulate(1 << rank) { c =>
+                val idx = axes.indices.map(d =>
+                  if (bit(c, d) == 1) b(d)._2 else b(d)._1)
+                val w = axes.indices.map(d =>
+                  if (bit(c, d) == 1) b(d)._3 else 1 - b(d)._3)
+                  .reduceLeft(_ * _)
+                Row.fromSeq((r.getLong(0) +: idx) :+ w)
+              }
+            case None => Iterator.empty
+          }
+        }(rowEncoder((("_rid" -> LongType) +: keys.map(_ -> IntegerType)) :+
+          ("_w" -> DoubleType)))
+    }
+    corners.join(cells, keys)
+      .groupBy("_rid")
+      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
+      .select(col("_rid"), when(col("_n") === (1 << rank), col("_v"))
+        .otherwise(lit(Double.NaN)).as("_v"))
+  }
+
+  /** Windowed path on the [[WindowedTileJoin]] tile-halo plan: each framed
+    * probe becomes one [[TileProbe]] keyed by its window origin (with its
+    * z/u bracket and combine fractions), the cells fan out to the window
+    * tiles that need them, and each tile evaluates its probes on the
+    * SAME kernels as the broadcast path. A periodic x evaluates at the
+    * UNWRAPPED window coordinate front + fx·step (fx − wi lies in
+    * [halfWindow−1, halfWindow), always inside the unwrapped xs frame);
+    * otherwise the raw x is kept. Returns (_rid, _v).
+    */
+  private def windowJoin(spark: SparkSession, withId: DataFrame,
+                         cells: DataFrame, probeCols: Seq[String],
+                         axes: Seq[Axis], periodic: Boolean,
+                         irregular: Option[Broadcast[Seq[Axis]]],
+                         w: Windowing): DataFrame = {
+    import spark.implicits._
+    val rank = axes.size
+    val hw = w.halfWindow
+    val probes: Dataset[TileProbe] = irregular match {
+      case None =>
+        val xAxis = axes.head
+        val xEval =
+          if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
+          else col(probeCols(0)).cast("double")
+        def orZero(d: Int, c: Column, zero: Any) =
+          if (d < rank) c else lit(zero)
+        regularFrame(withId, probeCols, axes, periodic, hw)
+          .select(col("_rid"), xEval, col(probeCols(1)).cast("double"),
+            orZero(2, frac(2), 0.0), orZero(3, frac(3), 0.0), col("_wi"),
+            col("_wj"), orZero(2, origin(2), 0), orZero(3, origin(3), 0))
+          .as[(Long, Double, Double, Double, Double, Int, Int, Int, Int)]
+          .map { case (rid, x, y, tz, tu, wi, wj, k0, l0) =>
+            WindowedTileJoin.probe(rid, x, y, tz, tu, wi, wj, k0, l0)
+          }
+      case Some(bcAxes) =>
+        val nx = axes(0).size
+        val ny = axes(1).size
+        probeCoords(withId, probeCols).flatMap { r =>
+          bracket(bcAxes.value, r) match {
+            case Some(b) =>
+              val wi = b(0)._1 - (hw - 1)
+              val wj = b(1)._1 - (hw - 1)
+              def plane(d: Int) = if (d < rank) b(d) else (0, 0, 0.0)
+              if (wi >= 0 && wi + (2 * hw - 1) <= nx - 1 &&
+                  wj >= 0 && wj + (2 * hw - 1) <= ny - 1)
+                Iterator.single(WindowedTileJoin.probe(r.getLong(0),
+                  r.getDouble(1), r.getDouble(2), plane(2)._3, plane(3)._3,
+                  wi, wj, plane(2)._1, plane(3)._1))
+              else Iterator.empty
+            case None => Iterator.empty
+          }
+        }
+    }
+    val tileCells = WindowedTileJoin.fanOutCells(spark, cells, hw,
+      axes.map(_.size), periodic)
+    WindowedTileJoin.evaluate(spark, probes, tileCells, rank, w.method,
+      w.zMethod, w.uMethod, hw, axes(0), axes(1), irregular.isEmpty)
   }
 
   /** Grid-as-table bilinear interpolation — the big-grid path (SURVEY
@@ -158,20 +427,19 @@ object GridInterpolator {
     * `pyinterp/backends/xarray.py:582-688`): the lattice is NEVER
     * collected or broadcast. Axis roles are inferred like `GridLoader`;
     * only the O(nx + ny) distinct axis values reach the driver. Each probe
-    * row fans out to its 4 bracketing corners (pure column arithmetic), a
-    * shuffle equi-join on the (ix, iy) corner key pulls the corner values
-    * from the cell table, and a groupBy reassembles sum(w·z) — two keyed
-    * shuffles, no driver state, AQE-skew-safe. Probes outside the axes, or
-    * probes with a masked/missing corner cell, yield NaN — the broadcast
-    * path's semantics.
+    * row fans out to its 4 bracketing corners, a shuffle equi-join on the
+    * (ix, iy) corner key pulls the corner values from the cell table, and
+    * a groupBy reassembles sum(w·z) — two keyed shuffles, no driver
+    * state, AQE-skew-safe. Probes outside the axes, probes with a null
+    * coordinate, and probes with a masked (absent or null) corner cell
+    * yield NaN — the broadcast path's semantics.
     *
     * Accepts regular ascending axes (pure column-arithmetic cell keys),
-    * IRREGULAR ascending axes (the axis value arrays — O(nx + ny), the
-    * d-th root of the lattice — are broadcast and the bracket comes from
-    * the same `Axis.findIndexes` binary search as the broadcast kernel;
-    * the join plan is identical), and a GLOBAL lon-periodic lattice —
-    * the single most common huge grid — declared by `xPeriod`
-    * (e.g. 360.0): the lattice must cover the full circle
+    * IRREGULAR ascending axes (the axis value arrays are broadcast and
+    * the bracket comes from the same `Axis.findIndexes` binary search as
+    * the broadcast kernel; the join plan is identical), and a GLOBAL
+    * lon-periodic lattice — the single most common huge grid — declared
+    * by `xPeriod` (e.g. 360.0): the lattice must cover the full circle
     * (nx·step = period), probe coordinates normalize into the period
     * (`math/axis.hpp:294-333` semantics), the x bracket never rejects,
     * and the seam cell's right corners wrap to lattice column 0
@@ -181,314 +449,41 @@ object GridInterpolator {
                      yCol: String, gridTable: DataFrame,
                      valueCol: String = "",
                      outputCol: String = "value",
-                     xPeriod: Double = 0.0): DataFrame = {
-    val (lonCol, latCol, vCol, xAxis, yAxis) =
-      resolveGrid2dTable(gridTable, valueCol)
-    require(xAxis.size >= 2 && yAxis.size >= 2 &&
-      !xAxis.isPeriodic && !yAxis.isPeriodic &&
-      xAxis.front < xAxis.back && yAxis.front < yAxis.back,
-      "bivariateTable requires ascending axes of >= 2 nodes")
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-
-    val withId = withStableId(probe)
-    val (cells, corners) =
-      if (regular) regularCorners2d(withId, gridTable, xCol, yCol, lonCol,
-        latCol, vCol, xAxis, yAxis, periodic)
-      else irregularCorners2d(spark, withId, gridTable, xCol, yCol, lonCol,
-        latCol, vCol, xAxis, yAxis)
-    // inner corner join + 4-corner completeness check: a masked cell
-    // (absent lattice row) NaNs the probe, like the dense grid's NaN cells
-    val agg = corners.join(cells, Seq("_ci", "_cj"))
-      .groupBy("_rid")
-      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
-      .select(col("_rid"),
-        when(col("_n") === 4, col("_v")).otherwise(lit(Double.NaN)).as("_v"))
-    withId.join(agg, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
-
-  /** Regular-axis corner fan-out of [[bivariateTable]]: affine cell keys
-    * and bracket — pure column arithmetic, fully codegen.
-    */
-  private def regularCorners2d(withId: DataFrame, gridTable: DataFrame,
-                               xCol: String, yCol: String, lonCol: String,
-                               latCol: String, vCol: String,
-                               xAxis: Axis, yAxis: Axis, periodic: Boolean)
-      : (DataFrame, DataFrame) = {
-    val nx = xAxis.size
-    // distributed cell table keyed by integer lattice indices
-    val cells = gridTable.select(
-      round((col(lonCol).cast("double") - lit(xAxis.front)) /
-        lit(xAxis.step)).cast("int").as("_ci"),
-      round((col(latCol).cast("double") - lit(yAxis.front)) /
-        lit(yAxis.step)).cast("int").as("_cj"),
-      col(vCol).cast("double").as("_z"))
-    val fxRaw = (col(xCol).cast("double") - lit(xAxis.front)) / lit(xAxis.step)
-    // periodic: normalize into [0, nx) cell units — every x frames
-    val fx = if (periodic) pmod(fxRaw, lit(nx.toDouble)) else fxRaw
-    val fy = (col(yCol).cast("double") - lit(yAxis.front)) / lit(yAxis.step)
-    // right-edge-inclusive bracket (findIndexes semantics); out-of-range
-    // probes emit no corner rows and surface as NaN after the left join.
-    // Periodic x: a probe exactly on the LAST node brackets (nx-2, nx-1)
-    // like findIndexes' delta==0 collapse; past it, (nx-1, wrap-to-0).
-    val i0 =
-      if (periodic)
-        when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-          .otherwise(floor(col("_fx")).cast("int")).cast("int")
-      else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-    val pAll = withId
-      .withColumn("_fx", fx).withColumn("_fy", fy)
-      .withColumn("_i0", i0)
-      .withColumn("_j0",
-        least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-      .withColumn("_tx", col("_fx") - col("_i0"))
-      .withColumn("_ty", col("_fy") - col("_j0"))
-    val yFrame = col("_fy") >= 0.0 &&
-      col("_fy") <= lit((yAxis.size - 1).toDouble)
-    val p =
-      if (periodic) pAll.filter(yFrame)
-      else pAll.filter(col("_fx") >= 0.0 &&
-        col("_fx") <= lit((nx - 1).toDouble) && yFrame)
-    // seam wrap of the right corner column (periodic only)
-    def ciOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      if (periodic) pmod(c, lit(nx)) else c
-    val corners = p.select(col("_rid"), explode(array(
-        struct(col("_i0").as("_ci"), col("_j0").as("_cj"),
-          ((lit(1.0) - col("_tx")) * (lit(1.0) - col("_ty"))).as("_w")),
-        struct(col("_i0").as("_ci"), (col("_j0") + 1).as("_cj"),
-          ((lit(1.0) - col("_tx")) * col("_ty")).as("_w")),
-        struct(ciOf(col("_i0") + 1).as("_ci"), col("_j0").as("_cj"),
-          (col("_tx") * (lit(1.0) - col("_ty"))).as("_w")),
-        struct(ciOf(col("_i0") + 1).as("_ci"), (col("_j0") + 1).as("_cj"),
-          (col("_tx") * col("_ty")).as("_w")))).as("_c"))
-      .select(col("_rid"), col("_c._ci").as("_ci"), col("_c._cj").as("_cj"),
-        col("_c._w").as("_w"))
-    (cells, corners)
-  }
-
-  /** Irregular-axis corner fan-out of [[bivariateTable]]: the axis value
-    * arrays (O(nx + ny) — the d-th root of the lattice, NOT the lattice)
-    * are broadcast, cell keys come from `Axis.findIndex` and probe
-    * brackets + weights from the SAME `Axis.findIndexes` binary search
-    * and (x − x0)/(x1 − x0) arithmetic as the broadcast geometric kernel
-    * (`container.hpp:383-404` lower_bound semantics) — so table ≡
-    * broadcast on irregular lattices too. The downstream join plan is
-    * byte-identical to the regular path.
-    */
-  private def irregularCorners2d(spark: SparkSession, withId: DataFrame,
-                                 gridTable: DataFrame, xCol: String,
-                                 yCol: String, lonCol: String,
-                                 latCol: String, vCol: String,
-                                 xAxis: Axis, yAxis: Axis)
-      : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val bcX = spark.sparkContext.broadcast(xAxis)
-    val bcY = spark.sparkContext.broadcast(yAxis)
-    val cells = gridTable.select(col(lonCol).cast("double"),
-        col(latCol).cast("double"), col(vCol).cast("double"))
-      .as[(Double, Double, Double)]
-      .flatMap { case (x, y, z) =>
-        val ci = bcX.value.findIndex(x, bounded = false)
-        val cj = bcY.value.findIndex(y, bounded = false)
-        if (ci >= 0 && cj >= 0) Iterator.single((ci, cj, z))
-        else Iterator.empty
-      }.toDF("_ci", "_cj", "_z")
-    val corners = withId.select(col("_rid"),
-        col(xCol).cast("double").as("_x"), col(yCol).cast("double").as("_y"))
-      .as[(Long, Double, Double)]
-      .flatMap { case (rid, x, y) =>
-        val ax = bcX.value
-        val ay = bcY.value
-        (ax.findIndexes(x), ay.findIndexes(y)) match {
-          case (Some((i0, i1)), Some((j0, j1))) =>
-            val x0 = ax(i0); val x1 = ax(i1)
-            val y0 = ay(j0); val y1 = ay(j1)
-            val tx = if (x1 == x0) 0.0 else (x - x0) / (x1 - x0)
-            val ty = if (y1 == y0) 0.0 else (y - y0) / (y1 - y0)
-            Iterator((rid, i0, j0, (1 - tx) * (1 - ty)),
-              (rid, i0, j1, (1 - tx) * ty),
-              (rid, i1, j0, tx * (1 - ty)),
-              (rid, i1, j1, tx * ty))
-          case _ => Iterator.empty
-        }
-      }.toDF("_rid", "_ci", "_cj", "_w")
-    (cells, corners)
-  }
+                     xPeriod: Double = 0.0): DataFrame =
+    tableInterpolate(spark, probe, Seq(xCol, yCol), gridTable, "", "",
+      valueCol, outputCol, xPeriod, "bivariateTable", None)
 
   /** 3-D grid-as-table trilinear interpolation: [[bivariateTable]]'s
     * corner join extended to the 8 bracketing lattice corners (bilinear in
     * (x, y) × linear in z — the geometric trivariate semantics,
-    * `pybind/geometric/trivariate.hpp:46-120`). Same scale contract: the
-    * lattice never leaves the cluster.
+    * `pybind/geometric/trivariate.hpp:46-120`). Same scale contract,
+    * irregular axes and `xPeriod` seam as [[bivariateTable]]; z is
+    * `zColName`, else the time role.
     */
-  /** Axis-role + value-column resolution for the 3-D grid-as-table paths
-    * (shared by [[trivariateTable]] and [[trivariateTableWindowed]]).
-    */
-  private def resolveGrid3dTable(gridTable: DataFrame, zColName: String,
-                                 valueCol: String, caller: String)
-      : (String, String, String, String, Axis, Axis, Axis) = {
-    import graft.sources.GridLoader
-    val roles = GridLoader.identifyAxes(gridTable)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val zName =
-      if (zColName.nonEmpty) zColName
-      else roles.time.getOrElse(
-        throw new IllegalArgumentException("no time/z axis identified"))
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else gridTable.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol || n == zName).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val axes = GridLoader.axesOf(gridTable, Seq(lonCol, latCol, zName))
-    require(axes.forall(a => a.size >= 2 && !a.isPeriodic &&
-      a.front < a.back),
-      s"$caller requires ascending non-periodic axes of >= 2 nodes")
-    (lonCol, latCol, zName, vCol, axes(0), axes(1), axes(2))
-  }
-
   def trivariateTable(spark: SparkSession, probe: DataFrame, xCol: String,
                       yCol: String, zCol: String, gridTable: DataFrame,
                       zColName: String = "", valueCol: String = "",
                       outputCol: String = "value",
-                      xPeriod: Double = 0.0): DataFrame = {
-    val (lonCol, latCol, zName, vCol, xAxis, yAxis, zAxis) =
-      resolveGrid3dTable(gridTable, zColName, valueCol, "trivariateTable")
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular
-    // periodic longitude: [[bivariateTable]]'s seam mechanics — pmod
-    // probe normalization, x frame never rejects, right corners wrap
-    val periodic = xPeriod != 0.0
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
+                      xPeriod: Double = 0.0): DataFrame =
+    tableInterpolate(spark, probe, Seq(xCol, yCol, zCol), gridTable,
+      zColName, "", valueCol, outputCol, xPeriod, "trivariateTable", None)
 
-    val withId = withStableId(probe)
-    val (cells, corners) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: graft.core.Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx.toDouble))
-        else frac(xCol, xAxis)
-      val i0 =
-        if (periodic)
-          when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-      val pAll = withId
-        .withColumn("_fx", fx)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_i0", i0)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_tx", col("_fx") - col("_i0"))
-        .withColumn("_ty", col("_fy") - col("_j0"))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-      val yzFrame = col("_fy") >= 0.0 &&
-        col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble)
-      val p =
-        if (periodic) pAll.filter(yzFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx - 1).toDouble) && yzFrame)
-      // seam wrap of the right corner column (periodic only)
-      def ciOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        if (periodic) pmod(c, lit(nx)) else c
-      val cornerStructs =
-        for (di <- 0 to 1; dj <- 0 to 1; dk <- 0 to 1) yield {
-          def w(t: org.apache.spark.sql.Column, d: Int) =
-            if (d == 1) t else lit(1.0) - t
-          struct(ciOf(col("_i0") + di).as("_ci"),
-            (col("_j0") + dj).as("_cj"),
-            (col("_k0") + dk).as("_ck"),
-            (w(col("_tx"), di) * w(col("_ty"), dj) * w(col("_tz"), dk))
-              .as("_w"))
-        }
-      val cornersR = p.select(col("_rid"),
-          explode(array(cornerStructs: _*)).as("_c"))
-        .select(col("_rid"), col("_c._ci").as("_ci"),
-          col("_c._cj").as("_cj"), col("_c._ck").as("_ck"),
-          col("_c._w").as("_w"))
-      (cellsR, cornersR)
-    } else {
-      // IRREGULAR ascending axes: broadcast axis arrays + the broadcast
-      // kernel's findIndexes brackets — the 3-D analog of the 2-D
-      // irregular corner fan-out; the join plan is unchanged
-      import spark.implicits._
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0)
-            Iterator.single((ci, cj, ck, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_z")
-      val cornersI = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"))
-        .as[(Long, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z)) match {
-            case (Some((i0, i1)), Some((j0, j1)), Some((k0, k1))) =>
-              val ax = bcX.value; val ay = bcY.value; val az = bcZ.value
-              def tOf(v: Double, lo: Double, hi: Double) =
-                if (hi == lo) 0.0 else (v - lo) / (hi - lo)
-              val tx = tOf(x, ax(i0), ax(i1))
-              val ty = tOf(y, ay(j0), ay(j1))
-              val tz = tOf(z, az(k0), az(k1))
-              for {
-                (ci, wx) <- Iterator((i0, 1 - tx), (i1, tx))
-                (cj, wy) <- Iterator((j0, 1 - ty), (j1, ty))
-                (ck, wz) <- Iterator((k0, 1 - tz), (k1, tz))
-              } yield (rid, ci, cj, ck, wx * wy * wz)
-            case _ => Iterator.empty
-          }
-        }.toDF("_rid", "_ci", "_cj", "_ck", "_w")
-      (cellsI, cornersI)
-    }
-    val agg = corners.join(cells, Seq("_ci", "_cj", "_ck"))
-      .groupBy("_rid")
-      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
-      .select(col("_rid"),
-        when(col("_n") === 8, col("_v")).otherwise(lit(Double.NaN)).as("_v"))
-    withId.join(agg, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+  /** 4-D grid-as-table QUADRILINEAR interpolation: [[trivariateTable]]'s
+    * corner join extended to the 16 bracketing lattice corners (the
+    * geometric quadrivariate semantics,
+    * `pybind/geometric/quadrivariate.hpp`). The 4th axis column must be
+    * named by `uColName`. The lattice never leaves the cluster.
+    */
+  def quadrivariateTable(spark: SparkSession, probe: DataFrame,
+                         xCol: String, yCol: String, zCol: String,
+                         uCol: String, gridTable: DataFrame,
+                         zColName: String = "", uColName: String = "",
+                         valueCol: String = "",
+                         outputCol: String = "value",
+                         xPeriod: Double = 0.0): DataFrame =
+    tableInterpolate(spark, probe, Seq(xCol, yCol, zCol, uCol), gridTable,
+      zColName, uColName, valueCol, outputCol, xPeriod,
+      "quadrivariateTable", None)
 
   /** Grid-as-table WINDOWED interpolation (r3 VERDICT item 1): bicubic /
     * spline_bilinear / the separable univariate family over a lattice too
@@ -507,8 +502,9 @@ object GridInterpolator {
     * path ([[graft.core.Bicubic]] / [[graft.core.Univariate1D]] /
     * cspline) evaluate origin-sorted probes with a last-window fit cache
     * — so table ≡ broadcast to the last bit. Probes whose window cannot
-    * be framed (boundary `undef` semantics) or with a missing/masked
-    * stencil cell yield NaN, matching the broadcast kernel.
+    * be framed (boundary `undef` semantics), with a null coordinate, or
+    * with a missing/masked stencil cell yield NaN, matching the
+    * broadcast kernel.
     *
     * Requires ascending axes of at least 2·halfWindow nodes — regular
     * (affine cell keys, fully codegen) or IRREGULAR (broadcast axis
@@ -530,145 +526,10 @@ object GridInterpolator {
                              halfWindow: Int = 3,
                              valueCol: String = "",
                              outputCol: String = "value",
-                             xPeriod: Double = 0.0): DataFrame = {
-    require(!geometricMethods.contains(method),
-      s"method $method is geometric — use bivariateTable")
-    require(halfWindow >= 1, "halfWindow must be >= 1")
-    val n = 2 * halfWindow
-    val (lonCol, latCol, vCol, xAxis, yAxis) =
-      resolveGrid2dTable(gridTable, valueCol)
-    require(xAxis.size >= n && yAxis.size >= n &&
-      !xAxis.isPeriodic && !yAxis.isPeriodic &&
-      xAxis.front < xAxis.back && yAxis.front < yAxis.back,
-      "bivariateTableWindowed requires ascending axes of >= " +
-        "2*halfWindow nodes")
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-
-    val withId = withStableId(probe)
-    import spark.implicits._
-    val tXY = WindowedTileJoin.DefaultTileXY
-    val hw = halfWindow
-
-    val (cells, probesT) =
-      if (regular) {
-        val cellsR = gridTable.select(
-          round((col(lonCol).cast("double") - lit(xAxis.front)) /
-            lit(xAxis.step)).cast("int").as("_ci"),
-          round((col(latCol).cast("double") - lit(yAxis.front)) /
-            lit(yAxis.step)).cast("int").as("_cj"),
-          col(vCol).cast("double").as("_z"))
-        val fxRaw =
-          (col(xCol).cast("double") - lit(xAxis.front)) / lit(xAxis.step)
-        val fx = if (periodic) pmod(fxRaw, lit(nx.toDouble)) else fxRaw
-        val fy =
-          (col(yCol).cast("double") - lit(yAxis.front)) / lit(yAxis.step)
-        // bracket cell (right-edge-inclusive, findIndexes semantics) ->
-        // window origin; the frame filter mirrors Axis.window with
-        // boundary `undef`: i0 in [halfWindow-1, size-1-halfWindow],
-        // probes outside surface as NaN after the final left join.
-        // Periodic x never rejects and its window origin may be
-        // negative (unwrapped frame).
-        val i0 =
-          if (periodic)
-            when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-              .otherwise(floor(col("_fx")).cast("int")).cast("int")
-          else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-        val pAll = withId
-          .withColumn("_fx", fx).withColumn("_fy", fy)
-          .withColumn("_i0", i0)
-          .withColumn("_j0",
-            least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-          .withColumn("_wi", col("_i0") - lit(halfWindow - 1))
-          .withColumn("_wj", col("_j0") - lit(halfWindow - 1))
-        val yFrame = col("_fy") >= 0.0 &&
-          col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-          col("_wj") >= 0 && col("_wj") + (n - 1) <= lit(yAxis.size - 1)
-        val p =
-          if (periodic) pAll.filter(yFrame)
-          else pAll.filter(col("_fx") >= 0.0 &&
-            col("_fx") <= lit((nx - 1).toDouble) &&
-            col("_wi") >= 0 && col("_wi") + (n - 1) <= lit(nx - 1) &&
-            yFrame)
-        // periodic probes evaluate at the UNWRAPPED window coordinate
-        // front + fx·step (fx - wi ∈ [halfWindow-1, halfWindow), always
-        // inside the unwrapped xs frame); non-periodic keeps the raw x
-        // so the established paths stay bit-identical
-        val xEval =
-          if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
-          else col(xCol).cast("double")
-        val pT = p.select(col("_rid"), xEval.as("_x"),
-            col(yCol).cast("double").as("_y"), col("_wi"), col("_wj"))
-          .as[(Long, Double, Double, Int, Int)]
-          .map { case (rid, x, y, wi, wj) =>
-            TileProbe(Math.floorDiv(wi, tXY), Math.floorDiv(wj, tXY), 0, 0,
-              rid, x, y, 0.0, 0.0, wi, wj, 0, 0)
-          }
-        (cellsR, pT)
-      } else {
-        // IRREGULAR ascending axes: broadcast the axis value arrays
-        // (O(nx + ny)), key cells via the nearest-index search and
-        // bracket probes via the SAME findIndexes binary search as the
-        // broadcast kernel; the window origin / undef-frame rule is
-        // identical to the affine branch. The tile-halo fan-out and
-        // evaluation are index-based and shared — only the window node
-        // coordinates differ (axis values instead of front + i·step).
-        val bcX = spark.sparkContext.broadcast(xAxis)
-        val bcY = spark.sparkContext.broadcast(yAxis)
-        val nyL = yAxis.size
-        val nxL = nx
-        val cellsI = gridTable.select(col(lonCol).cast("double"),
-            col(latCol).cast("double"), col(vCol).cast("double"))
-          .as[(Double, Double, Double)]
-          .flatMap { case (x, y, z) =>
-            val ci = bcX.value.findIndex(x, bounded = false)
-            val cj = bcY.value.findIndex(y, bounded = false)
-            if (ci >= 0 && cj >= 0) Iterator.single((ci, cj, z))
-            else Iterator.empty
-          }.toDF("_ci", "_cj", "_z")
-        val pT = withId.select(col("_rid"),
-            col(xCol).cast("double").as("_x"),
-            col(yCol).cast("double").as("_y"))
-          .as[(Long, Double, Double)]
-          .flatMap { case (rid, x, y) =>
-            (bcX.value.findIndexes(x), bcY.value.findIndexes(y)) match {
-              case (Some((i0, _)), Some((j0, _))) =>
-                val wi = i0 - (hw - 1)
-                val wj = j0 - (hw - 1)
-                if (wi >= 0 && wi + (2 * hw - 1) <= nxL - 1 &&
-                    wj >= 0 && wj + (2 * hw - 1) <= nyL - 1)
-                  Iterator.single(TileProbe(Math.floorDiv(wi, tXY),
-                    Math.floorDiv(wj, tXY), 0, 0, rid, x, y, 0.0, 0.0,
-                    wi, wj, 0, 0))
-                else Iterator.empty
-              case _ => Iterator.empty
-            }
-          }
-        (cellsI, pT)
-      }
-    val cellsT = WindowedTileJoin.fanOutCells(spark, cells, arity = 2,
-      n = n, halfWindow = halfWindow, tileXY = tXY,
-      tilePlane = WindowedTileJoin.DefaultTilePlane,
-      nx = nx, ny = yAxis.size, nz = 0, nu = 0, periodicX = periodic)
-    val vals = WindowedTileJoin.evaluate(spark, probesT, cellsT,
-      arity = 2, method = method, zMethod = "", uMethod = "", n = n,
-      tileXY = tXY, tilePlane = WindowedTileJoin.DefaultTilePlane,
-      xFront = xAxis.front, xStep = xAxis.step,
-      yFront = yAxis.front, yStep = yAxis.step,
-      xVals = if (regular) null else xAxis.values,
-      yVals = if (regular) null else yAxis.values)
-
-    withId.join(vals, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+                             xPeriod: Double = 0.0): DataFrame =
+    tableInterpolate(spark, probe, Seq(xCol, yCol), gridTable, "", "",
+      valueCol, outputCol, xPeriod, "bivariateTableWindowed",
+      Some(Windowing(method, "", "", halfWindow)))
 
   /** 3-D grid-as-table WINDOWED interpolation: the reference's flagship
     * trivariate semantics — windowed bicubic/spline in the (x, y) plane
@@ -695,348 +556,10 @@ object GridInterpolator {
                               halfWindow: Int = 3,
                               zColName: String = "", valueCol: String = "",
                               outputCol: String = "value",
-                              xPeriod: Double = 0.0): DataFrame = {
-    require(!geometricMethods.contains(method),
-      s"method $method is geometric — use trivariateTable")
-    require(halfWindow >= 1, "halfWindow must be >= 1")
-    val n = 2 * halfWindow
-    val (lonCol, latCol, zName, vCol, xAxis, yAxis, zAxis) =
-      resolveGrid3dTable(gridTable, zColName, valueCol,
-        "trivariateTableWindowed")
-    require(xAxis.size >= n && yAxis.size >= n,
-      "trivariateTableWindowed requires >= 2*halfWindow nodes per plane " +
-        "axis")
-    // periodic longitude: same contract and mechanics as the 2-D path —
-    // full-circle lattice, probe normalization, seam-wrapped stencil
-    // columns through the tile-halo fan-out, unwrapped evaluation frame
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-
-    val withId = withStableId(probe)
-    import spark.implicits._
-    val tXY = WindowedTileJoin.DefaultTileXY
-    val tPl = WindowedTileJoin.DefaultTilePlane
-    val hw = halfWindow
-
-    val (cells, probesT) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx.toDouble))
-        else frac(xCol, xAxis)
-      val i0 =
-        if (periodic)
-          when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-      val pAll = withId
-        .withColumn("_fx", fx)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_i0", i0)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_wi", col("_i0") - lit(halfWindow - 1))
-        .withColumn("_wj", col("_j0") - lit(halfWindow - 1))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-      val yzFrame =
-        col("_fy") >= 0.0 && col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble) &&
-        col("_wj") >= 0 && col("_wj") + (n - 1) <= lit(yAxis.size - 1)
-      val p =
-        if (periodic) pAll.filter(yzFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx - 1).toDouble) &&
-          col("_wi") >= 0 && col("_wi") + (n - 1) <= lit(nx - 1) && yzFrame)
-      val xEval =
-        if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
-        else col(xCol).cast("double")
-      val pT = p.select(col("_rid"), xEval.as("_x"),
-          col(yCol).cast("double").as("_y"), col("_tz"), col("_wi"),
-          col("_wj"), col("_k0"))
-        .as[(Long, Double, Double, Double, Int, Int, Int)]
-        .map { case (rid, x, y, tz, wi, wj, k0) =>
-          TileProbe(Math.floorDiv(wi, tXY), Math.floorDiv(wj, tXY),
-            Math.floorDiv(k0, tPl), 0, rid, x, y, tz, 0.0, wi, wj, k0, 0)
-        }
-      (cellsR, pT)
-    } else {
-      // IRREGULAR ascending axes (pressure levels, non-uniform time):
-      // broadcast the axis value arrays (O(nx + ny + nz) — the cube
-      // root of the lattice), key cells via the nearest-index search and
-      // bracket probes via the SAME findIndexes binary search as the
-      // broadcast kernel; tz = (z − z0)/(z1 − z0) from the axis VALUES,
-      // the broadcast trivariate's exact combine weight. The tile-halo
-      // fan-out and evaluation are index-based and shared — window
-      // x/y node coordinates come from the broadcast value arrays.
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val nxL = nx
-      val nyL = yAxis.size
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0)
-            Iterator.single((ci, cj, ck, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_z")
-      val pT = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"))
-        .as[(Long, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z)) match {
-            case (Some((i0, _)), Some((j0, _)), Some((k0, k1))) =>
-              val wi = i0 - (hw - 1)
-              val wj = j0 - (hw - 1)
-              if (wi >= 0 && wi + (2 * hw - 1) <= nxL - 1 &&
-                  wj >= 0 && wj + (2 * hw - 1) <= nyL - 1) {
-                val az = bcZ.value
-                val z0 = az(k0); val z1 = az(k1)
-                val tz = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
-                Iterator.single(TileProbe(Math.floorDiv(wi, tXY),
-                  Math.floorDiv(wj, tXY), Math.floorDiv(k0, tPl), 0,
-                  rid, x, y, tz, 0.0, wi, wj, k0, 0))
-              } else Iterator.empty
-            case _ => Iterator.empty
-          }
-        }
-      (cellsI, pT)
-    }
-    val cellsT = WindowedTileJoin.fanOutCells(spark, cells, arity = 3,
-      n = n, halfWindow = halfWindow, tileXY = tXY, tilePlane = tPl,
-      nx = xAxis.size, ny = yAxis.size, nz = zAxis.size, nu = 0,
-      periodicX = periodic)
-    val vals = WindowedTileJoin.evaluate(spark, probesT, cellsT,
-      arity = 3, method = method, zMethod = zMethod, uMethod = "", n = n,
-      tileXY = tXY, tilePlane = tPl,
-      xFront = xAxis.front, xStep = xAxis.step,
-      yFront = yAxis.front, yStep = yAxis.step,
-      xVals = if (regular) null else xAxis.values,
-      yVals = if (regular) null else yAxis.values)
-
-    withId.join(vals, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
-
-  /** Axis-role + value-column resolution for the 4-D grid-as-table paths:
-    * lon/lat from CF/name heuristics, z from `zColName` (or the time
-    * role), u from `uColName` (the 4th axis has no universal naming
-    * convention — callers must name it), value = the remaining column.
-    */
-  private def resolveGrid4dTable(gridTable: DataFrame, zColName: String,
-                                 uColName: String, valueCol: String,
-                                 caller: String)
-      : (String, String, String, String, String, Axis, Axis, Axis, Axis) = {
-    import graft.sources.GridLoader
-    val roles = GridLoader.identifyAxes(gridTable)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val zName =
-      if (zColName.nonEmpty) zColName
-      else roles.time.getOrElse(
-        throw new IllegalArgumentException("no time/z axis identified"))
-    require(uColName.nonEmpty,
-      s"$caller: name the 4th axis column via uColName")
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else gridTable.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol || n == zName ||
-          n == uColName).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val axes = GridLoader.axesOf(gridTable,
-      Seq(lonCol, latCol, zName, uColName))
-    require(axes.forall(a => a.size >= 2 && !a.isPeriodic &&
-      a.front < a.back),
-      s"$caller requires ascending non-periodic axes of >= 2 nodes")
-    (lonCol, latCol, zName, uColName, vCol, axes(0), axes(1), axes(2),
-      axes(3))
-  }
-
-  /** 4-D grid-as-table QUADRILINEAR interpolation: [[trivariateTable]]'s
-    * corner join extended to the 16 bracketing lattice corners (the
-    * geometric quadrivariate semantics,
-    * `pybind/geometric/quadrivariate.hpp`). The lattice never leaves the
-    * cluster.
-    */
-  def quadrivariateTable(spark: SparkSession, probe: DataFrame,
-                         xCol: String, yCol: String, zCol: String,
-                         uCol: String, gridTable: DataFrame,
-                         zColName: String = "", uColName: String = "",
-                         valueCol: String = "",
-                         outputCol: String = "value",
-                         xPeriod: Double = 0.0): DataFrame = {
-    val (lonCol, latCol, zName, uName, vCol, xAxis, yAxis, zAxis, uAxis) =
-      resolveGrid4dTable(gridTable, zColName, uColName, valueCol,
-        "quadrivariateTable")
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular &&
-      uAxis.isRegular
-    // periodic longitude: [[bivariateTable]]'s seam mechanics — pmod
-    // probe normalization, x frame never rejects, right corners wrap
-    val periodic = xPeriod != 0.0
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx = xAxis.size
-    if (periodic) require(
-      math.abs(nx * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx * xAxis.step}")
-    val withId = withStableId(probe)
-    val (cells, corners) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        round((col(uName).cast("double") - lit(uAxis.front)) /
-          lit(uAxis.step)).cast("int").as("_cl"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx.toDouble))
-        else frac(xCol, xAxis)
-      val i0 =
-        if (periodic)
-          when(col("_fx") === lit((nx - 1).toDouble), lit(nx - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx - 2))
-      val pAll = withId
-        .withColumn("_fx", fx)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_fu", frac(uCol, uAxis))
-        .withColumn("_i0", i0)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_l0",
-          least(floor(col("_fu")).cast("int"), lit(uAxis.size - 2)))
-        .withColumn("_tx", col("_fx") - col("_i0"))
-        .withColumn("_ty", col("_fy") - col("_j0"))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-        .withColumn("_tu", col("_fu") - col("_l0"))
-      val yzuFrame =
-        col("_fy") >= 0.0 && col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble) &&
-        col("_fu") >= 0.0 && col("_fu") <= lit((uAxis.size - 1).toDouble)
-      val p =
-        if (periodic) pAll.filter(yzuFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx - 1).toDouble) && yzuFrame)
-      def ciOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        if (periodic) pmod(c, lit(nx)) else c
-      val cornerStructs =
-        for (di <- 0 to 1; dj <- 0 to 1; dk <- 0 to 1; dl <- 0 to 1)
-        yield {
-          def w(t: org.apache.spark.sql.Column, d: Int) =
-            if (d == 1) t else lit(1.0) - t
-          struct(ciOf(col("_i0") + di).as("_ci"),
-            (col("_j0") + dj).as("_cj"),
-            (col("_k0") + dk).as("_ck"), (col("_l0") + dl).as("_cl"),
-            (w(col("_tx"), di) * w(col("_ty"), dj) * w(col("_tz"), dk) *
-              w(col("_tu"), dl)).as("_w"))
-        }
-      val cornersR = p.select(col("_rid"),
-          explode(array(cornerStructs: _*)).as("_c"))
-        .select(col("_rid"), col("_c._ci").as("_ci"),
-          col("_c._cj").as("_cj"), col("_c._ck").as("_ck"),
-          col("_c._cl").as("_cl"), col("_c._w").as("_w"))
-      (cellsR, cornersR)
-    } else {
-      // IRREGULAR ascending axes: broadcast axis arrays + the broadcast
-      // kernel's findIndexes brackets, extended to the 16 corners — the
-      // 4-D analog of the 2-D/3-D irregular corner fan-outs; the join
-      // plan is unchanged
-      import spark.implicits._
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val bcU = spark.sparkContext.broadcast(uAxis)
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(uName).cast("double"), col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, u, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          val cl = bcU.value.findIndex(u, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0 && cl >= 0)
-            Iterator.single((ci, cj, ck, cl, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_cl", "_z")
-      val cornersI = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"),
-          col(uCol).cast("double").as("_uq"))
-        .as[(Long, Double, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z, u) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z), bcU.value.findIndexes(u)) match {
-            case (Some((i0, i1)), Some((j0, j1)), Some((k0, k1)),
-                Some((l0, l1))) =>
-              val ax = bcX.value; val ay = bcY.value
-              val az = bcZ.value; val au = bcU.value
-              def tOf(v: Double, lo: Double, hi: Double) =
-                if (hi == lo) 0.0 else (v - lo) / (hi - lo)
-              val tx = tOf(x, ax(i0), ax(i1))
-              val ty = tOf(y, ay(j0), ay(j1))
-              val tz = tOf(z, az(k0), az(k1))
-              val tu = tOf(u, au(l0), au(l1))
-              for {
-                (ci, wx) <- Iterator((i0, 1 - tx), (i1, tx))
-                (cj, wy) <- Iterator((j0, 1 - ty), (j1, ty))
-                (ck, wz) <- Iterator((k0, 1 - tz), (k1, tz))
-                (cl, wu) <- Iterator((l0, 1 - tu), (l1, tu))
-              } yield (rid, ci, cj, ck, cl, wx * wy * wz * wu)
-            case _ => Iterator.empty
-          }
-        }.toDF("_rid", "_ci", "_cj", "_ck", "_cl", "_w")
-      (cellsI, cornersI)
-    }
-    val agg = corners.join(cells, Seq("_ci", "_cj", "_ck", "_cl"))
-      .groupBy("_rid")
-      .agg(sum(col("_w") * col("_z")).as("_v"), count(lit(1)).as("_n"))
-      .select(col("_rid"),
-        when(col("_n") === 16, col("_v")).otherwise(lit(Double.NaN))
-          .as("_v"))
-    withId.join(agg, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+                              xPeriod: Double = 0.0): DataFrame =
+    tableInterpolate(spark, probe, Seq(xCol, yCol, zCol), gridTable,
+      zColName, "", valueCol, outputCol, xPeriod, "trivariateTableWindowed",
+      Some(Windowing(method, zMethod, "", halfWindow)))
 
   /** 4-D grid-as-table WINDOWED interpolation: windowed bicubic/spline in
     * the (x, y) plane on the FOUR (z, u)-bracketing planes, then bilinear
@@ -1061,163 +584,11 @@ object GridInterpolator {
                                  zColName: String = "", uColName: String = "",
                                  valueCol: String = "",
                                  outputCol: String = "value",
-                                 xPeriod: Double = 0.0): DataFrame = {
-    require(!geometricMethods.contains(method),
-      s"method $method is geometric — use quadrivariateTable")
-    require(halfWindow >= 1, "halfWindow must be >= 1")
-    val n = 2 * halfWindow
-    val (lonCol, latCol, zName, uName, vCol, xAxis, yAxis, zAxis, uAxis) =
-      resolveGrid4dTable(gridTable, zColName, uColName, valueCol,
-        "quadrivariateTableWindowed")
-    require(xAxis.size >= n && yAxis.size >= n,
-      "quadrivariateTableWindowed requires >= 2*halfWindow nodes per " +
-        "plane axis")
-    val periodic = xPeriod != 0.0
-    val regular = xAxis.isRegular && yAxis.isRegular && zAxis.isRegular &&
-      uAxis.isRegular
-    require(regular || !periodic,
-      "xPeriod requires a regular full-circle lattice")
-    val nx4 = xAxis.size
-    if (periodic) require(
-      math.abs(nx4 * xAxis.step - xPeriod) <= 1e-6 * xAxis.step,
-      s"xPeriod=$xPeriod requires a full-circle lattice: nx*step = " +
-        s"${nx4 * xAxis.step}")
-    val withId = withStableId(probe)
-    import spark.implicits._
-    val tXY = WindowedTileJoin.DefaultTileXY
-    val tPl = WindowedTileJoin.DefaultTilePlane
-    val hw = halfWindow
-
-    val (cells, probesT) = if (regular) {
-      val cellsR = gridTable.select(
-        round((col(lonCol).cast("double") - lit(xAxis.front)) /
-          lit(xAxis.step)).cast("int").as("_ci"),
-        round((col(latCol).cast("double") - lit(yAxis.front)) /
-          lit(yAxis.step)).cast("int").as("_cj"),
-        round((col(zName).cast("double") - lit(zAxis.front)) /
-          lit(zAxis.step)).cast("int").as("_ck"),
-        round((col(uName).cast("double") - lit(uAxis.front)) /
-          lit(uAxis.step)).cast("int").as("_cl"),
-        col(vCol).cast("double").as("_z"))
-      def frac(c: String, a: Axis) =
-        (col(c).cast("double") - lit(a.front)) / lit(a.step)
-      val fx4 =
-        if (periodic) pmod(frac(xCol, xAxis), lit(nx4.toDouble))
-        else frac(xCol, xAxis)
-      val i04 =
-        if (periodic)
-          when(col("_fx") === lit((nx4 - 1).toDouble), lit(nx4 - 2))
-            .otherwise(floor(col("_fx")).cast("int")).cast("int")
-        else least(floor(col("_fx")).cast("int"), lit(nx4 - 2))
-      val pAll = withId
-        .withColumn("_fx", fx4)
-        .withColumn("_fy", frac(yCol, yAxis))
-        .withColumn("_fz", frac(zCol, zAxis))
-        .withColumn("_fu", frac(uCol, uAxis))
-        .withColumn("_i0", i04)
-        .withColumn("_j0",
-          least(floor(col("_fy")).cast("int"), lit(yAxis.size - 2)))
-        .withColumn("_k0",
-          least(floor(col("_fz")).cast("int"), lit(zAxis.size - 2)))
-        .withColumn("_l0",
-          least(floor(col("_fu")).cast("int"), lit(uAxis.size - 2)))
-        .withColumn("_wi", col("_i0") - lit(halfWindow - 1))
-        .withColumn("_wj", col("_j0") - lit(halfWindow - 1))
-        .withColumn("_tz", col("_fz") - col("_k0"))
-        .withColumn("_tu", col("_fu") - col("_l0"))
-      val yzuFrame =
-        col("_fy") >= 0.0 && col("_fy") <= lit((yAxis.size - 1).toDouble) &&
-        col("_fz") >= 0.0 && col("_fz") <= lit((zAxis.size - 1).toDouble) &&
-        col("_fu") >= 0.0 && col("_fu") <= lit((uAxis.size - 1).toDouble) &&
-        col("_wj") >= 0 && col("_wj") + (n - 1) <= lit(yAxis.size - 1)
-      val p =
-        if (periodic) pAll.filter(yzuFrame)
-        else pAll.filter(col("_fx") >= 0.0 &&
-          col("_fx") <= lit((nx4 - 1).toDouble) &&
-          col("_wi") >= 0 && col("_wi") + (n - 1) <= lit(nx4 - 1) &&
-          yzuFrame)
-      val xEval4 =
-        if (periodic) lit(xAxis.front) + col("_fx") * lit(xAxis.step)
-        else col(xCol).cast("double")
-      val pT = p.select(col("_rid"), xEval4.as("_x"),
-          col(yCol).cast("double").as("_y"), col("_tz"), col("_tu"),
-          col("_wi"), col("_wj"), col("_k0"), col("_l0"))
-        .as[(Long, Double, Double, Double, Double, Int, Int, Int, Int)]
-        .map { case (rid, x, y, tz, tu, wi, wj, k0, l0) =>
-          TileProbe(Math.floorDiv(wi, tXY), Math.floorDiv(wj, tXY),
-            Math.floorDiv(k0, tPl), Math.floorDiv(l0, tPl),
-            rid, x, y, tz, tu, wi, wj, k0, l0)
-        }
-      (cellsR, pT)
-    } else {
-      // IRREGULAR ascending axes: the 3-D irregular branch extended
-      // with the u bracket — broadcast axis value arrays, findIndexes
-      // brackets, tz/tu = (v − v0)/(v1 − v0) from the axis VALUES (the
-      // broadcast quadrivariate's exact combine weights)
-      val bcX = spark.sparkContext.broadcast(xAxis)
-      val bcY = spark.sparkContext.broadcast(yAxis)
-      val bcZ = spark.sparkContext.broadcast(zAxis)
-      val bcU = spark.sparkContext.broadcast(uAxis)
-      val nxL = nx4
-      val nyL = yAxis.size
-      val cellsI = gridTable.select(col(lonCol).cast("double"),
-          col(latCol).cast("double"), col(zName).cast("double"),
-          col(uName).cast("double"), col(vCol).cast("double"))
-        .as[(Double, Double, Double, Double, Double)]
-        .flatMap { case (x, y, z, u, v) =>
-          val ci = bcX.value.findIndex(x, bounded = false)
-          val cj = bcY.value.findIndex(y, bounded = false)
-          val ck = bcZ.value.findIndex(z, bounded = false)
-          val cl = bcU.value.findIndex(u, bounded = false)
-          if (ci >= 0 && cj >= 0 && ck >= 0 && cl >= 0)
-            Iterator.single((ci, cj, ck, cl, v))
-          else Iterator.empty
-        }.toDF("_ci", "_cj", "_ck", "_cl", "_z")
-      val pT = withId.select(col("_rid"),
-          col(xCol).cast("double").as("_x"),
-          col(yCol).cast("double").as("_y"),
-          col(zCol).cast("double").as("_zq"),
-          col(uCol).cast("double").as("_uq"))
-        .as[(Long, Double, Double, Double, Double)]
-        .flatMap { case (rid, x, y, z, u) =>
-          (bcX.value.findIndexes(x), bcY.value.findIndexes(y),
-            bcZ.value.findIndexes(z), bcU.value.findIndexes(u)) match {
-            case (Some((i0, _)), Some((j0, _)), Some((k0, k1)),
-                Some((l0, l1))) =>
-              val wi = i0 - (hw - 1)
-              val wj = j0 - (hw - 1)
-              if (wi >= 0 && wi + (2 * hw - 1) <= nxL - 1 &&
-                  wj >= 0 && wj + (2 * hw - 1) <= nyL - 1) {
-                val az = bcZ.value; val au = bcU.value
-                val z0 = az(k0); val z1 = az(k1)
-                val u0 = au(l0); val u1 = au(l1)
-                val tz = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
-                val tu = if (u1 == u0) 0.0 else (u - u0) / (u1 - u0)
-                Iterator.single(TileProbe(Math.floorDiv(wi, tXY),
-                  Math.floorDiv(wj, tXY), Math.floorDiv(k0, tPl),
-                  Math.floorDiv(l0, tPl), rid, x, y, tz, tu, wi, wj,
-                  k0, l0))
-              } else Iterator.empty
-            case _ => Iterator.empty
-          }
-        }
-      (cellsI, pT)
-    }
-    val cellsT = WindowedTileJoin.fanOutCells(spark, cells, arity = 4,
-      n = n, halfWindow = halfWindow, tileXY = tXY, tilePlane = tPl,
-      nx = xAxis.size, ny = yAxis.size, nz = zAxis.size, nu = uAxis.size,
-      periodicX = periodic)
-    val vals = WindowedTileJoin.evaluate(spark, probesT, cellsT,
-      arity = 4, method = method, zMethod = zMethod, uMethod = uMethod,
-      n = n, tileXY = tXY, tilePlane = tPl,
-      xFront = xAxis.front, xStep = xAxis.step,
-      yFront = yAxis.front, yStep = yAxis.step,
-      xVals = if (regular) null else xAxis.values,
-      yVals = if (regular) null else yAxis.values)
-    withId.join(vals, Seq("_rid"), "left")
-      .withColumn(outputCol, coalesce(col("_v"), lit(Double.NaN)))
-      .drop("_rid", "_v")
-  }
+                                 xPeriod: Double = 0.0): DataFrame =
+    tableInterpolate(spark, probe, Seq(xCol, yCol, zCol, uCol), gridTable,
+      zColName, uColName, valueCol, outputCol, xPeriod,
+      "quadrivariateTableWindowed",
+      Some(Windowing(method, zMethod, uMethod, halfWindow)))
 
   /** Univariate interpolation / derivative over a broadcast 1-D grid —
     * the `pyinterp.univariate` / `univariate_derivative` entry points

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import graft.core.Axis
 
 /** One framed probe routed to its window tile: `(tx, ty, tk, tl)` is the
   * tile of the probe's WINDOW ORIGIN `(wi, wj, k0, l0)`; `x`/`y` are the
@@ -102,64 +104,48 @@ private[operators] object WindowedTileJoin {
     both.filter(x => x >= 0 && x <= tMax)
   }
 
-  /** Fan lattice cells out to their (few) window tiles. `cells` carries
-    * (_ci, _cj[, _ck[, _cl]], _z); unwrapped ±nx variants are emitted for
-    * periodic x so seam-crossing windows assemble from contiguous
-    * coordinates.
+  /** A framed probe routed to the tile of its window origin; the absent
+    * z/u axes of a 2-D/3-D probe carry 0 in `k0`/`l0`/`tz`/`tu`.
     */
-  def fanOutCells(spark: SparkSession, cells: DataFrame, arity: Int,
-                  n: Int, halfWindow: Int, tileXY: Int, tilePlane: Int,
-                  nx: Int, ny: Int, nz: Int, nu: Int,
-                  periodicX: Boolean): Dataset[TileCell] = {
+  def probe(rid: Long, x: Double, y: Double, tz: Double, tu: Double,
+            wi: Int, wj: Int, k0: Int, l0: Int): TileProbe =
+    TileProbe(fd(wi, DefaultTileXY), fd(wj, DefaultTileXY),
+      fd(k0, DefaultTilePlane), fd(l0, DefaultTilePlane),
+      rid, x, y, tz, tu, wi, wj, k0, l0)
+
+  /** Fan lattice cells out to their (few) window tiles. `cells` carries
+    * (_ci, _cj[, _ck[, _cl]], _z), one key per entry of `sizes` (the
+    * lattice's axis lengths); an absent z/u axis is key 0, whose only
+    * plane tile is 0. Unwrapped ±nx variants are emitted for periodic x
+    * so seam-crossing windows assemble from contiguous coordinates.
+    */
+  def fanOutCells(spark: SparkSession, cells: DataFrame, halfWindow: Int,
+                  sizes: Seq[Int], periodicX: Boolean): Dataset[TileCell] = {
     import spark.implicits._
+    val n = 2 * halfWindow
+    val t = DefaultTileXY
+    val tp = DefaultTilePlane
+    val nx = sizes(0)
     // tile ranges of reachable window origins (driver constants)
-    val txMin = if (periodicX) fd(-(halfWindow - 1), tileXY) else 0
+    val txMin = if (periodicX) fd(-(halfWindow - 1), t) else 0
     val txMax =
-      if (periodicX) fd(nx - halfWindow, tileXY) else fd(nx - n, tileXY)
-    val tyMax = fd(ny - n, tileXY)
-    val tkMax = if (arity >= 3) fd(nz - 2, tilePlane) else 0
-    val tlMax = if (arity >= 4) fd(nu - 2, tilePlane) else 0
-    val t = tileXY
-    val tp = tilePlane
-    val nn = n
-    val per = periodicX
-    val nxL = nx
-    arity match {
-      case 2 =>
-        cells.select("_ci", "_cj", "_z").as[(Int, Int, Double)].flatMap {
-          case (ci, cj, z) =>
-            val vxs = if (per) List(ci - nxL, ci, ci + nxL) else List(ci)
-            for {
-              vx <- vxs
-              tx <- xyTargets(vx, t, nn, txMin, txMax)
-              ty <- xyTargets(cj, t, nn, 0, tyMax)
-            } yield TileCell(tx, ty, 0, 0, vx, cj, 0, 0, z)
-        }
-      case 3 =>
-        cells.select("_ci", "_cj", "_ck", "_z")
-          .as[(Int, Int, Int, Double)].flatMap { case (ci, cj, ck, z) =>
-            val vxs = if (per) List(ci - nxL, ci, ci + nxL) else List(ci)
-            for {
-              vx <- vxs
-              tx <- xyTargets(vx, t, nn, txMin, txMax)
-              ty <- xyTargets(cj, t, nn, 0, tyMax)
-              tk <- planeTargets(ck, tp, tkMax)
-            } yield TileCell(tx, ty, tk, 0, vx, cj, ck, 0, z)
-          }
-      case _ =>
-        cells.select("_ci", "_cj", "_ck", "_cl", "_z")
-          .as[(Int, Int, Int, Int, Double)].flatMap {
-            case (ci, cj, ck, cl, z) =>
-              val vxs = if (per) List(ci - nxL, ci, ci + nxL) else List(ci)
-              for {
-                vx <- vxs
-                tx <- xyTargets(vx, t, nn, txMin, txMax)
-                ty <- xyTargets(cj, t, nn, 0, tyMax)
-                tk <- planeTargets(ck, tp, tkMax)
-                tl <- planeTargets(cl, tp, tlMax)
-              } yield TileCell(tx, ty, tk, tl, vx, cj, ck, cl, z)
-          }
-    }
+      if (periodicX) fd(nx - halfWindow, t) else fd(nx - n, t)
+    val tyMax = fd(sizes(1) - n, t)
+    val tkMax = if (sizes.size > 2) fd(sizes(2) - 2, tp) else 0
+    val tlMax = if (sizes.size > 3) fd(sizes(3) - 2, tp) else 0
+    def key(d: Int, name: String) = if (d < sizes.size) col(name) else lit(0)
+    cells.select(col("_ci"), col("_cj"), key(2, "_ck"), key(3, "_cl"),
+        col("_z"))
+      .as[(Int, Int, Int, Int, Double)].flatMap { case (ci, cj, ck, cl, z) =>
+        val vxs = if (periodicX) List(ci - nx, ci, ci + nx) else List(ci)
+        for {
+          vx <- vxs
+          tx <- xyTargets(vx, t, n, txMin, txMax)
+          ty <- xyTargets(cj, t, n, 0, tyMax)
+          tk <- planeTargets(ck, tp, tkMax)
+          tl <- planeTargets(cl, tp, tlMax)
+        } yield TileCell(tx, ty, tk, tl, vx, cj, ck, cl, z)
+      }
   }
 
   /** Co-group probes and cell replicas by tile and evaluate tile-locally.
@@ -168,30 +154,27 @@ private[operators] object WindowedTileJoin {
     * through the final left join.
     */
   def evaluate(spark: SparkSession, probes: Dataset[TileProbe],
-               cells: Dataset[TileCell], arity: Int, method: String,
-               zMethod: String, uMethod: String, n: Int,
-               tileXY: Int, tilePlane: Int,
-               xFront: Double, xStep: Double, yFront: Double,
-               yStep: Double,
-               xVals: Array[Double] = null,
-               yVals: Array[Double] = null): DataFrame = {
+               cells: Dataset[TileCell], rank: Int, method: String,
+               zMethod: String, uMethod: String, halfWindow: Int,
+               xAxis: Axis, yAxis: Axis, regular: Boolean): DataFrame = {
     import spark.implicits._
     val m = method
     val zm = zMethod
     val um = uMethod
-    val nn = n
-    val t = tileXY
-    val tp = tilePlane
-    val ar = arity
-    val xf = xFront; val xs0 = xStep; val yf = yFront; val ys0 = yStep
-    // irregular axes: window node coordinates come from the broadcast
+    val nn = 2 * halfWindow
+    val t = DefaultTileXY
+    val tp = DefaultTilePlane
+    val ar = rank
+    val xf = xAxis.front; val xs0 = xAxis.step
+    val yf = yAxis.front; val ys0 = yAxis.step
+    // irregular lattice: window node coordinates come from the broadcast
     // axis value arrays (O(nx + ny)) instead of the affine front + i·step
     // — indexes are always in-range here (irregular excludes periodic
     // unwrapping)
-    val bxv = if (xVals == null) null
-      else spark.sparkContext.broadcast(xVals)
-    val byv = if (yVals == null) null
-      else spark.sparkContext.broadcast(yVals)
+    val bxv = if (regular) null
+      else spark.sparkContext.broadcast(xAxis.values)
+    val byv = if (regular) null
+      else spark.sparkContext.broadcast(yAxis.values)
     val chunkSize = ProbeChunk
     val probeK = probes.groupByKey(p => (p.tx, p.ty, p.tk, p.tl))
     val cellK = cells.groupByKey(c => (c.tx, c.ty, c.tk, c.tl))
@@ -252,46 +235,32 @@ private[operators] object WindowedTileJoin {
               lastWi = p.wi; lastWj = p.wj; lastK0 = p.k0; lastL0 = p.l0
               java.util.Arrays.fill(built, false)
             }
-            val v = ar match {
-              case 2 => fit(p, 0, 0).eval(p.x, p.y)
-              case 3 =>
-                // the 3-D combine of the broadcast path
-                // (GridInterpolator.trivariate): nearest snaps to one
-                // plane; linear evaluates BOTH bracketing planes and
-                // combines v0 + t*(v1-v0) even at t = 0 or 1, so a
-                // NaN-masked window in the nominally zero-weight plane
-                // propagates exactly like the broadcast kernel
-                if (zm == "nearest") {
-                  if (p.tz <= 0.5) fit(p, 0, 0).eval(p.x, p.y)
-                  else fit(p, 1, 0).eval(p.x, p.y)
-                } else {
-                  val v0 = fit(p, 0, 0).eval(p.x, p.y)
-                  val v1 = fit(p, 1, 0).eval(p.x, p.y)
-                  v0 + p.tz * (v1 - v0)
-                }
-              case _ =>
-                // the 4-D combine of the broadcast path
-                // (QuadrivariateInterpolator.quadrivariate): u outer,
-                // z inner, nearest snaps per axis, linear is the nested
-                // lerp v0 + t*(v1-v0) on both levels — bit-identical op
-                // order and NaN propagation vs the broadcast kernel
-                def zCombine(dl: Int): Double =
-                  if (zm == "nearest") {
-                    if (p.tz <= 0.5) fit(p, 0, dl).eval(p.x, p.y)
-                    else fit(p, 1, dl).eval(p.x, p.y)
-                  } else {
-                    val v0 = fit(p, 0, dl).eval(p.x, p.y)
-                    val v1 = fit(p, 1, dl).eval(p.x, p.y)
-                    v0 + p.tz * (v1 - v0)
-                  }
-                if (um == "nearest") {
-                  if (p.tu <= 0.5) zCombine(0) else zCombine(1)
-                } else {
-                  val v0 = zCombine(0)
-                  val v1 = zCombine(1)
-                  v0 + p.tu * (v1 - v0)
-                }
-            }
+            // the combines of the broadcast path
+            // (GridInterpolator.trivariate, QuadrivariateInterpolator):
+            // u outer, z inner; nearest snaps per axis; linear evaluates
+            // BOTH bracketing planes and combines v0 + t*(v1-v0) even at
+            // t = 0 or 1, so a NaN-masked window in the nominally
+            // zero-weight plane propagates exactly like the broadcast
+            // kernel — bit-identical op order
+            def zCombine(dl: Int): Double =
+              if (zm == "nearest") {
+                if (p.tz <= 0.5) fit(p, 0, dl).eval(p.x, p.y)
+                else fit(p, 1, dl).eval(p.x, p.y)
+              } else {
+                val v0 = fit(p, 0, dl).eval(p.x, p.y)
+                val v1 = fit(p, 1, dl).eval(p.x, p.y)
+                v0 + p.tz * (v1 - v0)
+              }
+            val v =
+              if (ar == 2) fit(p, 0, 0).eval(p.x, p.y)
+              else if (ar == 3) zCombine(0)
+              else if (um == "nearest") {
+                if (p.tu <= 0.5) zCombine(0) else zCombine(1)
+              } else {
+                val v0 = zCombine(0)
+                val v1 = zCombine(1)
+                v0 + p.tu * (v1 - v0)
+              }
             (p.rid, v)
           }
         }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Axis
 import graft.operators.{Grid2D, Grid3D, Grid4D}
@@ -12,7 +12,7 @@ import graft.operators.{Grid2D, Grid3D, Grid4D}
   * grid cell (coord columns + a value column); axis roles are inferred
   * from column metadata `units` (CF unit names) first, then from
   * conventional column names. Axes must form a regular-or-irregular
-  * complete lattice; missing cells become NaN.
+  * lattice; missing cells, and cells with a null value, become NaN.
   *
   * The lattice VALUES are collected to the driver — a grid is broadcast
   * metadata for the interpolation map stage (same memory contract as the
@@ -56,6 +56,42 @@ object GridLoader {
     AxisRoles(lon, lat, time)
   }
 
+  /** Column roles of a long-format lattice of `rank` (2-4) axes, in axis
+    * order: lon (x) and lat (y) from [[identifyAxes]], then z
+    * (`zColName`, else the time role) and u (`uColName`, required — the
+    * 4th axis has no naming convention); the value column is `valueCol`,
+    * else the first remaining column. Errors name `caller`, the public
+    * entry point that was called. The one place that decides which
+    * column plays which role for the loaders below and the
+    * grid-as-table paths of `GridInterpolator`.
+    */
+  private[graft] def latticeColumns(df: DataFrame, rank: Int, caller: String,
+                                    zColName: String = "",
+                                    uColName: String = "",
+                                    valueCol: String = "")
+      : (Seq[String], String) = {
+    val roles = identifyAxes(df)
+    val lonCol = roles.lon.getOrElse(
+      throw new IllegalArgumentException("no longitude/x axis identified"))
+    val latCol = roles.lat.getOrElse(
+      throw new IllegalArgumentException("no latitude/y axis identified"))
+    val zCol =
+      if (rank < 3) Nil
+      else if (zColName.nonEmpty) Seq(zColName)
+      else Seq(roles.time.getOrElse(
+        throw new IllegalArgumentException("no time/z axis identified")))
+    if (rank == 4) require(uColName.nonEmpty,
+      s"$caller: name the 4th axis column via uColName")
+    val axisCols = Seq(lonCol, latCol) ++ zCol ++
+      (if (rank == 4) Seq(uColName) else Nil)
+    val vCol =
+      if (valueCol.nonEmpty) valueCol
+      else df.schema.fields.map(_.name).filterNot(axisCols.contains)
+        .headOption
+        .getOrElse(throw new IllegalArgumentException("no value column"))
+    (axisCols, vCol)
+  }
+
   /** Distinct sorted coordinate values of several axes in ONE scan
     * (`collect_set` aggregates) — only O(axis length) values reach the
     * driver (the d-th root of the lattice size), never the lattice, and
@@ -67,9 +103,6 @@ object GridLoader {
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     cols.indices.map(i => Axis(row.getSeq[Double](i).toArray.sorted))
   }
-
-  private[graft] def axisOf(df: DataFrame, colName: String): Axis =
-    axesOf(df, Seq(colName)).head
 
   /** Default byte budget for collecting a lattice to the driver (the
     * broadcast-grid contract). Above it [[grid2d]]/[[grid3d]] fail fast —
@@ -92,72 +125,55 @@ object GridLoader {
         "raise maxCollectBytes explicitly.")
   }
 
+  /** Collect a lattice of `rank` axes to the driver: its axes and the
+    * x-major dense values (`((i·ny + j)·nz + k)·nu + l`). A cell whose
+    * row is absent, or whose coordinate or value is null, stays NaN —
+    * a masked cell.
+    */
+  private def collectLattice(df: DataFrame, rank: Int, caller: String,
+                             maxCollectBytes: Long, zColName: String = "",
+                             uColName: String = "", valueCol: String = "")
+      : (Seq[Axis], Array[Double]) = {
+    gateCollect(df, maxCollectBytes, s"GridLoader.$caller")
+    val (axisCols, vCol) =
+      latticeColumns(df, rank, caller, zColName, uColName, valueCol)
+    val axes = axesOf(df, axisCols)
+    val vals = Array.fill(axes.map(_.size).product)(Double.NaN)
+    // one narrow pass mapping coordinates to axis indexes (regular axes
+    // index by arithmetic, irregular ones by the Axis binary search)
+    df.select((axisCols :+ vCol).map(c => col(c).cast("double")): _*)
+      .collect().foreach { r =>
+        if (!(0 to rank).exists(r.isNullAt)) {
+          var idx = 0
+          var d = 0
+          while (d < rank && idx >= 0) {
+            val i = axes(d).findIndex(r.getDouble(d), bounded = false)
+            idx = if (i < 0) -1 else idx * axes(d).size + i
+            d += 1
+          }
+          if (idx >= 0) vals(idx) = r.getDouble(rank)
+        }
+      }
+    (axes, vals)
+  }
+
   /** Load a 2-D grid: axis roles inferred, value column given (or the
     * single non-axis numeric column).
     */
   def grid2d(df: DataFrame, valueCol: String = "",
              maxCollectBytes: Long = DefaultMaxCollectBytes): Grid2D = {
-    gateCollect(df, maxCollectBytes, "GridLoader.grid2d")
-    val roles = identifyAxes(df)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else df.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val Seq(xAxis, yAxis) = axesOf(df, Seq(lonCol, latCol))
-    val nx = xAxis.size
-    val ny = yAxis.size
-    val vals = Array.fill(nx * ny)(Double.NaN)
-    // one narrow pass mapping coordinates to axis indexes (broadcast-free:
-    // regular axes index by arithmetic; irregular collect through the
-    // Axis binary search inside the closure)
-    val rows: Array[Row] = df.select(col(lonCol).cast("double"),
-      col(latCol).cast("double"), col(vCol).cast("double")).collect()
-    rows.foreach { r =>
-      val ix = xAxis.findIndex(bounded = false, coordinate = r.getDouble(0))
-      val iy = yAxis.findIndex(bounded = false, coordinate = r.getDouble(1))
-      if (ix >= 0 && iy >= 0) vals(ix * ny + iy) = r.getDouble(2)
-    }
-    Grid2D(xAxis, yAxis, vals)
+    val (Seq(x, y), vals) = collectLattice(df, 2, "grid2d", maxCollectBytes,
+      valueCol = valueCol)
+    Grid2D(x, y, vals)
   }
 
   /** Load a 3-D grid (lon, lat, time-or-z). */
   def grid3d(df: DataFrame, zColName: String = "",
              valueCol: String = "",
              maxCollectBytes: Long = DefaultMaxCollectBytes): Grid3D = {
-    gateCollect(df, maxCollectBytes, "GridLoader.grid3d")
-    val roles = identifyAxes(df)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val zCol =
-      if (zColName.nonEmpty) zColName
-      else roles.time.getOrElse(
-        throw new IllegalArgumentException("no time/z axis identified"))
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else df.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol || n == zCol).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val Seq(xAxis, yAxis, zAxis) = axesOf(df, Seq(lonCol, latCol, zCol))
-    val ny = yAxis.size
-    val nz = zAxis.size
-    val vals = Array.fill(xAxis.size * ny * nz)(Double.NaN)
-    df.select(col(lonCol).cast("double"), col(latCol).cast("double"),
-        col(zCol).cast("double"), col(vCol).cast("double"))
-      .collect().foreach { r =>
-        val ix = xAxis.findIndex(bounded = false, coordinate = r.getDouble(0))
-        val iy = yAxis.findIndex(bounded = false, coordinate = r.getDouble(1))
-        val iz = zAxis.findIndex(bounded = false, coordinate = r.getDouble(2))
-        if (ix >= 0 && iy >= 0 && iz >= 0)
-          vals((ix * ny + iy) * nz + iz) = r.getDouble(3)
-      }
-    Grid3D(xAxis, yAxis, zAxis, vals)
+    val (Seq(x, y, z), vals) = collectLattice(df, 3, "grid3d",
+      maxCollectBytes, zColName, valueCol = valueCol)
+    Grid3D(x, y, z, vals)
   }
 
   /** 4-D broadcastable grid from a table — the Grid4D analog of
@@ -169,40 +185,8 @@ object GridLoader {
   def grid4d(df: DataFrame, uColName: String, zColName: String = "",
              valueCol: String = "",
              maxCollectBytes: Long = DefaultMaxCollectBytes): Grid4D = {
-    gateCollect(df, maxCollectBytes, "GridLoader.grid4d")
-    val roles = identifyAxes(df)
-    val lonCol = roles.lon.getOrElse(
-      throw new IllegalArgumentException("no longitude/x axis identified"))
-    val latCol = roles.lat.getOrElse(
-      throw new IllegalArgumentException("no latitude/y axis identified"))
-    val zCol =
-      if (zColName.nonEmpty) zColName
-      else roles.time.getOrElse(
-        throw new IllegalArgumentException("no time/z axis identified"))
-    require(uColName.nonEmpty, "grid4d: name the 4th axis via uColName")
-    val vCol =
-      if (valueCol.nonEmpty) valueCol
-      else df.schema.fields.map(_.name)
-        .filterNot(n => n == lonCol || n == latCol || n == zCol ||
-          n == uColName).headOption
-        .getOrElse(throw new IllegalArgumentException("no value column"))
-    val Seq(xAxis, yAxis, zAxis, uAxis) =
-      axesOf(df, Seq(lonCol, latCol, zCol, uColName))
-    val ny = yAxis.size
-    val nz = zAxis.size
-    val nu = uAxis.size
-    val vals = Array.fill(xAxis.size * ny * nz * nu)(Double.NaN)
-    df.select(col(lonCol).cast("double"), col(latCol).cast("double"),
-        col(zCol).cast("double"), col(uColName).cast("double"),
-        col(vCol).cast("double"))
-      .collect().foreach { r =>
-        val ix = xAxis.findIndex(bounded = false, coordinate = r.getDouble(0))
-        val iy = yAxis.findIndex(bounded = false, coordinate = r.getDouble(1))
-        val iz = zAxis.findIndex(bounded = false, coordinate = r.getDouble(2))
-        val iu = uAxis.findIndex(bounded = false, coordinate = r.getDouble(3))
-        if (ix >= 0 && iy >= 0 && iz >= 0 && iu >= 0)
-          vals(((ix * ny + iy) * nz + iz) * nu + iu) = r.getDouble(4)
-      }
-    Grid4D(xAxis, yAxis, zAxis, uAxis, vals)
+    val (Seq(x, y, z, u), vals) = collectLattice(df, 4, "grid4d",
+      maxCollectBytes, zColName, uColName, valueCol)
+    Grid4D(x, y, z, u, vals)
   }
 }

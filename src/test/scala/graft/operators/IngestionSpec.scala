@@ -183,76 +183,63 @@ class IngestionSpec extends AnyFunSuite {
     }
     assert(nans > 0 && viaTable.values.exists(v => !v.isNaN))
     assert(maxV === 105.0)
-    // WINDOWED irregular path: same broadcast-axis bracket + tile-halo
-    // plan with window nodes read from the value arrays — bit-exact vs
-    // the broadcast kernel (identical xs arrays and eval coordinates)
-    for (method <- Seq("bicubic", "akima")) {
-      val wTable = GridInterpolator
-        .bivariateTableWindowed(spark, probes, "x", "y", gridTable, method)
-        .select(col("qid"), col("value")).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val wBroadcast = GridInterpolator
-        .bivariate(spark, probes, "x", "y", g, method)
-        .select(col("qid"), col("value")).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(wTable.keySet === wBroadcast.keySet)
-      var wNans = 0
-      wTable.foreach { case (qid, v) =>
-        val b = wBroadcast(qid)
-        if (v.isNaN || b.isNaN) {
-          assert(v.isNaN === b.isNaN, s"$method qid $qid: $v vs $b")
-          wNans += 1
-        } else assert(v === b, s"$method qid $qid: $v vs $b")
-      }
-      assert(wNans > 0 && wTable.values.exists(v => !v.isNaN), method)
-    }
   }
 
   test("trivariateTable on IRREGULAR axes ≡ broadcast trilinear") {
     // triangular-number spacing on ALL THREE axes: the 8-corner table
-    // path brackets via the broadcast kernel's binary search
+    // path brackets via the broadcast kernel's binary search; the same
+    // span on a REGULAR non-seam lattice (x/y step 4.5, z step 2) takes
+    // the column-arithmetic corner fan-out
     val nn = 9; val nz = 4
-    def tri(i: Int): Double = i * (i + 1) / 2.0
-    def v(i: org.apache.spark.sql.Column) = (i * (i + 1) / 2).cast("double")
-    val gridTable = spark.range(nn.toLong * nn * nz).select(
-      v(floor(col("id") / (nn * nz))).as("lon"),
-      v(floor(col("id") / nz) % nn).as("lat"),
-      v(col("id") % nz).as("z"),
-      ((floor(col("id") / (nn * nz)) * 13 + (floor(col("id") / nz) % nn) * 7
-        + (col("id") % nz) * 5) % 31).cast("double").as("sst"))
-    val probes = (0 until 200).map { k =>
-      val x = (k * 37 % 420) / 10.0 - 2.0
-      val y = (k * 53 % 420) / 10.0 - 2.0
-      val z = (k * 29 % 90) / 10.0 - 1.0 // -1 .. 8 (axis tops at 6)
-      (k.toLong, x, y, z)
-    }.toDF("qid", "x", "y", "zq")
-    val viaTable = GridInterpolator
-      .trivariateTable(spark, probes, "x", "y", "zq", gridTable)
-      .select(col("qid"), col("value")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val g3 = {
-      val vals = new Array[Double](nn * nn * nz)
-      for (i <- 0 until nn; j <- 0 until nn; k <- 0 until nz)
-        vals((i * nn + j) * nz + k) = ((i * 13 + j * 7 + k * 5) % 31).toDouble
-      Grid3D(
-        graft.core.Axis(Array.tabulate(nn)(tri)),
-        graft.core.Axis(Array.tabulate(nn)(tri)),
-        graft.core.Axis(Array.tabulate(nz)(tri)), vals)
+    for (regular <- Seq(false, true)) {
+      def node(i: Int, step: Double): Double =
+        if (regular) i * step else i * (i + 1) / 2.0
+      def v(i: org.apache.spark.sql.Column, step: Double) =
+        if (regular) i * step else (i * (i + 1) / 2).cast("double")
+      val gridTable = spark.range(nn.toLong * nn * nz).select(
+        v(floor(col("id") / (nn * nz)), 4.5).as("lon"),
+        v(floor(col("id") / nz) % nn, 4.5).as("lat"),
+        v(col("id") % nz, 2.0).as("z"),
+        ((floor(col("id") / (nn * nz)) * 13 + (floor(col("id") / nz) % nn) * 7
+          + (col("id") % nz) * 5) % 31).cast("double").as("sst"))
+      val probes = (0 until 200).map { k =>
+        val x = (k * 37 % 420) / 10.0 - 2.0
+        val y = (k * 53 % 420) / 10.0 - 2.0
+        val z = (k * 29 % 90) / 10.0 - 1.0 // -1 .. 8 (axis tops at 6)
+        (k.toLong, x, y, z)
+      }.toDF("qid", "x", "y", "zq")
+      val viaTable = GridInterpolator
+        .trivariateTable(spark, probes, "x", "y", "zq", gridTable)
+        .select(col("qid"), col("value")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val g3 = {
+        val vals = new Array[Double](nn * nn * nz)
+        for (i <- 0 until nn; j <- 0 until nn; k <- 0 until nz)
+          vals((i * nn + j) * nz + k) =
+            ((i * 13 + j * 7 + k * 5) % 31).toDouble
+        Grid3D(
+          graft.core.Axis(Array.tabulate(nn)(node(_, 4.5))),
+          graft.core.Axis(Array.tabulate(nn)(node(_, 4.5))),
+          graft.core.Axis(Array.tabulate(nz)(node(_, 2.0))), vals)
+      }
+      assert(g3.xAxis.isRegular === regular &&
+        g3.zAxis.isRegular === regular)
+      val viaBroadcast = GridInterpolator
+        .trivariate(spark, probes, "x", "y", "zq", g3, "bilinear")
+        .select(col("qid"), col("value")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(viaTable.keySet === viaBroadcast.keySet)
+      var nans = 0
+      viaTable.foreach { case (qid, v) =>
+        val b = viaBroadcast(qid)
+        if (v.isNaN || b.isNaN) {
+          assert(v.isNaN === b.isNaN, s"regular=$regular qid $qid: $v vs $b")
+          nans += 1
+        } else assert(math.abs(v - b) <= 1e-12,
+          s"regular=$regular qid $qid: $v vs $b")
+      }
+      assert(nans > 0 && viaTable.values.exists(v => !v.isNaN))
     }
-    assert(!g3.xAxis.isRegular && !g3.zAxis.isRegular)
-    val viaBroadcast = GridInterpolator
-      .trivariate(spark, probes, "x", "y", "zq", g3, "bilinear")
-      .select(col("qid"), col("value")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(viaTable.keySet === viaBroadcast.keySet)
-    var nans = 0
-    viaTable.foreach { case (qid, v) =>
-      val b = viaBroadcast(qid)
-      if (v.isNaN || b.isNaN) {
-        assert(v.isNaN === b.isNaN, s"qid $qid: $v vs $b"); nans += 1
-      } else assert(math.abs(v - b) <= 1e-12, s"qid $qid: $v vs $b")
-    }
-    assert(nans > 0 && viaTable.values.exists(v => !v.isNaN))
   }
 
   test("bivariateTableWindowed ≡ broadcast for bicubic and akima") {
@@ -277,31 +264,54 @@ class IngestionSpec extends AnyFunSuite {
       (1002L, 0.0, 0.0),    // exact grid min (unframeable: NaN)
       (1003L, 2.5, 17.5)    // frame boundary cells
     )).toDF("qid", "x", "y")
-    val g = GridLoader.grid2d(gridTable)
-    for (method <- Seq("bicubic", "akima")) {
-      val viaTable = GridInterpolator
-        .bivariateTableWindowed(spark, probes, "x", "y", gridTable, method)
-        .select(col("qid"), col("value")).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val viaBroadcast = GridInterpolator
-        .bivariate(spark, probes, "x", "y", g, method)
-        .select(col("qid"), col("value")).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(viaTable.keySet === viaBroadcast.keySet)
-      var nans = 0
-      viaTable.foreach { case (qid, v) =>
-        val b = viaBroadcast(qid)
-        if (v.isNaN || b.isNaN) {
-          assert(v.isNaN === b.isNaN, s"$method qid $qid: $v vs $b")
-          nans += 1
-        } else assert(v === b, s"$method qid $qid: $v vs $b")
+    // IRREGULAR input: quadratically spaced 15x15 axes (v_i = i(i+1)/2),
+    // cell (5,5) masked — the broadcast-axis bracket with window nodes
+    // read from the value arrays must be bit-exact too
+    val ni = 15
+    def tri(i: org.apache.spark.sql.Column) = (i * (i + 1) / 2).cast("double")
+    val irregularTable = spark.range(ni.toLong * ni).select(
+      tri(floor(col("id") / ni)).as("lon"),
+      tri(col("id") % ni).as("lat"),
+      ((floor(col("id") / ni) * 13 + (col("id") % ni) * 7) % 31)
+        .cast("double").as("sst"))
+      .filter(!(col("lon") === 15.0 && col("lat") === 15.0))
+    val irregularProbes = (0 until 300).map { k =>
+      val x = (k * 37 % 1150) / 10.0 - 5.0 // -5 .. 110 (incl. o-o-r)
+      val y = (k * 53 % 1150) / 10.0 - 5.0
+      (k.toLong, x, y)
+    }.toDF("qid", "x", "y")
+    for ((table, probe, regular) <- Seq((gridTable, probes, true),
+        (irregularTable, irregularProbes, false))) {
+      val g = GridLoader.grid2d(table)
+      assert(g.xAxis.isRegular === regular && g.yAxis.isRegular === regular)
+      for (method <- Seq("bicubic", "akima")) {
+        val tag = s"$method regular=$regular"
+        val viaTable = GridInterpolator
+          .bivariateTableWindowed(spark, probe, "x", "y", table, method)
+          .select(col("qid"), col("value")).collect()
+          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val viaBroadcast = GridInterpolator
+          .bivariate(spark, probe, "x", "y", g, method)
+          .select(col("qid"), col("value")).collect()
+          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(viaTable.keySet === viaBroadcast.keySet)
+        var nans = 0
+        viaTable.foreach { case (qid, v) =>
+          val b = viaBroadcast(qid)
+          if (v.isNaN || b.isNaN) {
+            assert(v.isNaN === b.isNaN, s"$tag qid $qid: $v vs $b")
+            nans += 1
+          } else assert(v === b, s"$tag qid $qid: $v vs $b")
+        }
+        assert(nans > 0, s"$tag fixture must exercise NaN rows")
+        assert(viaTable.values.exists(v => !v.isNaN), tag)
+        if (regular) {
+          assert(!viaTable(1000L).isNaN, s"$method interior node must " +
+            "interpolate")
+          assert(viaTable(1001L).isNaN && viaTable(1002L).isNaN,
+            s"$method undef boundary: windows past the edge must NaN")
+        }
       }
-      assert(nans > 0, s"$method fixture must exercise NaN rows")
-      assert(!viaTable(1000L).isNaN, s"$method interior node must " +
-        "interpolate")
-      assert(viaTable(1001L).isNaN && viaTable(1002L).isNaN,
-        s"$method undef boundary: windows past the edge must NaN")
-      assert(viaTable.values.exists(v => !v.isNaN))
     }
   }
 
@@ -581,6 +591,118 @@ class IngestionSpec extends AnyFunSuite {
       toMap(QuadrivariateInterpolator.quadrivariate(spark, probes, "x", "y", "zq",
         "uq", g4, "bicubic")),
       "windowed4d")
+  }
+
+  /** A 12x12[x3[x3]] lattice table (lon, lat[, z[, u]], sst) whose x
+    * axis is regular (step 1) or irregular (x_i = i(i+1)/2); `nullAt`
+    * gives the value of that cell as null, `dropAt` omits its row.
+    */
+  private def lattice(rank: Int, irregular: Boolean,
+                      nullAt: Option[Seq[Int]] = None,
+                      dropAt: Option[Seq[Int]] = None)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    val sizes = Seq(12, 12, 3, 3).take(rank)
+    val names = Seq("lon", "lat", "z", "u").take(rank) :+ "sst"
+    val cells = sizes.foldLeft(Seq(Seq.empty[Int])) { (acc, n) =>
+      for (c <- acc; i <- 0 until n) yield c :+ i }
+    val rows = cells.filterNot(c => dropAt.contains(c)).map { c =>
+      val x = if (irregular) c(0) * (c(0) + 1) / 2.0 else c(0).toDouble
+      val v: java.lang.Double =
+        if (nullAt.contains(c)) null
+        else (c.zip(Seq(13, 7, 5, 3)).map { case (i, m) => i * m }.sum % 31)
+          .toDouble
+      Row.fromSeq((x +: c.tail.map(_.toDouble)) :+ v)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(names.map(StructField(_, DoubleType))))
+  }
+
+  test("a null lattice value is a masked cell on every table path and " +
+      "grid loader") {
+    // cell (3, 3[, 1[, 1]]) has a null value: every path must treat it
+    // exactly like an absent row — probe 0 (corners / window / planes
+    // touch it) is NaN, probe 1 (clear of it) interpolates — and the
+    // loaders leave its slot NaN
+    val masked = Seq(3, 3, 1, 1)
+    def toMap(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("qid"), col("value")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    for (irregular <- Seq(false, true)) {
+      // x midpoints of cells (3, 4) and (8, 9) on either x spacing
+      val (xm, xc) = if (irregular) (8.0, 40.5) else (3.5, 8.5)
+      val probes = Seq((0L, xm, 3.5, 1.5, 1.5), (1L, xc, 8.5, 0.5, 0.5))
+        .toDF("qid", "x", "y", "zq", "uq")
+      for (rank <- 2 to 4) {
+        val cell = Some(masked.take(rank))
+        val withNull = lattice(rank, irregular, nullAt = cell)
+        val absent = lattice(rank, irregular, dropAt = cell)
+        def paths(t: org.apache.spark.sql.DataFrame)
+            : Seq[(String, org.apache.spark.sql.DataFrame)] = rank match {
+          case 2 => Seq(
+            "bivariateTable" ->
+              GridInterpolator.bivariateTable(spark, probes, "x", "y", t),
+            "bivariateTableWindowed" -> GridInterpolator
+              .bivariateTableWindowed(spark, probes, "x", "y", t))
+          case 3 => Seq(
+            "trivariateTable" -> GridInterpolator.trivariateTable(spark,
+              probes, "x", "y", "zq", t),
+            "trivariateTableWindowed" -> GridInterpolator
+              .trivariateTableWindowed(spark, probes, "x", "y", "zq", t))
+          case _ => Seq(
+            "quadrivariateTable" -> GridInterpolator.quadrivariateTable(
+              spark, probes, "x", "y", "zq", "uq", t, uColName = "u"),
+            "quadrivariateTableWindowed" -> GridInterpolator
+              .quadrivariateTableWindowed(spark, probes, "x", "y", "zq",
+                "uq", t, uColName = "u"))
+        }
+        for (((name, got), (_, want)) <- paths(withNull).zip(paths(absent))) {
+          val tag = s"$name irregular=$irregular"
+          val (g, w) = (toMap(got), toMap(want))
+          assert(g(0L).isNaN && w(0L).isNaN, tag)
+          assert(!g(1L).isNaN && g(1L) === w(1L), tag)
+        }
+        val (loaded, reference) = rank match {
+          case 2 => (GridLoader.grid2d(withNull).values,
+            GridLoader.grid2d(absent).values)
+          case 3 => (GridLoader.grid3d(withNull).values,
+            GridLoader.grid3d(absent).values)
+          case _ => (GridLoader.grid4d(withNull, uColName = "u").values,
+            GridLoader.grid4d(absent, uColName = "u").values)
+        }
+        assert(loaded.count(_.isNaN) === 1, s"grid${rank}d")
+        assert(java.util.Arrays.equals(loaded, reference), s"grid${rank}d")
+      }
+    }
+  }
+
+  test("a null probe coordinate yields NaN on both table branches") {
+    // the row survives with NaN on the regular (column-arithmetic) and
+    // irregular (broadcast-axis) branches, geometric 2-D and windowed 3-D
+    for (irregular <- Seq(false, true)) {
+      val xc = if (irregular) 40.5 else 8.5
+      val probes = Seq[(Long, Option[Double], Option[Double],
+          Option[Double])](
+        (0L, Some(xc), Some(8.5), Some(0.5)),
+        (1L, None, Some(8.5), Some(0.5)),
+        (2L, Some(xc), None, Some(0.5)),
+        (3L, Some(xc), Some(8.5), None)).toDF("qid", "x", "y", "zq")
+      for ((name, out) <- Seq(
+          "bivariateTable" -> GridInterpolator.bivariateTable(spark, probes,
+            "x", "y", lattice(2, irregular)),
+          "trivariateTableWindowed" -> GridInterpolator
+            .trivariateTableWindowed(spark, probes, "x", "y", "zq",
+              lattice(3, irregular)))) {
+        val got = out.select(col("qid"), col("value")).collect()
+          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val tag = s"$name irregular=$irregular"
+        assert(got.keySet === Set(0L, 1L, 2L, 3L), tag)
+        assert(!got(0L).isNaN, tag)
+        assert(got(1L).isNaN && got(2L).isNaN, tag)
+        if (name == "trivariateTableWindowed") assert(got(3L).isNaN, tag)
+      }
+    }
   }
 
   test("state serialization round-trips (KdTree, Grid2D, TemporalAxis)") {
