@@ -1,15 +1,17 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import graft.core.Polygon2D
 
 /** Catalyst expressions for the cell codec and geodesy — fully
   * codegen-compatible (each `doGenCode` emits a single static call into
-  * [[Kernels]]), so they stay inside whole-stage codegen next to parquet
-  * scans and joins.
+  * [[Kernels]], or one call on a broadcast polygon array), so they stay
+  * inside whole-stage codegen next to parquet scans and joins.
   *
   * Reference semantics: geohash-int64 codec
   * (`/root/reference/cxx/src/library/geohash/int64.cpp`), point-in-polygon
@@ -120,6 +122,40 @@ case class StCoveredBy(x: Expression, y: Expression, poly: Expression)
       s"graft.functions.Kernels.stCoveredBy($a, $b, $c)")
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
+}
+
+/** Exact refine of [[graft.operators.PipJoin.cellJoin]]: the polygon is
+  * `polygons(idx)` of an array parsed once on the driver and broadcast,
+  * so a candidate row carries an int index instead of polygon text.
+  * `inclusive` selects boost `covered_by` over `within`.
+  */
+private[graft] case class PolygonAtContains(x: Expression, y: Expression,
+    idx: Expression, polygons: Broadcast[Array[Polygon2D]], inclusive: Boolean)
+    extends TernaryExpression {
+  override def first: Expression = x
+  override def second: Expression = y
+  override def third: Expression = idx
+  override def dataType: DataType = BooleanType
+
+  @transient private lazy val polys: Array[Polygon2D] = polygons.value
+
+  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
+    val p = polys(c.asInstanceOf[Int])
+    if (inclusive) p.coveredBy(a.asInstanceOf[Double], b.asInstanceOf[Double])
+    else p.contains(a.asInstanceOf[Double], b.asInstanceOf[Double])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bc = ctx.addReferenceObj("polygons", polygons)
+    val polys = ctx.addMutableState("graft.core.Polygon2D[]", "polys",
+      v => s"$v = (graft.core.Polygon2D[]) $bc.value();")
+    val test = if (inclusive) "coveredBy" else "contains"
+    defineCodeGen(ctx, ev, (a, b, c) => s"$polys[$c].$test($a, $b)")
+  }
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(x = f, y = s, idx = t)
 }
 
 /** Great-circle distance (m) on the mean sphere. */

@@ -3,21 +3,25 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GeoHash, Polygon2D}
-import graft.functions.gf
+import graft.functions.{PolygonAtContains, gf}
 
 /** Point-in-polygon join with the two-phase filter-refine structure of the
-  * reference's spatial queries (cell prune -> exact predicate), and a
-  * size-based broadcast-vs-shuffle choice per the north star:
+  * reference's spatial queries (cell prune -> exact predicate). [[join]]
+  * picks the path by polygon count:
   *
-  *   - **small polygon set** (below `broadcastThreshold`): polygons are
-  *     broadcast and evaluated as a codegen'd [[graft.functions.StWithin]]
-  *     predicate on a broadcast nested-loop join — no shuffle of the
-  *     point side at all;
-  *   - **large polygon set**: each polygon explodes into its covering
-  *     cells (`geohash/int64.hpp:138-163` bounding_boxes semantics),
-  *     points carry their cell, a shuffled **equi-join on cell** prunes,
-  *     and the exact `within` test refines. Cells fully classified inside
-  *     could skip the refine; we keep the uniform refine for exactness.
+  *   - **small polygon set** (at most `broadcastThreshold`): the polygons
+  *     are broadcast and each point partition scans them in a
+  *     `mapPartitions`, testing the bounding box before the exact test —
+  *     no shuffle of the point side at all;
+  *   - **large polygon set**: the driver builds a cover table of each
+  *     polygon's cells (`geohash/int64.hpp:138-163` bounding_boxes
+  *     semantics), points carry their cell, an **equi-join on cell**
+  *     prunes, and the exact test refines each candidate against the
+  *     polygon, looked up by index in a broadcast array. Catalyst
+  *     broadcasts the cover table while it is below
+  *     `spark.sql.autoBroadcastJoinThreshold` and shuffles both sides into
+  *     a sort-merge join above it. Cells fully classified inside could
+  *     skip the refine; we keep the uniform refine for exactness.
   *
   * Output: point columns + `poly_id`. Boundary semantics are boost
   * `within` (exclusive) like the reference's vectorized `within=True`
@@ -69,34 +73,26 @@ object PipJoin {
     }(enc)
   }
 
-  /** Shuffle path: polygon cell covers exploded to a build table
-    * (poly_id, cell), points cell-encoded, equi-join + exact refine.
+  /** Cell path: a cover table (cell, poly_id, poly_idx) equi-joined with
+    * the cell-encoded points, then the exact test on `polygons(poly_idx)`
+    * from one broadcast of the parsed polygons.
     */
   def cellJoin(spark: SparkSession, points: DataFrame, xCol: String,
                yCol: String, polygons: Seq[(Long, Polygon2D)],
                precision: Int, coveredBy: Boolean = false): DataFrame = {
     import spark.implicits._
-    val covers = polygons.flatMap { case (id, poly) =>
-      GeoHash.coverPolygon(poly, precision).map(c => (id, c, poly.serialize))
-    }.toDF("poly_id", "cell", "poly")
-    val withCell = points.withColumn("cell",
-      gf.geohash_encode(col(xCol), col(yCol), precision))
-    val pred =
-      if (coveredBy)
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.StCoveredBy(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col(xCol)),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col(yCol)),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("poly"))))
-      else
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.StWithin(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col(xCol)),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col(yCol)),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("poly"))))
-    withCell
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    val polys = polygons.toArray
+    val covers = polys.indices.flatMap { i =>
+      val (id, poly) = polys(i)
+      GeoHash.coverPolygon(poly, precision).map(c => (c, id, i))
+    }.toDF("cell", "poly_id", "poly_idx")
+    val bc = spark.sparkContext.broadcast(polys.map(_._2))
+    val inside = column(PolygonAtContains(expression(col(xCol)),
+      expression(col(yCol)), expression(col("poly_idx")), bc, coveredBy))
+    points.withColumn("cell", gf.geohash_encode(col(xCol), col(yCol), precision))
       .join(covers, Seq("cell"), "inner")
-      .filter(pred)
-      .drop("cell", "poly")
+      .filter(inside)
+      .drop("cell", "poly_idx")
   }
 }

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Axis, GeoHash, Polygon2D}
-import graft.functions.gf
+import graft.functions.{PolygonAtContains, StCoveredBy, StWithin, gf}
 
 object SparkTestSession {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -48,6 +50,49 @@ class ExpressionsSpec extends AnyFunSuite {
     val df = Seq((1.0, 1.0), (3.0, 3.0)).toDF("x", "y")
     val got = df.select(gf.st_within($"x", $"y", poly)).as[Boolean].collect()
     assert(got.toSeq == Seq(true, false))
+
+    // Literal and column-valued polygons must agree in generated code and
+    // in the interpreted path. An RDD source keeps the optimizer from
+    // folding the projection into a local relation, which would bypass
+    // codegen.
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    def within(p: org.apache.spark.sql.Column) =
+      column(StWithin(expression($"x"), expression($"y"), expression(p)))
+    def coveredBy(p: org.apache.spark.sql.Column) =
+      column(StCoveredBy(expression($"x"), expression($"y"), expression(p)))
+    val small = "0 0;1 0;1 1;0 1"
+    val big = poly.serialize
+    val rows = spark.sparkContext.parallelize(Seq[(Double, Double, String)](
+      (0.5, 0.5, small), (1.5, 1.5, small), (1.5, 1.5, big),
+      (2.0, 1.0, big), (1.0, 0.5, small), (0.5, 0.5, null)), 2)
+      .toDF("x", "y", "poly")
+    for ((wholeStage, factory) <- Seq(("true", "FALLBACK"), ("false", "NO_CODEGEN"))) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val sel = rows.select(
+          within($"poly"), coveredBy($"poly"),
+          gf.st_within($"x", $"y", poly), gf.st_covered_by($"x", $"y", poly))
+        val codegen = sel.queryExecution.executedPlan.collectFirst {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+        }.isDefined
+        assert(codegen == wholeStage.toBoolean, sel.queryExecution.executedPlan)
+        val out = sel.collect().map(r => (0 until 4).map(i =>
+          if (r.isNullAt(i)) None else Some(r.getBoolean(i)))).toSeq
+        val T = Some(true); val F = Some(false)
+        assert(out == Seq(
+          Seq(T, T, T, T),          // inside both polygons
+          Seq(F, F, T, T),          // outside the row's small polygon
+          Seq(T, T, T, T),          // same point, the row's big polygon
+          Seq(F, T, F, T),          // on the big polygon's edge
+          Seq(F, T, T, T),          // on the small polygon's edge
+          Seq(None, None, T, T)),   // null polygon
+          s"wholeStage=$wholeStage")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
   }
 
   test("expressions survive whole-stage codegen") {
@@ -261,7 +306,7 @@ class KnnJoinSpec extends AnyFunSuite {
   }
 }
 
-class PipJoinSpec extends AnyFunSuite {
+class PipJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -280,13 +325,76 @@ class PipJoinSpec extends AnyFunSuite {
     assert(out == Set((1L, 100L), (2L, 200L))) // pid 4 on boundary: excluded
   }
 
+  /** About 50 seeded polygons over [-7, 7]^2: stars (every fourth spans
+    * many cells), rectangles with triangular holes, a 4x4 tiling of
+    * squares that share edges, and triangles. The points sit on every
+    * vertex, on every edge midpoint, inside every hole, and at random.
+    */
+  def seededInput(seed: Long): (Seq[(Long, Polygon2D)], Seq[(Long, Double, Double)]) = {
+    val rnd = new scala.util.Random(seed)
+    def u(lo: Double, hi: Double): Double = lo + (hi - lo) * rnd.nextDouble()
+    val stars = (0 until 16).map { i =>
+      val (cx, cy) = (u(-5, 5), u(-5, 5))
+      val r = if (i % 4 == 0) u(1.5, 3.0) else u(0.1, 0.8)
+      Polygon2D((0 until 7).map { v =>
+        val a = 2 * math.Pi * v / 7
+        val rr = r * u(0.5, 1.0)
+        (cx + rr * math.cos(a), cy + rr * math.sin(a))
+      }.toArray)
+    }
+    val holed = (0 until 10).map { _ =>
+      val (x0, y0, w, h) = (u(-6, 3), u(-6, 3), u(1, 3), u(1, 3))
+      Polygon2D(Array((x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)),
+        Array(Array((x0 + w / 4, y0 + h / 4), (x0 + 3 * w / 4, y0 + h / 4),
+          (x0 + w / 2, y0 + 3 * h / 4))))
+    }
+    val tiles = for (i <- 0 until 4; j <- 0 until 4) yield {
+      val (x, y) = (-1.0 + 0.5 * i, 2.0 + 0.5 * j)
+      Polygon2D(Array((x, y), (x + 0.5, y), (x + 0.5, y + 0.5), (x, y + 0.5)))
+    }
+    val triangles = (0 until 8).map { _ =>
+      Polygon2D(Array.fill(3)((u(-6, 6), u(-6, 6))))
+    }
+    val polys = (stars ++ holed ++ tiles ++ triangles).toSeq
+    val onRings = polys.flatMap(p => (p.exterior +: p.holes).flatMap { ring =>
+      ring.indices.flatMap { i =>
+        val (a, b) = (ring(i), ring((i + 1) % ring.length))
+        Seq(a, ((a._1 + b._1) / 2, (a._2 + b._2) / 2))
+      }
+    })
+    val inHoles = polys.flatMap(_.holes.map(h =>
+      (h.map(_._1).sum / h.length, h.map(_._2).sum / h.length)))
+    val scattered = Seq.fill(2000)((u(-7, 7), u(-7, 7)))
+    val pts = (onRings ++ inHoles ++ scattered).zipWithIndex.map {
+      case ((x, y), i) => (i.toLong, x, y)
+    }
+    (polys.zipWithIndex.map { case (p, i) => (1000L + i, p) }, pts)
+  }
+
   test("cell join equals broadcast join") {
-    val polys = Seq((100L, square), (200L, triangle))
-    val a = PipJoin.broadcastJoin(spark, points(), "x", "y", polys)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = PipJoin.cellJoin(spark, points(), "x", "y", polys, precision = 20)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
+    def pairs(df: DataFrame): Seq[(Long, Long)] =
+      df.select("pid", "poly_id").as[(Long, Long)].collect().toSeq.sorted
+    val (seededPolys, seededPts) = seededInput(17L)
+    val inputs = Seq(
+      (Seq((100L, square), (200L, triangle)), points()),
+      (seededPolys, seededPts.toDF("pid", "x", "y")))
+    val sizes = for ((polys, pts) <- inputs; coveredBy <- Seq(false, true)) yield {
+      val a = pairs(PipJoin.broadcastJoin(spark, pts, "x", "y", polys, coveredBy))
+      val cells = PipJoin.cellJoin(spark, pts, "x", "y", polys, 20, coveredBy)
+      assert(pairs(cells) == a, s"coveredBy=$coveredBy, ${polys.size} polygons")
+      assert(a.nonEmpty)
+
+      // the refine reads polygons by index: no polygon text in any
+      // operator, no text predicate, and the index refine is present
+      val nodes = collect(cells.queryExecution.executedPlan) { case n => n }
+      val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+      assert(!nodes.exists(_.output.exists(_.dataType == StringType)))
+      assert(!exprs.exists(e => e.isInstanceOf[StWithin] || e.isInstanceOf[StCoveredBy]))
+      assert(exprs.exists(_.isInstanceOf[PolygonAtContains]))
+      a.size
+    }
+    // both inputs reach the boundary: coveredBy adds pairs
+    assert(sizes(1) > sizes(0) && sizes(3) > sizes(2), sizes)
   }
 
   test("coveredBy includes boundary") {
