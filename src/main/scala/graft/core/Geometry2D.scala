@@ -74,8 +74,10 @@ final case class Polygon2D(
   def coveredBy(px: Double, py: Double): Boolean = classify(px, py) >= 1
 
   /** Conservative polygon/box intersection test used for cell covers:
-    * true when any box corner is covered, any polygon vertex lies in the
-    * box, or any edge pair intersects.
+    * true when any box corner (or the centre) is covered, any vertex of
+    * any ring lies in the box, or any ring edge crosses a box edge. Hole
+    * rings count: a thin part of the polygon between two hole edges can
+    * cross a box whose corners and centre all lie in the hole.
     */
   def intersectsBox(x0: Double, y0: Double, x1: Double, y1: Double): Boolean = {
     val (bx0, by0, bx1, by1) = bbox
@@ -83,27 +85,31 @@ final case class Polygon2D(
     if (coveredBy(x0, y0) || coveredBy(x1, y0) || coveredBy(x0, y1) ||
         coveredBy(x1, y1)) return true
     if (coveredBy((x0 + x1) / 2, (y0 + y1) / 2)) return true
-    if (exterior.exists { case (x, y) =>
-          x >= x0 && x <= x1 && y >= y0 && y <= y1 }) return true
+    val rings = exterior +: holes
+    if (rings.exists(_.exists { case (x, y) =>
+          x >= x0 && x <= x1 && y >= y0 && y <= y1 })) return true
     // edge/box-edge intersection
     val boxEdges = Array(
       ((x0, y0), (x1, y0)), ((x1, y0), (x1, y1)),
       ((x1, y1), (x0, y1)), ((x0, y1), (x0, y0)))
-    val n = exterior.length
-    var i = 0
-    var j = n - 1
-    while (i < n) {
-      val a = exterior(j); val b = exterior(i)
-      var e = 0
-      while (e < 4) {
-        if (Polygon2D.segmentsIntersect(a, b, boxEdges(e)._1, boxEdges(e)._2))
-          return true
-        e += 1
+    rings.exists { ring =>
+      val n = ring.length
+      var i = 0
+      var j = n - 1
+      var hit = false
+      while (i < n && !hit) {
+        val a = ring(j); val b = ring(i)
+        var e = 0
+        while (e < 4 && !hit) {
+          hit = Polygon2D.segmentsIntersect(a, b, boxEdges(e)._1,
+            boxEdges(e)._2)
+          e += 1
+        }
+        j = i
+        i += 1
       }
-      j = i
-      i += 1
+      hit
     }
-    false
   }
 
   /** WKT-ish serialization for shipping through DataFrame literals. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.dsl.expressions._
@@ -11,25 +10,29 @@ import org.apache.spark.sql.types._
   * (`/root/reference/cxx/include/pyinterp/math/descriptive_statistics
   * .hpp:246-297`), but written as pure Catalyst expressions — so the
   * whole aggregation runs inside codegen'd HashAggregate (partial +
-  * final), with no object buffer and no Kryo. This is the hot-path
-  * variant for Binning2D at scale; [[DescStatsAgg]] remains the typed
-  * API.
+  * final) with UnsafeRow buffers (also as streaming state), no object
+  * buffer and no Kryo. It is the engine's one moments aggregate: the
+  * `aggregators.stats_agg` column, binning, `NdStats` and the streaming
+  * binning all run on it.
   *
   * Update is implemented as merge-with-singleton (count=1, sumW=w),
   * which is the reference's own weighted-push definition
-  * (`descriptive_statistics.hpp:70-77`).
+  * (`descriptive_statistics.hpp:70-77`). Rows whose value or weight is
+  * null or NaN are skipped (`pybind/binning.hpp:266`). The result is the
+  * reference's descriptive-statistics column set
+  * (`descriptive_statistics.hpp:80-150`), variance and std with `ddof`
+  * delta degrees of freedom.
   */
-case class MomentsDeclarativeAgg(child: Expression, weightExpr: Expression)
-    extends DeclarativeAggregate {
+case class MomentsDeclarativeAgg(child: Expression, weightExpr: Expression,
+    ddof: Int = 0) extends DeclarativeAggregate {
 
   override def children: Seq[Expression] = Seq(child, weightExpr)
   override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
-    StructField("count", LongType), StructField("sum_of_weights", DoubleType),
-    StructField("mean", DoubleType), StructField("min", DoubleType),
-    StructField("max", DoubleType), StructField("sum", DoubleType),
-    StructField("m2", DoubleType), StructField("m3", DoubleType),
-    StructField("m4", DoubleType)))
+  private val resultNames = Seq("count", "sum_of_weights", "mean", "min",
+    "max", "sum", "variance", "std", "skewness", "kurtosis")
+  override def dataType: DataType = StructType(resultNames.map(n =>
+    StructField(n, if (n == "count") LongType else DoubleType,
+      nullable = false)))
 
   private val count = AttributeReference("cnt", LongType, nullable = false)()
   private val sumW = AttributeReference("sumW", DoubleType, nullable = false)()
@@ -94,7 +97,7 @@ case class MomentsDeclarativeAgg(child: Expression, weightExpr: Expression)
   override lazy val updateExpressions: Seq[Expression] = {
     val v = child
     val wIn = weightExpr
-    val skip = Or(IsNull(v), IsNaN(v))
+    val skip = Or(Or(IsNull(v), IsNaN(v)), Or(IsNull(wIn), IsNaN(wIn)))
     // singleton accumulator for (v, w)
     val merged = mergeWith(
       rCount = Literal(1L), rSumW = wIn, rMean = v, rMin = v, rMax = v,
@@ -116,31 +119,31 @@ case class MomentsDeclarativeAgg(child: Expression, weightExpr: Expression)
       lMin = minA.left, lMax = maxA.left, lSum = sumA.left,
       lM2 = m2.left, lM3 = m3.left, lM4 = m4.left)
 
+  /** Finishing projection: the moments as `Moments` reports them (mean,
+    * min, max and sum NaN on an empty group; variance NaN at or below
+    * `ddof` weight; skewness and kurtosis NaN when m2 is 0).
+    */
   override lazy val evaluateExpression: Expression = {
     val empty = EqualTo(count, Literal(0L))
     val nan = Literal(Double.NaN)
-    CreateStruct(Seq(
+    val cardinal = sumW - Literal(ddof.toDouble)
+    val variance =
+      If(GreaterThan(cardinal, Literal(0.0)), m2 / cardinal, nan)
+    val flat = EqualTo(m2, Literal(0.0))
+    CreateNamedStruct(resultNames.zip(Seq(
       count, sumW,
       If(empty, nan, mean),
       If(empty, nan, minA),
       If(empty, nan, maxA),
       If(empty, nan, sumA),
-      m2, m3, m4))
+      variance,
+      Sqrt(variance),
+      If(flat, nan, Sqrt(sumW) * m3 / Pow(m2, Literal(1.5))),
+      If(flat, nan, sumW * m4 / (m2 * m2) - Literal(3.0))))
+      .flatMap { case (name, e) => Seq(Literal(name), e) })
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), weightExpr = newChildren(1))
-}
-
-object MomentsDeclarativeAgg {
-  /** Column API: codegen'd moments struct (count, sum_of_weights, mean,
-    * min, max, sum, m2, m3, m4).
-    */
-  def stats_agg_fast(value: Column, weight: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      MomentsDeclarativeAgg(ColumnBridge.expression(value),
-        ColumnBridge.expression(weight)).toAggregateExpression())
-  }
 }

@@ -2,57 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import graft.core.{Moments, TDigest}
-
-/** Full descriptive-statistics output of one group/bin — the column set
-  * the reference's DescriptiveStatistics exposes
-  * (`/root/reference/cxx/include/pyinterp/math/descriptive_statistics.hpp:
-  * 80-150`).
-  */
-case class StatsResult(
-    count: Long,
-    sum_of_weights: Double,
-    mean: Double,
-    min: Double,
-    max: Double,
-    sum: Double,
-    variance: Double,
-    std: Double,
-    skewness: Double,
-    kurtosis: Double)
-
-/** Weighted streaming-moments aggregator. The update is the reference's
-  * incremental push (`descriptive_statistics.hpp:205-242`), the merge the
-  * Pébay parallel merge (`:246-297`) — Catalyst runs update map-side
-  * (partial aggregation) and merge on reducers, reproducing the topology
-  * of the reference's dask fold (`pyinterp/dask.py:179-209`).
-  *
-  * NaN inputs are skipped, matching the accumulators' NaN-skip behavior
-  * (`pybind/binning.hpp:266`).
-  */
-class DescStatsAgg(ddof: Int = 0)
-    extends Aggregator[(Double, Double), Moments, StatsResult] {
-
-  override def zero: Moments = new Moments()
-
-  override def reduce(b: Moments, in: (Double, Double)): Moments = {
-    val (value, weight) = in
-    if (!value.isNaN && !weight.isNaN) {
-      if (weight == 1.0) b.add(value) else b.add(value, weight)
-    }
-    b
-  }
-
-  override def merge(a: Moments, b: Moments): Moments = { a.merge(b); a }
-
-  override def finish(m: Moments): StatsResult =
-    StatsResult(m.count, m.sumW, m.meanOrNaN, m.minOrNaN, m.maxOrNaN,
-      if (m.count == 0) Double.NaN else m.sum,
-      m.variance(ddof), m.std(ddof), m.skewness, m.kurtosis)
-
-  override def bufferEncoder: Encoder[Moments] = Encoders.kryo[Moments]
-  override def outputEncoder: Encoder[StatsResult] = Encoders.product[StatsResult]
-}
+import graft.core.TDigest
 
 /** Quantile sketch output: requested quantiles plus the exact count /
   * min / max / mean the reference's Histogram2D exposes
@@ -94,13 +44,19 @@ class TDigestAgg(qs: Seq[Double], compression: Int = 100)
 }
 
 object aggregators {
-  import org.apache.spark.sql.functions.{udaf, lit, struct}
+  import org.apache.spark.sql.functions.udaf
+  import org.apache.spark.sql.graft.ColumnBridge
 
-  /** Column form: `stats_agg($"z", $"w")` — a struct of StatsResult. */
-  def stats_agg(value: Column, weight: Column, ddof: Int = 0): Column = {
-    val f = udaf(new DescStatsAgg(ddof))
-    f(value, weight)
-  }
+  /** Column form: `stats_agg($"z", $"w")` — a struct of (count,
+    * sum_of_weights, mean, min, max, sum, variance, std, skewness,
+    * kurtosis), computed by the codegen'd [[MomentsDeclarativeAgg]] over
+    * the value and weight cast to double.
+    */
+  def stats_agg(value: Column, weight: Column, ddof: Int = 0): Column =
+    ColumnBridge.column(MomentsDeclarativeAgg(
+      ColumnBridge.expression(value.cast("double")),
+      ColumnBridge.expression(weight.cast("double")), ddof)
+      .toAggregateExpression())
 
   def stats_agg1(value: Column): Column =
     stats_agg(value, org.apache.spark.sql.functions.lit(1.0))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Axis
-import graft.functions.MomentsDeclarativeAgg.stats_agg_fast
+import graft.functions.aggregators.stats_agg
 
 /** Binning1D / Binning2D over a pair of axes, as pure Catalyst plans:
   * bin-index assignment is built-in column arithmetic (codegen'd, pushed
@@ -23,33 +23,6 @@ import graft.functions.MomentsDeclarativeAgg.stats_agg_fast
   * default binning axes are regular `arange`s); irregular axes fall back
   * to a crafted CASE chain.
   */
-
-/** Shared: expand the codegen'd moments struct into the reference's
-  * descriptive-statistics columns (variance/std/skewness/kurtosis from
-  * m2..m4, `descriptive_statistics.hpp:113-150`).
-  */
-private[operators] object BinningColumns {
-  def statsColumns(st: Column): Seq[Column] = {
-    val sumW = st.getField("sum_of_weights")
-    val m2 = st.getField("m2")
-    val m3 = st.getField("m3")
-    val m4 = st.getField("m4")
-    val variance = when(sumW > 0, m2 / sumW).otherwise(lit(Double.NaN))
-    Seq(
-      st.getField("count").as("count"),
-      sumW.as("sum_of_weights"),
-      st.getField("mean").as("mean"),
-      st.getField("min").as("min"),
-      st.getField("max").as("max"),
-      st.getField("sum").as("sum"),
-      variance.as("variance"),
-      sqrt(variance).as("std"),
-      when(m2 =!= 0.0, sqrt(sumW) * m3 / pow(m2, 1.5))
-        .otherwise(lit(Double.NaN)).as("skewness"),
-      when(m2 =!= 0.0, sumW * m4 / (m2 * m2) - 3.0)
-        .otherwise(lit(Double.NaN)).as("kurtosis"))
-  }
-}
 
 final class Binning2D(xAxis: Axis, yAxis: Axis) extends Serializable {
 
@@ -102,11 +75,11 @@ final class Binning2D(xAxis: Axis, yAxis: Axis) extends Serializable {
       .groupBy(
         binIndex(xAxis, x).as("ix"),
         binIndex(yAxis, y).as("iy"))
-      .agg(stats_agg_fast(z, lit(1.0)).as("stats"))
-      .select(Seq(col("ix"), col("iy"),
+      .agg(stats_agg(z, lit(1.0)).as("stats"))
+      .select(col("ix"), col("iy"),
         (lit(xAxis.front) + col("ix") * lit(xAxis.step)).as("x"),
-        (lit(yAxis.front) + col("iy") * lit(yAxis.step)).as("y")) ++
-        BinningColumns.statsColumns(col("stats")): _*)
+        (lit(yAxis.front) + col("iy") * lit(yAxis.step)).as("y"),
+        col("stats.*"))
   }
 
   /** Linear-binning: explode each sample into <=4 (bin, weight) rows with
@@ -155,11 +128,11 @@ final class Binning2D(xAxis: Axis, yAxis: Axis) extends Serializable {
 
     exploded
       .groupBy(col("b.ix").as("ix"), col("b.iy").as("iy"))
-      .agg(stats_agg_fast(col("z"), col("b.w")).as("stats"))
-      .select(Seq(col("ix"), col("iy"),
+      .agg(stats_agg(col("z"), col("b.w")).as("stats"))
+      .select(col("ix"), col("iy"),
         (lit(xAxis.front) + col("ix") * lit(xAxis.step)).as("x"),
-        (lit(yAxis.front) + col("iy") * lit(yAxis.step)).as("y")) ++
-        BinningColumns.statsColumns(col("stats")): _*)
+        (lit(yAxis.front) + col("iy") * lit(yAxis.step)).as("y"),
+        col("stats.*"))
   }
 
   /** Geographic (spheroid) linear binning — the reference's wgs branch
@@ -219,11 +192,11 @@ final class Binning2D(xAxis: Axis, yAxis: Axis) extends Serializable {
       .filter(abs(col("b.w")) > lit(1e-12))
     exploded
       .groupBy(col("b.ix").as("ix"), col("b.iy").as("iy"))
-      .agg(stats_agg_fast(col("z"), col("b.w")).as("stats"))
-      .select(Seq(col("ix"), col("iy"),
+      .agg(stats_agg(col("z"), col("b.w")).as("stats"))
+      .select(col("ix"), col("iy"),
         (lit(xAxis.front) + col("ix") * lit(xAxis.step)).as("x"),
-        (lit(yAxis.front) + col("iy") * lit(yAxis.step)).as("y")) ++
-        BinningColumns.statsColumns(col("stats")): _*)
+        (lit(yAxis.front) + col("iy") * lit(yAxis.step)).as("y"),
+        col("stats.*"))
   }
 }
 
@@ -241,9 +214,9 @@ final class Binning1D(axis: Axis, range: Option[(Double, Double)] = None)
     filtered
       .filter(!isnan(z) && z.isNotNull)
       .groupBy(b2.binIndex(axis, x).as("ix"))
-      .agg(stats_agg_fast(z, weight).as("stats"))
-      .select(Seq(col("ix"),
-        (lit(axis.front) + col("ix") * lit(axis.step)).as("x")) ++
-        BinningColumns.statsColumns(col("stats")): _*)
+      .agg(stats_agg(z, weight).as("stats"))
+      .select(col("ix"),
+        (lit(axis.front) + col("ix") * lit(axis.step)).as("x"),
+        col("stats.*"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GeoHash, Geodesy, KdTree}
 
@@ -68,9 +69,15 @@ object KnnJoin {
       maxBroadcastRows: Long = 4000000L)
 
   case class BuildRow(cell: Long, cx: Double, cy: Double, cz: Double,
-                      value: Double, id: Long)
+                      value: Double, id: Long) {
+    def point(dims: Int): Array[Double] =
+      if (dims == 3) Array(cx, cy, cz) else Array(cx, cy)
+  }
   case class ProbeRow(cell: Long, qid: Long, cx: Double, cy: Double,
-                      cz: Double)
+                      cz: Double) {
+    def point(dims: Int): Array[Double] =
+      if (dims == 3) Array(cx, cy, cz) else Array(cx, cy)
+  }
   /** `exact` is the shuffle path's self-check (SURVEY §7.4): true when
     * the k-th neighbor ball provably fits inside the probe's 3x3 cell
     * block, so the block-local answer equals the global answer; always
@@ -81,16 +88,11 @@ object KnnJoin {
                           values: Array[Double], ids: Array[Long], n: Int,
                           exact: Boolean)
 
-  /** Core: neighbors per probe point.
-    *
-    * @param build DataFrame with columns (x, y, value, id); x/y are
-    *              lon/lat when geodetic
-    * @param probe DataFrame with columns (qid, x, y)
-    * @return Dataset[KnnNeighbors]
+  /** Typed build side, ECEF when geodetic; cell-encoded at `prec` for the
+    * shuffle path only (the broadcast path uses no cell and leaves it 0).
     */
-  /** Typed build side: cell-encoded at `prec`, ECEF when geodetic. */
   private def toBuildTyped(spark: SparkSession, build: DataFrame,
-      geodetic: Boolean, prec: Int): Dataset[BuildRow] = {
+      geodetic: Boolean, prec: Option[Int]): Dataset[BuildRow] = {
     import spark.implicits._
     build
       .select(col("x").cast("double"), col("y").cast("double"),
@@ -99,12 +101,12 @@ object KnnJoin {
       .map { case (x, y, v, id) =>
         val (cx, cy, cz) =
           if (geodetic) Geodesy.llaToEcef(x, y, 0.0) else (x, y, 0.0)
-        BuildRow(GeoHash.encode(x, y, prec), cx, cy, cz, v, id)
+        BuildRow(prec.fold(0L)(GeoHash.encode(x, y, _)), cx, cy, cz, v, id)
       }
   }
 
   private def toProbeTyped(spark: SparkSession, probe: DataFrame,
-      geodetic: Boolean, prec: Int): Dataset[ProbeRow] = {
+      geodetic: Boolean, prec: Option[Int]): Dataset[ProbeRow] = {
     import spark.implicits._
     probe
       .select(col("qid").cast("long"), col("x").cast("double"),
@@ -113,47 +115,22 @@ object KnnJoin {
       .map { case (qid, x, y) =>
         val (cx, cy, cz) =
           if (geodetic) Geodesy.llaToEcef(x, y, 0.0) else (x, y, 0.0)
-        ProbeRow(GeoHash.encode(x, y, prec), qid, cx, cy, cz)
+        ProbeRow(prec.fold(0L)(GeoHash.encode(x, y, _)), qid, cx, cy, cz)
       }
-  }
-
-  /** Build rows keyed by every salted cell of their 3x3 block (the border-
-    * replication that makes block-local answers globally correct).
-    */
-  private def replicateSalted(spark: SparkSession, buildTyped: Dataset[BuildRow],
-      prec: Int, salt: Int): Dataset[(Long, BuildRow)] = {
-    import spark.implicits._
-    buildTyped.flatMap { b =>
-      val nbrs = GeoHash.neighbors(b.cell, prec)
-      (Iterator.single(b) ++ nbrs.iterator.map(c => b.copy(cell = c)))
-        .flatMap { r =>
-          (0 until salt).iterator.map(s => (r.cell * salt + s, r))
-        }
-    }
-  }
-
-  private def saltProbes(spark: SparkSession, probeTyped: Dataset[ProbeRow],
-      salt: Int): Dataset[(Long, ProbeRow)] = {
-    import spark.implicits._
-    probeTyped.map { p =>
-      val s = if (salt == 1) 0 else (p.qid % salt).toInt
-      (p.cell * salt + s, p)
-    }
   }
 
   /** Broadcast-vs-shuffle choice WITHOUT a counting scan: thresholds 0 /
     * Long.MaxValue force a path outright; otherwise the decision uses
-    * Catalyst's optimizer size estimate (file statistics — no job), at a
-    * conservative ~32 bytes per (x, y, value, id) row. A full `count()`
-    * here would read the entire 100-TB build side before any work.
+    * Catalyst's optimizer size estimate (file statistics — no job) at the
+    * caller's conservative bytes per build row. A full `count()` here
+    * would read the entire 100-TB build side before any work.
     */
-  private def useBroadcast(build: DataFrame, cfg: Config): Boolean =
-    if (cfg.broadcastThreshold <= 0L) false
-    else if (cfg.broadcastThreshold == Long.MaxValue) true
-    else {
-      val bytes = build.queryExecution.optimizedPlan.stats.sizeInBytes
-      bytes <= BigInt(cfg.broadcastThreshold) * 32
-    }
+  private def useBroadcast(build: DataFrame, threshold: Long,
+      bytesPerRow: Int): Boolean =
+    if (threshold <= 0L) false
+    else if (threshold == Long.MaxValue) true
+    else build.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(threshold) * bytesPerRow
 
   /** Hard safety cap behind the no-scan estimate: collect at most cap+1
     * rows. If the limit is hit the estimate undershot (post-filter
@@ -171,73 +148,114 @@ object KnnJoin {
     if (n > lim) None else Some(ds.limit(lim + 1).collect())
   }
 
+  /** How a face cuts space into blocks for the shuffle path: its typed
+    * rows, the unsalted cell keys of each build row's block cover (its own
+    * cell and the neighbours whose probes may need it), and each probe's
+    * cell and id (the id picks the probe's salt bucket).
+    */
+  private[operators] final case class Blocks[B, P](build: Dataset[B],
+      probe: Dataset[P], cells: B => Iterator[Long], cell: P => Long,
+      qid: P => Long)
+
+  /** The search every kNN face runs on. Below the size gate the whole
+    * build side is collected (capped), indexed once and broadcast; every
+    * probe partition answers against it. Otherwise build rows are
+    * replicated to their block cover, both sides are salted (see
+    * [[Config]] `saltFactor`) and cogrouped by salted cell, and each block
+    * indexes its build rows and answers its probes. `answer` gets the
+    * index, the probe and whether the index is block-local (the shuffle
+    * path), where exactness is not guaranteed.
+    */
+  private[operators] def blockSearch[B: Encoder, P: Encoder: ClassTag,
+      O: Encoder, I: ClassTag](spark: SparkSession, build: DataFrame,
+      threshold: Long, bytesPerRow: Int, maxRows: Long, saltFactor: Int)(
+      broadcastRows: => (Dataset[B], Dataset[P]), blocks: => Blocks[B, P],
+      index: Iterator[B] => I,
+      answer: (I, P, Boolean) => Iterator[O]): Dataset[O] = {
+    val small =
+      if (!useBroadcast(build, threshold, bytesPerRow)) None
+      else {
+        val (b, p) = broadcastRows
+        collectCapped(b, maxRows).map(pts => (pts, p))
+      }
+    small match {
+      case Some((pts, probes)) =>
+        val bc = spark.sparkContext.broadcast(index(pts.iterator))
+        probes.mapPartitions { it =>
+          val ix = bc.value
+          it.flatMap(answer(ix, _, false))
+        }
+      case None =>
+        val bl = blocks
+        val (cells, cell, qid) = (bl.cells, bl.cell, bl.qid)
+        val salt = math.max(1, saltFactor)
+        implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+        implicit val keyedB: Encoder[(Long, B)] =
+          Encoders.tuple(longEnc, implicitly[Encoder[B]])
+        implicit val keyedP: Encoder[(Long, P)] =
+          Encoders.tuple(longEnc, implicitly[Encoder[P]])
+        val keyedBuild = bl.build.flatMap { b =>
+          cells(b).flatMap(c =>
+            (0 until salt).iterator.map(s => (c * salt + s, b)))
+        }
+        val keyedProbe = bl.probe.map { p =>
+          (cell(p) * salt + (if (salt == 1) 0L else qid(p) % salt), p)
+        }
+        keyedBuild.groupByKey(_._1)
+          .cogroup(keyedProbe.groupByKey(_._1)) { (_, bIt, pIt) =>
+            val probes = pIt.map(_._2).toArray
+            if (probes.isEmpty) Iterator.empty
+            else {
+              val ix = index(bIt.map(_._2))
+              probes.iterator.flatMap(answer(ix, _, true))
+            }
+          }
+    }
+  }
+
+  /** [[blockSearch]] for the 2-/3-D faces: a k-d tree over the build
+    * points (ECEF when geodetic), blocks of 3x3 cells at `prec`, which is
+    * evaluated only when the shuffle path runs.
+    */
+  private def search2D[O: Encoder](spark: SparkSession, build: DataFrame,
+      probe: DataFrame, cfg: Config, prec: => Int)(
+      answer: (KdTree, ProbeRow, Boolean) => Iterator[O]): Dataset[O] = {
+    import spark.implicits._
+    val geodetic = cfg.geodetic
+    val dims = if (geodetic) 3 else 2
+    blockSearch[BuildRow, ProbeRow, O, KdTree](spark, build,
+      cfg.broadcastThreshold, 32, cfg.maxBroadcastRows, cfg.saltFactor)(
+      (toBuildTyped(spark, build, geodetic, None),
+        toProbeTyped(spark, probe, geodetic, None)), {
+        val p = prec
+        Blocks[BuildRow, ProbeRow](
+          toBuildTyped(spark, build, geodetic, Some(p)),
+          toProbeTyped(spark, probe, geodetic, Some(p)),
+          b => Iterator.single(b.cell) ++ GeoHash.neighbors(b.cell, p).iterator,
+          _.cell, _.qid)
+      },
+      it => KdTree.build(it.map(b => (b.point(dims), b.value, b.id)), dims),
+      answer)
+  }
+
+  /** Core: neighbors per probe point.
+    *
+    * @param build DataFrame with columns (x, y, value, id); x/y are
+    *              lon/lat when geodetic
+    * @param probe DataFrame with columns (qid, x, y)
+    * @return Dataset[KnnNeighbors]
+    */
   def neighbors(spark: SparkSession, build: DataFrame, probe: DataFrame,
                 cfg: Config): Dataset[KnnNeighbors] = {
     import spark.implicits._
     val dims = if (cfg.geodetic) 3 else 2
-    val geodetic = cfg.geodetic
-    val prec = cfg.precision
-
-    val buildTyped = toBuildTyped(spark, build, geodetic, prec)
-    val probeTyped = toProbeTyped(spark, probe, geodetic, prec)
-
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(buildTyped, cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      // broadcast path: zero shuffle, every partition probes a shared tree
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map { b =>
-        (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-          b.value, b.id)
-      }, dims)
-      val bc = spark.sparkContext.broadcast(tree)
-      val k = cfg.k
-      val radius = cfg.radius
-      probeTyped.mapPartitions { iter =>
-        val t = bc.value
-        iter.map { p =>
-          val q = if (dims == 3) Array(p.cx, p.cy, p.cz) else Array(p.cx, p.cy)
-          val res = t.query(q, k, radius)
-          KnnNeighbors(p.qid, res.map(_._1), res.map(_._2), res.map(_._3),
-            res.length, exact = true)
-        }
-      }
-    } else {
-      // shuffle path: build replicated to 3x3 neighborhood, cogroup by
-      // (cell, salt); salting splits hot cells across saltFactor tasks
-      val k = cfg.k
-      val radius = cfg.radius
-      val salt = math.max(1, cfg.saltFactor)
-      val replicated = replicateSalted(spark, buildTyped, prec, salt)
-      val saltedProbe = saltProbes(spark, probeTyped, salt)
-      replicated.groupByKey(_._1)
-        .cogroup(saltedProbe.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val bIter = bIt.map(_._2)
-          val pIter = pIt.map(_._2)
-          val probes = pIter.toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val tree = KdTree.build(bIter.map { b =>
-              (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-                b.value, b.id)
-            }, dims)
-            if (tree.size == 0)
-              probes.iterator.map(p => KnnNeighbors(p.qid,
-                Array.empty, Array.empty, Array.empty, 0, exact = false))
-            else probes.iterator.map { p =>
-              val q = if (dims == 3) Array(p.cx, p.cy, p.cz)
-                else Array(p.cx, p.cy)
-              val res = tree.query(q, k, radius)
-              val isExact = res.length >= k &&
-                KnnJoin.ballInsideBlock(p, res(res.length - 1)._1, prec,
-                  geodetic, salt)
-              KnnNeighbors(p.qid, res.map(_._1), res.map(_._2),
-                res.map(_._3), res.length, isExact)
-            }
-          }
-        }
+    val (k, radius, prec, geodetic) =
+      (cfg.k, cfg.radius, cfg.precision, cfg.geodetic)
+    search2D(spark, build, probe, cfg, prec) { (tree, p, blockLocal) =>
+      val res = tree.query(p.point(dims), k, radius)
+      Iterator.single(KnnNeighbors(p.qid, res.map(_._1), res.map(_._2),
+        res.map(_._3), res.length, exact = !blockLocal || res.length >= k &&
+          ballInsideBlock(p, res(res.length - 1)._1, prec, geodetic)))
     }
   }
 
@@ -247,8 +265,8 @@ object KnnJoin {
     * margins with a safety factor.
     */
   private[operators] def ballInsideBlock(p: ProbeRow, dK: Double,
-      precision: Int, geodetic: Boolean, salt: Int): Boolean = {
-    // p.cell carries the original (unsalted) cell id
+      precision: Int, geodetic: Boolean): Boolean = {
+    // p.cell is the probe's own (unsalted) cell
     val (x0, y0, x1, y1) = GeoHash.boundingBox(p.cell, precision)
     val (lonErr, latErr) = GeoHash.errorWithPrecision(precision)
     val bx0 = x0 - lonErr
@@ -291,60 +309,12 @@ object KnnJoin {
                    maxAbsLat: Double = 80.0): DataFrame = {
     import spark.implicits._
     val dims = if (cfg.geodetic) 3 else 2
-    val geodetic = cfg.geodetic
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(build
-          .select(col("x").cast("double"), col("y").cast("double"),
-            col("value").cast("double"), col("id").cast("long"))
-          .as[(Double, Double, Double, Long)], cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map { case (x, y, v, id) =>
-        (if (geodetic) { val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0)
-          Array(a, b, c) } else Array(x, y), v, id)
-      }, dims)
-      val bc = spark.sparkContext.broadcast(tree)
-      probe.select(col("qid").cast("long"), col("x").cast("double"),
-          col("y").cast("double"))
-        .as[(Long, Double, Double)]
-        .flatMap { case (qid, x, y) =>
-          val q = if (geodetic) {
-            val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0); Array(a, b, c)
-          } else Array(x, y)
-          bc.value.queryBall(q, radius).iterator
-            .map(r => (qid, r._3, r._1, r._2))
-        }
-        .toDF("qid", "nid", "dist", "value")
-    } else {
-      val prec = radiusSafePrecision(radius, cfg.precision, geodetic,
-        maxAbsLat)
-      val salt = math.max(1, cfg.saltFactor)
-      val replicated = replicateSalted(spark,
-        toBuildTyped(spark, build, geodetic, prec), prec, salt)
-      val saltedProbe = saltProbes(spark,
-        toProbeTyped(spark, probe, geodetic, prec), salt)
-      replicated.groupByKey(_._1)
-        .cogroup(saltedProbe.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val probes = pIt.map(_._2).toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val tree = KdTree.build(bIt.map(_._2).map { b =>
-              (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-                b.value, b.id)
-            }, dims)
-            if (tree.size == 0) Iterator.empty
-            else probes.iterator.flatMap { p =>
-              val q = if (dims == 3) Array(p.cx, p.cy, p.cz)
-                else Array(p.cx, p.cy)
-              tree.queryBall(q, radius).iterator
-                .map(r => (p.qid, r._3, r._1, r._2))
-            }
-          }
-        }
-        .toDF("qid", "nid", "dist", "value")
-    }
+    search2D(spark, build, probe, cfg,
+        radiusSafePrecision(radius, cfg.precision, cfg.geodetic, maxAbsLat)) {
+      (tree, p, _) =>
+        tree.queryBall(p.point(dims), radius).iterator
+          .map(r => (p.qid, r._3, r._1, r._2))
+    }.toDF("qid", "nid", "dist", "value")
   }
 
   /** Coarsest-enough precision so a `radius` ball around any probe point
@@ -575,76 +545,22 @@ object KnnJoin {
                            coords: Array[Array[Double]],
                            values: Array[Double], exact: Boolean)
 
-  /** kNN with neighbor coordinates: broadcast tree when the build side is
-    * small, else the same 3x3-replicated cell cogroup as [[neighbors]]
-    * (the coordinates ride the existing shuffle — nothing is collected).
+  /** kNN with neighbor coordinates, on the same search as [[neighbors]]
+    * (on the shuffle path the coordinates ride the existing shuffle —
+    * nothing is collected).
     */
   private def neighborsWithCoords(spark: SparkSession, build: DataFrame,
       probe: DataFrame, cfg: Config): Dataset[NbrWithCoords] = {
     import spark.implicits._
     val dims = if (cfg.geodetic) 3 else 2
-    val geodetic = cfg.geodetic
-    val prec = cfg.precision
-    val k = cfg.k
-    val radius = cfg.radius
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(build
-          .select(col("x").cast("double"), col("y").cast("double"),
-            col("value").cast("double"), col("id").cast("long"))
-          .as[(Double, Double, Double, Long)], cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map { case (x, y, v, id) =>
-        (if (geodetic) { val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0)
-          Array(a, b, c) } else Array(x, y), v, id)
-      }, dims)
-      val bc = spark.sparkContext.broadcast(tree)
-      probe.select(col("qid").cast("long"), col("x").cast("double"),
-          col("y").cast("double"))
-        .as[(Long, Double, Double)]
-        .mapPartitions { iter =>
-          val t = bc.value
-          iter.map { case (qid, x, y) =>
-            val q = if (geodetic) {
-              val (a, b, c) = Geodesy.llaToEcef(x, y, 0.0); Array(a, b, c)
-            } else Array(x, y)
-            val res = t.queryWithCoords(q, k, radius)
-            NbrWithCoords(qid, q, res.map(_._4), res.map(_._2), exact = true)
-          }
-        }
-    } else {
-      val salt = math.max(1, cfg.saltFactor)
-      val replicated = replicateSalted(spark,
-        toBuildTyped(spark, build, geodetic, prec), prec, salt)
-      val saltedProbe = saltProbes(spark,
-        toProbeTyped(spark, probe, geodetic, prec), salt)
-      replicated.groupByKey(_._1)
-        .cogroup(saltedProbe.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val probes = pIt.map(_._2).toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val tree = KdTree.build(bIt.map(_._2).map { b =>
-              (if (dims == 3) Array(b.cx, b.cy, b.cz) else Array(b.cx, b.cy),
-                b.value, b.id)
-            }, dims)
-            probes.iterator.map { p =>
-              val q = if (dims == 3) Array(p.cx, p.cy, p.cz)
-                else Array(p.cx, p.cy)
-              if (tree.size == 0)
-                NbrWithCoords(p.qid, q, Array.empty, Array.empty,
-                  exact = false)
-              else {
-                val res = tree.queryWithCoords(q, k, radius)
-                val isExact = res.length >= k &&
-                  ballInsideBlock(p, res(res.length - 1)._1, prec, geodetic,
-                    salt)
-                NbrWithCoords(p.qid, q, res.map(_._4), res.map(_._2), isExact)
-              }
-            }
-          }
-        }
+    val (k, radius, prec, geodetic) =
+      (cfg.k, cfg.radius, cfg.precision, cfg.geodetic)
+    search2D(spark, build, probe, cfg, prec) { (tree, p, blockLocal) =>
+      val q = p.point(dims)
+      val res = tree.queryWithCoords(q, k, radius)
+      Iterator.single(NbrWithCoords(p.qid, q, res.map(_._4), res.map(_._2),
+        exact = !blockLocal || res.length >= k &&
+          ballInsideBlock(p, res(res.length - 1)._1, prec, geodetic)))
     }
   }
 }

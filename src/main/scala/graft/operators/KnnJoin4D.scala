@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.KdTree
 
@@ -24,7 +24,7 @@ object KnnJoin4D {
     * estimate at ~48 B/row (no counting scan); `maxBroadcastRows` is the
     * HARD collect-time cap — when the estimate undershoots, the limited
     * collect detects it and the call falls over to the shuffle path
-    * (same safety contract as [[KnnJoin.Config]]).
+    * (the gate and cap of [[KnnJoin.blockSearch]], shared by every face).
     */
   final case class Config4(
       k: Int = 8,
@@ -34,179 +34,77 @@ object KnnJoin4D {
       saltFactor: Int = 1,
       maxBroadcastRows: Long = 4000000L)
 
-  private def collectCapped[T](ds: org.apache.spark.sql.Dataset[T],
-      cap: Long): Option[Array[T]] = {
-    val lim = math.min(cap, Int.MaxValue.toLong - 2L).toInt
-    val a = ds.limit(lim + 1).collect()
-    if (a.length > lim) None else Some(a)
-  }
+  case class B4(c: Array[Double], value: Double, sigma2: Double, id: Long)
+  case class P4(qid: Long, c: Array[Double])
 
-  case class B4(key: Long, c: Array[Double], value: Double,
-                        sigma2: Double, id: Long)
-  case class P4(key: Long, qid: Long, c: Array[Double])
-
+  /** Unsalted key of the (x1, x2) grid cell `(dx, dy)` cells away. */
   private def cellKey(x1: Double, x2: Double, cs: Double, dx: Int,
-                      dy: Int, salt: Int, s: Int): Long = {
+                      dy: Int): Long = {
     val ix = math.floor(x1 / cs).toLong + dx
     val iy = math.floor(x2 / cs).toLong + dy
-    ((ix * 2097169L + iy) * 2097169L) * salt + s
+    (ix * 2097169L + iy) * 2097169L
   }
 
-  private def useBroadcast(build: DataFrame, cfg: Config4): Boolean =
-    if (cfg.broadcastThreshold <= 0L) false
-    else if (cfg.broadcastThreshold == Long.MaxValue) true
-    else build.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(cfg.broadcastThreshold) * 48
+  /** [[KnnJoin.blockSearch]] for the 4-D faces: a k-d tree over all four
+    * axes plus each observation's sigma2 by id, blocks of 3x3 (x1, x2)
+    * cells at `cellSize`.
+    */
+  private def search[O: Encoder](spark: SparkSession, build: DataFrame,
+      probe: DataFrame, cfg: Config4)(
+      answer: (KdTree, Map[Long, Double], P4) => Iterator[O]): Dataset[O] = {
+    import spark.implicits._
+    val cs = cfg.cellSize
+    val b4 = build.select(col("x1").cast("double"),
+        col("x2").cast("double"), col("x3").cast("double"),
+        col("x4").cast("double"), col("value").cast("double"),
+        col("sigma2").cast("double"), col("id").cast("long"))
+      .as[(Double, Double, Double, Double, Double, Double, Long)]
+      .map { case (a, b, c, d, v, s, id) => B4(Array(a, b, c, d), v, s, id) }
+    val p4 = probe.select(col("qid").cast("long"),
+        col("x1").cast("double"), col("x2").cast("double"),
+        col("x3").cast("double"), col("x4").cast("double"))
+      .as[(Long, Double, Double, Double, Double)]
+      .map { case (qid, a, b, c, d) => P4(qid, Array(a, b, c, d)) }
+    KnnJoin.blockSearch[B4, P4, O, (KdTree, Map[Long, Double])](spark, build,
+      cfg.broadcastThreshold, 48, cfg.maxBroadcastRows, cfg.saltFactor)(
+      (b4, p4),
+      KnnJoin.Blocks[B4, P4](b4, p4,
+        b => for (dx <- Iterator.range(-1, 2); dy <- Iterator.range(-1, 2))
+          yield cellKey(b.c(0), b.c(1), cs, dx, dy),
+        p => cellKey(p.c(0), p.c(1), cs, 0, 0), _.qid),
+      it => {
+        val rows = it.toArray
+        (KdTree.build(rows.iterator.map(r => (r.c, r.value, r.id)), 4),
+          rows.map(r => r.id -> r.sigma2).toMap)
+      },
+      { case ((tree, sigma), p, _) => answer(tree, sigma, p) })
+  }
 
   /** Flat kNN rows (qid, nid, dist, value, sigma2, rank). */
   def knnJoinFlat(spark: SparkSession, build: DataFrame, probe: DataFrame,
                   cfg: Config4): DataFrame = {
     import spark.implicits._
-    val k = cfg.k
-    val radius = cfg.radius
-    val cs = cfg.cellSize
-    val salt = math.max(1, cfg.saltFactor)
-    val buildTyped = build.select(col("x1").cast("double"),
-        col("x2").cast("double"), col("x3").cast("double"),
-        col("x4").cast("double"), col("value").cast("double"),
-        col("sigma2").cast("double"), col("id").cast("long"))
-      .as[(Double, Double, Double, Double, Double, Double, Long)]
-    val probeTyped = probe.select(col("qid").cast("long"),
-        col("x1").cast("double"), col("x2").cast("double"),
-        col("x3").cast("double"), col("x4").cast("double"))
-      .as[(Long, Double, Double, Double, Double)]
-
-    // sigma2 rides as the second payload via id-indexed lookup arrays in
-    // the broadcast path and inside B4 on the shuffle path
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(buildTyped, cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map(p =>
-        (Array(p._1, p._2, p._3, p._4), p._5, p._7)), 4)
-      val sigmaById = pts.map(p => p._7 -> p._6).toMap
-      val bc = spark.sparkContext.broadcast((tree, sigmaById))
-      probeTyped.flatMap { case (qid, a, b, c, d) =>
-        val (t, sig) = bc.value
-        t.query(Array(a, b, c, d), k, radius).iterator.zipWithIndex.map {
-          case ((dist, v, id), i) => (qid, id, dist, v, sig(id), i + 1)
-        }
-      }.toDF("qid", "nid", "dist", "value", "sigma2", "rank")
-    } else {
-      val replicated = buildTyped.flatMap { p =>
-        for {
-          dx <- -1 to 1
-          dy <- -1 to 1
-          s <- 0 until salt
-        } yield (cellKey(p._1, p._2, cs, dx, dy, salt, s),
-          B4(0L, Array(p._1, p._2, p._3, p._4), p._5, p._6, p._7))
+    val (k, radius) = (cfg.k, cfg.radius)
+    search(spark, build, probe, cfg) { (tree, sigma, p) =>
+      tree.query(p.c, k, radius).iterator.zipWithIndex.map {
+        case ((dist, v, id), i) => (p.qid, id, dist, v, sigma(id), i + 1)
       }
-      val salted = probeTyped.map { case (qid, a, b, c, d) =>
-        val s = if (salt == 1) 0 else (qid % salt).toInt
-        (cellKey(a, b, cs, 0, 0, salt, s), P4(0L, qid, Array(a, b, c, d)))
-      }
-      replicated.groupByKey(_._1)
-        .cogroup(salted.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val probes = pIt.map(_._2).toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val rows = bIt.map(_._2).toArray
-            if (rows.isEmpty) Iterator.empty
-            else {
-              val tree = KdTree.build(rows.iterator.map(r =>
-                (r.c, r.value, r.id)), 4)
-              val sigmaById = rows.map(r => r.id -> r.sigma2).toMap
-              probes.iterator.flatMap { p =>
-                tree.query(p.c, k, radius).iterator.zipWithIndex.map {
-                  case ((dist, v, id), i) =>
-                    (p.qid, id, dist, v, sigmaById(id), i + 1)
-                }
-              }
-            }
-          }
-        }
-        .toDF("qid", "nid", "dist", "value", "sigma2", "rank")
-    }
+    }.toDF("qid", "nid", "dist", "value", "sigma2", "rank")
   }
 
   case class Nbr4(qid: Long, q: Array[Double],
                   coords: Array[Array[Double]], values: Array[Double],
                   sigmas: Array[Double])
 
-  /** Coordinate-carrying neighbors — broadcast OR cell-cogroup shuffle,
-    * chosen exactly like [[knnJoinFlat]] (nothing collects above the
-    * threshold).
-    */
+  /** Coordinate-carrying neighbors, on the same search as [[knnJoinFlat]]. */
   private def neighborsWithCoords(spark: SparkSession, build: DataFrame,
-      probe: DataFrame, cfg: Config4)
-      : org.apache.spark.sql.Dataset[Nbr4] = {
+      probe: DataFrame, cfg: Config4): Dataset[Nbr4] = {
     import spark.implicits._
-    val k = cfg.k
-    val radius = cfg.radius
-    val cs = cfg.cellSize
-    val salt = math.max(1, cfg.saltFactor)
-    val buildTyped = build.select(col("x1").cast("double"),
-        col("x2").cast("double"), col("x3").cast("double"),
-        col("x4").cast("double"), col("value").cast("double"),
-        col("sigma2").cast("double"), col("id").cast("long"))
-      .as[(Double, Double, Double, Double, Double, Double, Long)]
-    val probeTyped = probe.select(col("qid").cast("long"),
-        col("x1").cast("double"), col("x2").cast("double"),
-        col("x3").cast("double"), col("x4").cast("double"))
-      .as[(Long, Double, Double, Double, Double)]
-    val collected =
-      if (useBroadcast(build, cfg))
-        collectCapped(buildTyped, cfg.maxBroadcastRows)
-      else None
-    if (collected.isDefined) {
-      val pts = collected.get
-      val tree = KdTree.build(pts.iterator.map(p =>
-        (Array(p._1, p._2, p._3, p._4), p._5, p._7)), 4)
-      val byId = pts.map(p => p._7 -> p).toMap
-      val bc = spark.sparkContext.broadcast((tree, byId))
-      probeTyped.map { case (qid, a, b, c, d) =>
-        val (t, lookup) = bc.value
-        val q = Array(a, b, c, d)
-        val res = t.queryWithCoords(q, k, radius)
-        Nbr4(qid, q, res.map(_._4), res.map(_._2),
-          res.map(r => lookup(r._3)._6))
-      }
-    } else {
-      val replicated = buildTyped.flatMap { p =>
-        for {
-          dx <- -1 to 1
-          dy <- -1 to 1
-          s <- 0 until salt
-        } yield (cellKey(p._1, p._2, cs, dx, dy, salt, s),
-          B4(0L, Array(p._1, p._2, p._3, p._4), p._5, p._6, p._7))
-      }
-      val salted = probeTyped.map { case (qid, a, b, c, d) =>
-        val s = if (salt == 1) 0 else (qid % salt).toInt
-        (cellKey(a, b, cs, 0, 0, salt, s), P4(0L, qid, Array(a, b, c, d)))
-      }
-      replicated.groupByKey(_._1)
-        .cogroup(salted.groupByKey(_._1)) { (_, bIt, pIt) =>
-          val probes = pIt.map(_._2).toArray
-          if (probes.isEmpty) Iterator.empty
-          else {
-            val rows = bIt.map(_._2).toArray
-            if (rows.isEmpty)
-              probes.iterator.map(p => Nbr4(p.qid, p.c, Array.empty,
-                Array.empty, Array.empty))
-            else {
-              val tree = KdTree.build(rows.iterator.map(r =>
-                (r.c, r.value, r.id)), 4)
-              val sigmaById = rows.map(r => r.id -> r.sigma2).toMap
-              probes.iterator.map { p =>
-                val res = tree.queryWithCoords(p.c, k, radius)
-                Nbr4(p.qid, p.c, res.map(_._4), res.map(_._2),
-                  res.map(r => sigmaById(r._3)))
-              }
-            }
-          }
-        }
+    val (k, radius) = (cfg.k, cfg.radius)
+    search(spark, build, probe, cfg) { (tree, sigma, p) =>
+      val res = tree.queryWithCoords(p.c, k, radius)
+      Iterator.single(Nbr4(p.qid, p.c, res.map(_._4), res.map(_._2),
+        res.map(r => sigma(r._3))))
     }
   }
 

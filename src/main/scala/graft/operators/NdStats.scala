@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.MomentsDeclarativeAgg.stats_agg_fast
+import graft.functions.aggregators.stats_agg
 
 /** N-D reductions with `axis=` — the reference's
   * `DescriptiveStatistics(values, axis=(..))` over gridded data
@@ -29,8 +29,7 @@ object NdStats {
       if (keep.isEmpty) df.groupBy()
       else df.groupBy(keep.map(col): _*)
     grouped
-      .agg(stats_agg_fast(value, weight).as("stats"))
-      .select(keep.map(col) ++
-        BinningColumns.statsColumns(col("stats")): _*)
+      .agg(stats_agg(value, weight).as("stats"))
+      .select(keep.map(col) :+ col("stats.*"): _*)
   }
 }

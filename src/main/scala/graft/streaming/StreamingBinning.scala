@@ -9,7 +9,10 @@ import graft.functions.aggregators
   * `+=` fold, `/root/reference/pyinterp/dask.py:159-209`), so they drop
   * straight into `groupBy(window(ts), cell).agg(...)` — Spark maintains
   * the partial aggregation as streaming state and merges late rows with
-  * the same Pébay merge law used in batch.
+  * the same Pébay merge law used in batch. `stats_agg` is the codegen'd
+  * [[graft.functions.MomentsDeclarativeAgg]], so the state store holds
+  * its UnsafeRow buffers (9 moment slots per window and cell), not
+  * serialized objects.
   *
   * Late data policy (the reference has none — engine choice, documented):
   * event-time watermark `lateness`; rows later than that are dropped;

@@ -31,6 +31,18 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.split("HashAggregate").length >= 3, p)
     assert(!p.contains("ObjectHashAggregate"), p)
     assert(p.split("Exchange").length >= 2, p)
+
+    // stats_agg is the same declarative aggregate: codegen-capable
+    // HashAggregate, and the struct's fields read one aggregate whose
+    // buffer holds the 9 moment slots once
+    val moments = SparkEntry.queries("q_stats_moments")(spark, dir)
+    val mp = plan("q_stats_moments")
+    assert(mp.contains("HashAggregate") && !mp.contains("ObjectHashAggregate"), mp)
+    val aggs = moments.queryExecution.sparkPlan.collect {
+      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
+    }
+    assert(aggs.size == 2 && aggs.forall(a => a.aggregateExpressions.size == 1 &&
+      a.aggregateExpressions.head.aggregateFunction.aggBufferAttributes.size == 9), mp)
   }
 
   test("geohash expression stays inside whole-stage codegen") {

@@ -375,9 +375,18 @@ class PipJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     def pairs(df: DataFrame): Seq[(Long, Long)] =
       df.select("pid", "poly_id").as[(Long, Long)].collect().toSeq.sorted
     val (seededPolys, seededPts) = seededInput(17L)
+    // a 10x10 square whose hole leaves a 0.02-wide finger of polygon at
+    // x 5.10-5.12: the precision-20 cell around (5.11, 6.0) has its
+    // corners and centre in the hole, only the finger crosses it
+    val finger = Polygon2D(square.exterior, Array(Array((1.0, 1.0), (9.0, 1.0),
+      (9.0, 9.0), (5.12, 9.0), (5.12, 2.0), (5.10, 2.0), (5.10, 9.0), (1.0, 9.0))))
+    assert(finger.contains(5.11, 6.0))
+    val fingerPts = Seq((1L, 5.11, 6.0), (2L, 5.11, 3.0), (3L, 5.11, 8.5),
+      (4L, 5.10, 6.0), (5L, 3.0, 5.0), (6L, 0.5, 0.5)).toDF("pid", "x", "y")
     val inputs = Seq(
       (Seq((100L, square), (200L, triangle)), points()),
-      (seededPolys, seededPts.toDF("pid", "x", "y")))
+      (seededPolys, seededPts.toDF("pid", "x", "y")),
+      (Seq((300L, finger)), fingerPts))
     val sizes = for ((polys, pts) <- inputs; coveredBy <- Seq(false, true)) yield {
       val a = pairs(PipJoin.broadcastJoin(spark, pts, "x", "y", polys, coveredBy))
       val cells = PipJoin.cellJoin(spark, pts, "x", "y", polys, 20, coveredBy)

@@ -48,6 +48,15 @@ class ShuffleParitySpec extends AnyFunSuite {
     val dCap = KnnJoin.distanceJoin(spark, buildDf, probeDf, 2.0, capped)
     val dBc = KnnJoin.distanceJoin(spark, buildDf, probeDf, 2.0, bcCfg)
     assert(sortedRows(dCap) == sortedRows(dBc))
+    // every other face runs the same gate and cap
+    val faces = Seq[KnnJoin.Config => org.apache.spark.sql.DataFrame](
+      KnnJoin.windowFunction(spark, buildDf, probeDf, _),
+      KnnJoin.rbf(spark, buildDf, probeDf, _, kernel = "thin_plate"),
+      KnnJoin.kriging(spark, buildDf, probeDf, _, 1.0, 4.0, 0.0, "matern_32",
+        Some("linear")),
+      KnnJoin.optimalInterpolation(spark, buildDf, probeDf, _, sigma2 = 1.0,
+        lengthScales = Array(3.0, 3.0), obsSigma2 = 0.01))
+    faces.foreach(f => assert(sortedRows(f(capped)) == sortedRows(f(bcCfg))))
     // 4-D variant honors the same cap contract
     val b4 = (0 until 300).map(i => ((i % 12).toDouble,
       (i * 5 % 12).toDouble, (i * 7 % 6).toDouble, (i % 4).toDouble,
@@ -62,6 +71,9 @@ class ShuffleParitySpec extends AnyFunSuite {
     val rows4Cap = KnnJoin4D.knnJoinFlat(spark, b4, p4,
       cfg4.copy(maxBroadcastRows = 50L))
     assert(sortedRows(rows4Cap) == sortedRows(rows4Bc))
+    def oi4(cfg: KnnJoin4D.Config4) = sortedRows(KnnJoin4D.optimalInterpolation(
+      spark, b4, p4, cfg, sigma2Field = 1.0, lengthScales = Array(3.0, 3.0, 2.0, 1.0)))
+    assert(oi4(cfg4.copy(maxBroadcastRows = 50L)) == oi4(cfg4))
   }
 
   test("distanceJoin: shuffle path ≡ broadcast path row sets") {
