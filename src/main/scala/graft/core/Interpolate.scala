@@ -41,49 +41,10 @@ object Interpolate {
     * solves it with the Thomas algorithm.
     */
   def csplineCoefficients(xa: Array[Double], ya: Array[Double]): Array[Double] = {
-    val n = xa.length
-    val c = new Array[Double](n)
-    if (n < 3) return c
-    val m = n - 2
-    val diag = new Array[Double](m)
-    val sup = new Array[Double](m)
-    val sub = new Array[Double](m)
-    val rhs = new Array[Double](m)
-    var i = 0
-    while (i < m) {
-      val h0 = xa(i + 1) - xa(i)
-      val h1 = xa(i + 2) - xa(i + 1)
-      val y0 = ya(i + 1) - ya(i)
-      val y1 = ya(i + 2) - ya(i + 1)
-      val g0 = if (h0 != 0.0) 1.0 / h0 else 0.0
-      val g1 = if (h1 != 0.0) 1.0 / h1 else 0.0
-      sub(i) = h0
-      diag(i) = 2.0 * (h0 + h1)
-      sup(i) = h1
-      rhs(i) = 3.0 * Math.fma(y1, g1, -y0 * g0)
-      i += 1
-    }
-    // Thomas forward elimination + back substitution
-    val cp = new Array[Double](m)
-    val dp = new Array[Double](m)
-    var inv = 1.0 / diag(0)
-    cp(0) = sup(0) * inv
-    dp(0) = rhs(0) * inv
-    i = 1
-    while (i < m) {
-      val mlt = sub(i)
-      val invM = 1.0 / (diag(i) - mlt * cp(i - 1))
-      cp(i) = sup(i) * invM
-      dp(i) = Math.fma(-mlt, dp(i - 1), rhs(i)) * invM
-      i += 1
-    }
-    c(m) = dp(m - 1)
-    i = m - 1
-    while (i >= 1) {
-      c(i) = Math.fma(-cp(i - 1), c(i + 1), dp(i - 1))
-      i -= 1
-    }
-    c
+    val ws = new SplineWorkspace(xa.length)
+    csplineFactor(xa, ws)
+    csplineSolve(ya, ws)
+    ws.c
   }
 
   /** Evaluate the natural cubic spline fitted on (xa, ya) at x. */
@@ -107,52 +68,63 @@ object Interpolate {
   }
 
   /** Reusable scratch buffers for repeated spline solves on same-length
-    * axes (per-image derivative matrices do ~3n solves; reusing the
-    * workspace removes ~90% of the solver's allocation).
+    * axes. The natural-spline system depends on the node spacing only, so
+    * [[csplineFactor]] stores its Thomas forward sweep once per axis
+    * (`g` = 1/h per interval, `sub` = the sub-diagonal, `cp` and the pivot
+    * reciprocals `invM`) and [[csplineSolve]] reuses it for every value
+    * vector on that axis (the dense bicubic precompute solves 2·nx + ny
+    * systems per image against two factorizations).
     */
   final class SplineWorkspace(n: Int) {
     val c = new Array[Double](n)
     val m = math.max(1, n - 2)
-    val diag = new Array[Double](m)
-    val sup = new Array[Double](m)
+    val g = new Array[Double](m + 1)
     val sub = new Array[Double](m)
-    val rhs = new Array[Double](m)
     val cp = new Array[Double](m)
+    val invM = new Array[Double](m)
     val dp = new Array[Double](m)
   }
 
-  /** In-place natural-spline coefficient solve into ws.c (same math as
-    * [[csplineCoefficients]]).
+  /** Factor the natural-spline system of the nodes `xa` into `ws`: the
+    * value-independent half of the Thomas algorithm.
     */
-  def csplineCoefficientsInto(xa: Array[Double], ya: Array[Double],
-                              ws: SplineWorkspace): Unit = {
+  def csplineFactor(xa: Array[Double], ws: SplineWorkspace): Unit = {
     val n = xa.length
+    if (n < 3) return
+    val m = n - 2
+    var i = 0
+    while (i <= m) {
+      val h = xa(i + 1) - xa(i)
+      ws.g(i) = if (h != 0.0) 1.0 / h else 0.0
+      i += 1
+    }
+    i = 0
+    while (i < m) {
+      val h0 = xa(i + 1) - xa(i)
+      val h1 = xa(i + 2) - xa(i + 1)
+      val diag = 2.0 * (h0 + h1)
+      ws.sub(i) = h0
+      ws.invM(i) = 1.0 / (if (i == 0) diag else diag - h0 * ws.cp(i - 1))
+      ws.cp(i) = h1 * ws.invM(i)
+      i += 1
+    }
+  }
+
+  /** Solve the system factored by [[csplineFactor]] for the values `ya`
+    * (forward substitution + back substitution) into ws.c.
+    */
+  def csplineSolve(ya: Array[Double], ws: SplineWorkspace): Unit = {
+    val n = ya.length
     java.util.Arrays.fill(ws.c, 0.0)
     if (n < 3) return
     val m = n - 2
     var i = 0
     while (i < m) {
-      val h0 = xa(i + 1) - xa(i)
-      val h1 = xa(i + 2) - xa(i + 1)
       val y0 = ya(i + 1) - ya(i)
       val y1 = ya(i + 2) - ya(i + 1)
-      val g0 = if (h0 != 0.0) 1.0 / h0 else 0.0
-      val g1 = if (h1 != 0.0) 1.0 / h1 else 0.0
-      ws.sub(i) = h0
-      ws.diag(i) = 2.0 * (h0 + h1)
-      ws.sup(i) = h1
-      ws.rhs(i) = 3.0 * Math.fma(y1, g1, -y0 * g0)
-      i += 1
-    }
-    var inv = 1.0 / ws.diag(0)
-    ws.cp(0) = ws.sup(0) * inv
-    ws.dp(0) = ws.rhs(0) * inv
-    i = 1
-    while (i < m) {
-      val mlt = ws.sub(i)
-      val invM = 1.0 / (ws.diag(i) - mlt * ws.cp(i - 1))
-      ws.cp(i) = ws.sup(i) * invM
-      ws.dp(i) = Math.fma(-mlt, ws.dp(i - 1), ws.rhs(i)) * invM
+      val rhs = 3.0 * Math.fma(y1, ws.g(i + 1), -y0 * ws.g(i))
+      ws.dp(i) = (if (i == 0) rhs
+        else Math.fma(-ws.sub(i), ws.dp(i - 1), rhs)) * ws.invM(i)
       i += 1
     }
     ws.c(m) = ws.dp(m - 1)
@@ -164,8 +136,9 @@ object Interpolate {
   }
 
   /** Derivative at every node of the fitted spline, written into `out`,
-    * using a caller-provided workspace (allocation-free hot path for the
-    * dense bicubic precompute).
+    * using a caller-provided workspace that already holds
+    * [[csplineFactor]] of `xa` (allocation-free hot path for the dense
+    * bicubic precompute).
     */
   def csplineDerivativeAtNodesInto(xa: Array[Double], ya: Array[Double],
                                    ws: SplineWorkspace,
@@ -181,7 +154,7 @@ object Interpolate {
       }
       return
     }
-    csplineCoefficientsInto(xa, ya, ws)
+    csplineSolve(ya, ws)
     val cc = ws.c
     var k = 0
     while (k < n) {

@@ -30,16 +30,32 @@ object Kernels {
     GeoHash.neighbors(hash, precision)
 
   /** Polygon containment with a process-wide parse cache (polygon literals
-    * are tiny and few; parse once per executor, evaluate per row).
+    * are tiny and few; parse once per executor, evaluate per row). A
+    * polygon column can carry any number of distinct texts, so the cache
+    * holds at most [[PolyCacheCap]] polygons: an insert into a full cache
+    * first evicts one arbitrary entry. Hits stay lock-free; inserts
+    * serialize on the cache.
     */
+  private[functions] final val PolyCacheCap = 1024
+
   private val polyCache =
     new java.util.concurrent.ConcurrentHashMap[String, Polygon2D]()
 
+  private[functions] def polyCacheSize: Int = polyCache.size
+
   private def cachedPoly(s: String): Polygon2D = {
-    var p = polyCache.get(s)
-    if (p == null) {
-      p = Polygon2D.deserialize(s)
-      polyCache.putIfAbsent(s, p)
+    val hit = polyCache.get(s)
+    if (hit != null) return hit
+    val p = Polygon2D.deserialize(s)
+    polyCache.synchronized {
+      if (!polyCache.containsKey(s)) {
+        if (polyCache.size >= PolyCacheCap) {
+          val it = polyCache.keySet.iterator
+          it.next()
+          it.remove()
+        }
+        polyCache.put(s, p)
+      }
     }
     p
   }

@@ -95,9 +95,9 @@ object GridInterpolator {
       val g = bc.value
       val interp = new BivariateKernel(g, m, hw, bdy)
       iter.map { row =>
-        val x = row.getDouble(xIdx)
-        val y = row.getDouble(yIdx)
-        Row.fromSeq(row.toSeq :+ interp(x, y))
+        val v = if (row.isNullAt(xIdx) || row.isNullAt(yIdx)) Double.NaN
+          else interp(row.getDouble(xIdx), row.getDouble(yIdx))
+        Row.fromSeq(row.toSeq :+ v)
       }
     }(enc)
   }
@@ -613,11 +613,10 @@ object GridInterpolator {
       val interp = graft.core.Univariate1D(m)
       val ok = interp.fit(g.axis.values, g.values)
       iter.map { row =>
-        val x = row.getDouble(xIdx)
         val v =
-          if (!ok) Double.NaN
-          else if (deriv) interp.derivative(x)
-          else interp.value(x)
+          if (!ok || row.isNullAt(xIdx)) Double.NaN
+          else if (deriv) interp.derivative(row.getDouble(xIdx))
+          else interp.value(row.getDouble(xIdx))
         Row.fromSeq(row.toSeq :+ v)
       }
     }(enc)
@@ -667,23 +666,26 @@ object GridInterpolator {
         planes(k)
       }
       iter.map { row =>
-        val x = row.getDouble(xIdx)
-        val y = row.getDouble(yIdx)
-        val z = row.getDouble(zIdx)
-        val v = g.zAxis.findIndexes(z) match {
-          case None => Double.NaN
-          case Some((k0, k1)) =>
-            val z0 = g.zAxis(k0)
-            val z1 = g.zAxis(k1)
-            if (zm == "nearest") {
-              val k = if (math.abs(z - z0) <= math.abs(z1 - z)) k0 else k1
-              planeKernel(k)(x, y)
-            } else {
-              val v0 = planeKernel(k0)(x, y)
-              val v1 = planeKernel(k1)(x, y)
-              val t = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
-              v0 + t * (v1 - v0)
-            }
+        val v = if (row.isNullAt(xIdx) || row.isNullAt(yIdx) ||
+            row.isNullAt(zIdx)) Double.NaN else {
+          val x = row.getDouble(xIdx)
+          val y = row.getDouble(yIdx)
+          val z = row.getDouble(zIdx)
+          g.zAxis.findIndexes(z) match {
+            case None => Double.NaN
+            case Some((k0, k1)) =>
+              val z0 = g.zAxis(k0)
+              val z1 = g.zAxis(k1)
+              if (zm == "nearest") {
+                val k = if (math.abs(z - z0) <= math.abs(z1 - z)) k0 else k1
+                planeKernel(k)(x, y)
+              } else {
+                val v0 = planeKernel(k0)(x, y)
+                val v1 = planeKernel(k1)(x, y)
+                val t = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
+                v0 + t * (v1 - v0)
+              }
+          }
         }
         Row.fromSeq(row.toSeq :+ v)
       }
@@ -756,24 +758,27 @@ object QuadrivariateInterpolator {
             }
         }
       iter.map { row =>
-        val x = row.getDouble(xIdx)
-        val y = row.getDouble(yIdx)
-        val z = row.getDouble(zIdx)
-        val u = row.getDouble(uIdx)
-        val v = g.uAxis.findIndexes(u) match {
-          case None => Double.NaN
-          case Some((l0, l1)) =>
-            val u0 = g.uAxis(l0)
-            val u1 = g.uAxis(l1)
-            if (um == "nearest") {
-              val l = if (math.abs(u - u0) <= math.abs(u1 - u)) l0 else l1
-              alongZ(x, y, z, l)
-            } else {
-              val v0 = alongZ(x, y, z, l0)
-              val v1 = alongZ(x, y, z, l1)
-              val t = if (u1 == u0) 0.0 else (u - u0) / (u1 - u0)
-              v0 + t * (v1 - v0)
-            }
+        val v = if (row.isNullAt(xIdx) || row.isNullAt(yIdx) ||
+            row.isNullAt(zIdx) || row.isNullAt(uIdx)) Double.NaN else {
+          val x = row.getDouble(xIdx)
+          val y = row.getDouble(yIdx)
+          val z = row.getDouble(zIdx)
+          val u = row.getDouble(uIdx)
+          g.uAxis.findIndexes(u) match {
+            case None => Double.NaN
+            case Some((l0, l1)) =>
+              val u0 = g.uAxis(l0)
+              val u1 = g.uAxis(l1)
+              if (um == "nearest") {
+                val l = if (math.abs(u - u0) <= math.abs(u1 - u)) l0 else l1
+                alongZ(x, y, z, l)
+              } else {
+                val v0 = alongZ(x, y, z, l0)
+                val v1 = alongZ(x, y, z, l1)
+                val t = if (u1 == u0) 0.0 else (u - u0) / (u1 - u0)
+                v0 + t * (v1 - v0)
+              }
+          }
         }
         Row.fromSeq(row.toSeq :+ v)
       }

@@ -113,3 +113,35 @@ class AccessorTailSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(counts === Seq(3, 3, 4, 1, 0))
   }
 }
+
+class PolygonCacheSpec extends org.scalatest.funsuite.AnyFunSuite {
+  import org.apache.spark.unsafe.types.UTF8String
+  import graft.core.Polygon2D
+
+  test("the polygon parse cache stays within its cap; answers unchanged") {
+    // more distinct polygon texts than the cache holds: every answer must
+    // equal the uncached polygon's, and the cache never grows past the cap
+    val rng = new scala.util.Random(5)
+    val n = Kernels.PolyCacheCap + 300
+    for (k <- 0 until n) {
+      val (cx, cy, r) = (k * 0.5, rng.nextDouble() * 10, 1.0 + (k % 7))
+      val poly = Polygon2D(Array((cx - r, cy - r), (cx + r, cy - r),
+        (cx + r, cy + r), (cx - r, cy + r)),
+        Array(Array((cx - 0.2, cy - 0.2), (cx + 0.2, cy - 0.2),
+          (cx + 0.2, cy + 0.2), (cx - 0.2, cy + 0.2))))
+      val text = poly.serialize
+      val parsed = Polygon2D.deserialize(text)
+      val utf = UTF8String.fromString(text)
+      // a probe inside, on the hole boundary, in the hole, on the outer
+      // boundary and outside; the first visit parses, the rest are hits
+      for ((x, y) <- Seq((cx + 0.5, cy), (cx + 0.2, cy), (cx, cy),
+          (cx + r, cy), (cx + r + 1, cy))) {
+        assert(Kernels.stWithin(x, y, utf) === parsed.contains(x, y), s"$k")
+        assert(Kernels.stCoveredBy(x, y, utf) === parsed.coveredBy(x, y),
+          s"$k")
+      }
+      assert(Kernels.polyCacheSize <= Kernels.PolyCacheCap, s"$k")
+    }
+    assert(Kernels.polyCacheSize === Kernels.PolyCacheCap)
+  }
+}

@@ -679,28 +679,46 @@ class IngestionSpec extends AnyFunSuite {
 
   test("a null probe coordinate yields NaN on both table branches") {
     // the row survives with NaN on the regular (column-arithmetic) and
-    // irregular (broadcast-axis) branches, geometric 2-D and windowed 3-D
+    // irregular (broadcast-axis) table branches, geometric 2-D and
+    // windowed 3-D, and on the four broadcast kernels; probe k > 0 has
+    // its k-th coordinate null
     for (irregular <- Seq(false, true)) {
       val xc = if (irregular) 40.5 else 8.5
       val probes = Seq[(Long, Option[Double], Option[Double],
-          Option[Double])](
-        (0L, Some(xc), Some(8.5), Some(0.5)),
-        (1L, None, Some(8.5), Some(0.5)),
-        (2L, Some(xc), None, Some(0.5)),
-        (3L, Some(xc), Some(8.5), None)).toDF("qid", "x", "y", "zq")
-      for ((name, out) <- Seq(
-          "bivariateTable" -> GridInterpolator.bivariateTable(spark, probes,
-            "x", "y", lattice(2, irregular)),
-          "trivariateTableWindowed" -> GridInterpolator
+          Option[Double], Option[Double])](
+        (0L, Some(xc), Some(8.5), Some(0.5), Some(0.5)),
+        (1L, None, Some(8.5), Some(0.5), Some(0.5)),
+        (2L, Some(xc), None, Some(0.5), Some(0.5)),
+        (3L, Some(xc), Some(8.5), None, Some(0.5)),
+        (4L, Some(xc), Some(8.5), Some(0.5), None))
+        .toDF("qid", "x", "y", "zq", "uq")
+      val xs = if (irregular) Array.tabulate(12)(i => i * (i + 1) / 2.0)
+        else Array.tabulate(12)(_.toDouble)
+      val line = Grid1D(graft.core.Axis(xs),
+        xs.map(x => math.sin(x / 10.0)))
+      // (path, output, number of leading coordinates it reads)
+      for ((name, out, rank) <- Seq(
+          ("bivariateTable", GridInterpolator.bivariateTable(spark, probes,
+            "x", "y", lattice(2, irregular)), 2),
+          ("trivariateTableWindowed", GridInterpolator
             .trivariateTableWindowed(spark, probes, "x", "y", "zq",
-              lattice(3, irregular)))) {
+              lattice(3, irregular)), 3),
+          ("univariate", GridInterpolator.univariate(spark, probes, "x",
+            line, "cspline"), 1),
+          ("bivariate", GridInterpolator.bivariate(spark, probes, "x", "y",
+            GridLoader.grid2d(lattice(2, irregular)), "bilinear"), 2),
+          ("trivariate", GridInterpolator.trivariate(spark, probes, "x",
+            "y", "zq", GridLoader.grid3d(lattice(3, irregular)),
+            "bilinear"), 3),
+          ("quadrivariate", QuadrivariateInterpolator.quadrivariate(spark,
+            probes, "x", "y", "zq", "uq", GridLoader.grid4d(
+              lattice(4, irregular), uColName = "u"), "bilinear"), 4))) {
         val got = out.select(col("qid"), col("value")).collect()
           .map(r => r.getLong(0) -> r.getDouble(1)).toMap
         val tag = s"$name irregular=$irregular"
-        assert(got.keySet === Set(0L, 1L, 2L, 3L), tag)
+        assert(got.keySet === Set(0L, 1L, 2L, 3L, 4L), tag)
         assert(!got(0L).isNaN, tag)
-        assert(got(1L).isNaN && got(2L).isNaN, tag)
-        if (name == "trivariateTableWindowed") assert(got(3L).isNaN, tag)
+        for (k <- 1 to rank) assert(got(k.toLong).isNaN, s"$tag probe $k")
       }
     }
   }

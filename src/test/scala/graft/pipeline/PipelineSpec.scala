@@ -164,6 +164,25 @@ class TilePipelineSpec extends AnyFunSuite {
     assert(rate2 == -1.0) // resumed, not recomputed
     assert(df2.count() == n1)
   }
+
+  test("run() ignores a leftover temp manifest and leaves none behind") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-tiles")
+    val snapDir = tmp.resolve("snapshot-" +
+      TilePipeline.snapshotId(20, 16, 12, 8, "bilinear"))
+    java.nio.file.Files.createDirectories(snapDir)
+    // what a run killed while writing its manifest leaves behind
+    java.nio.file.Files.write(snapDir.resolve("manifest.json.tmp"),
+      "{\"snapshot\":".getBytes("UTF-8"))
+    val (df, rate) = TilePipeline.run(spark, 20, 16, 12, 8, "bilinear",
+      tmp.toString)
+    assert(rate > 0) // recomputed, not resumed
+    val names = java.nio.file.Files.list(snapDir).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    assert(!names.exists(_.contains(".tmp")), names.mkString(", "))
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      snapDir.resolve("manifest.json")), "UTF-8")
+    assert(manifest.contains(s"\"n_tiles\":${df.count()},"), manifest)
+  }
 }
 
 class FastPngInteropSpec extends org.scalatest.funsuite.AnyFunSuite {
