@@ -43,11 +43,11 @@ final class DenseBicubicWorkspace(nx: Int, ny: Int) {
   private var invDx = 0.0
   private var invDy = 0.0
 
-  /** Load a new grid (same dims): derivative matrices and the
-    * coefficient table.
+  /** Load a new grid (same dims) for [[bilinearAt]] and the cell
+    * brackets only: no derivative or coefficient work.
     */
-  def load(xsIn: Array[Double], ysIn: Array[Double],
-           zIn: Array[Double]): Unit = {
+  def loadValues(xsIn: Array[Double], ysIn: Array[Double],
+                 zIn: Array[Double]): Unit = {
     require(xsIn.length == nx && ysIn.length == ny)
     xs = xsIn
     ys = ysIn
@@ -56,6 +56,14 @@ final class DenseBicubicWorkspace(nx: Int, ny: Int) {
     y0 = ys(0)
     invDx = if (nx > 1) (nx - 1) / (xs(nx - 1) - xs(0)) else 0.0
     invDy = if (ny > 1) (ny - 1) / (ys(ny - 1) - ys(0)) else 0.0
+  }
+
+  /** Load a new grid (same dims): derivative matrices and the
+    * coefficient table, for [[bicubicAt]] as well.
+    */
+  def load(xsIn: Array[Double], ysIn: Array[Double],
+           zIn: Array[Double]): Unit = {
+    loadValues(xsIn, ysIn, zIn)
     Interpolate.csplineFactor(xs, wsX)
     Interpolate.csplineFactor(ys, wsY)
     var j = 0

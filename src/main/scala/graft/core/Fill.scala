@@ -115,6 +115,13 @@ object Fill {
     (cur, it)
   }
 
+  /** Fails on a first guess the reference fill drivers do not know
+    * ("zonal_average" and "zero" are the two they have).
+    */
+  def checkFirstGuess(firstGuess: String): Unit =
+    if (firstGuess != "zonal_average" && firstGuess != "zero")
+      throw new IllegalArgumentException(s"firstGuess $firstGuess")
+
   /** REFERENCE-PARITY iterative loess (`fill/loess.hpp:216-250` driver):
     * every hole is first-guessed at once — "zonal_average" here is the
     * reference loess driver's GLOBAL mean of all defined values
@@ -131,13 +138,14 @@ object Fill {
                      nx: Int, ny: Int, firstGuess: String = "zonal_average",
                      maxIterations: Int = 10, epsilon: Double = 1e-6,
                      periodicX: Boolean = false): (Array[Double], Int) = {
+    checkFirstGuess(firstGuess)
     if (maxIterations == 1)
       return (loess(values, nxSize, nySize, nx, ny, "undefined",
         periodicX), 1)
     val cur = values.clone()
-    val fillValue = firstGuess match {
-      case "zero" => 0.0
-      case "zonal_average" =>
+    val fillValue =
+      if (firstGuess == "zero") 0.0
+      else {
         var s = 0.0
         var c = 0
         var k = 0
@@ -146,8 +154,7 @@ object Fill {
           k += 1
         }
         if (c > 0) s / c else 0.0
-      case other => throw new IllegalArgumentException(s"firstGuess $other")
-    }
+      }
     var k = 0
     while (k < cur.length) {
       if (cur(k).isNaN) cur(k) = fillValue

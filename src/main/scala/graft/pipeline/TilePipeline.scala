@@ -125,7 +125,9 @@ object TilePipeline {
         }
         c += 1
       }
-      ws.load(xs, ys, values)
+      // bilinear reads only the values: skip the spline solves and the
+      // coefficient table
+      if (useBicubic) ws.load(xs, ys, values) else ws.loadValues(xs, ys, values)
       val xMin = xs(0); val xMax = xs(w - 1)
       val yMin = ys(0); val yMax = ys(h - 1)
       val cells = GeoHash.coverBox(row.lon, row.lat,

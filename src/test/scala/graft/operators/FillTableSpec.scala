@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed (grid-as-table) Gauss-Seidel fill: harmonic-plane closed
@@ -56,16 +59,16 @@ class FillTableSpec extends AnyFunSuite {
         iC.cast("double") + jC.cast("double") * 2.0)
         .otherwise(lit(Double.NaN)).as("v"))
     def run(bs: Int, damping: Double): Int = {
-      val out = FillTable.gaussSeidelTable(spark, grid(), "x", "y", "v",
-        blockSize = bs, haloWidth = 8, innerSweeps = 100,
-        maxSuperIterations = 120, epsilon = 1e-6,
-        coarseDamping = damping)
+      val (out, trace) = FillTable.gaussSeidelTraced(spark, grid(), "x",
+        "y", "v", blockSize = bs, haloWidth = 8, relaxation = 1.0,
+        innerSweeps = 100, maxSuperIterations = 120, epsilon = 1e-6,
+        periodicX = false, coarseDamping = damping)
       // converged to the harmonic plane (spot-check a center cell)
       val center = out.filter(col("x") === 48.0 && col("y") === 48.0)
         .select("value").head().getDouble(0)
       assert(math.abs(center - (48.0 + 2 * 48.0)) < 1e-3,
         s"bs=$bs damping=$damping center=$center")
-      FillTable.lastSuperIterations
+      trace.length
     }
     val two4x4 = run(24, 1.0)
     val two8x8 = run(12, 1.0)
@@ -97,12 +100,13 @@ class FillTableSpec extends AnyFunSuite {
         iC.cast("double") + jC.cast("double") * 2.0)
         .otherwise(lit(Double.NaN)).as("v"))
     def run(): (Int, Double) = {
-      val out = FillTable.gaussSeidelTable(spark, grid(), "x", "y", "v",
-        blockSize = 12, haloWidth = 8, innerSweeps = 100,
-        maxSuperIterations = 120, epsilon = 1e-6)
+      val (out, trace) = FillTable.gaussSeidelTraced(spark, grid(), "x",
+        "y", "v", blockSize = 12, haloWidth = 8, relaxation = 1.0,
+        innerSweeps = 100, maxSuperIterations = 120, epsilon = 1e-6,
+        periodicX = false, coarseDamping = 1.0)
       val center = out.filter(col("x") === 48.0 && col("y") === 48.0)
         .select("value").head().getDouble(0)
-      (FillTable.lastSuperIterations, center)
+      (trace.length, center)
     }
     val saved = FillTable.CoarseDriverGate
     try {
@@ -213,10 +217,11 @@ class FillTableSpec extends AnyFunSuite {
       val (core, coreIts) = graft.core.Fill.loessReference(vals.clone(),
         n, n, 3, 3, firstGuess = fg, maxIterations = 8, epsilon = 1e-9,
         periodicX = per)
-      val dist = FillTable.loessReferenceTable(spark, gridDf, "x", "y",
-          "v", nxWin = 3, nyWin = 3, blockSize = 8, firstGuess = fg,
-          maxIterations = 8, epsilon = 1e-9, periodicX = per)
-        .collect().map(r => (r.getDouble(0).toInt, r.getDouble(1).toInt) ->
+      val (distDf, trace) = FillTable.loessTraced(spark, gridDf, "x", "y",
+        "v", nxWin = 3, nyWin = 3, blockSize = 8, firstGuess = Some(fg),
+        maxIterations = 8, epsilon = 1e-9, periodicX = per)
+      val dist = distDf.collect()
+        .map(r => (r.getDouble(0).toInt, r.getDouble(1).toInt) ->
           r.getDouble(2)).toMap
       var maxDiff = 0.0
       for (i <- 0 until n; j <- 0 until n) {
@@ -224,9 +229,8 @@ class FillTableSpec extends AnyFunSuite {
         if (d > maxDiff) maxDiff = d
       }
       assert(maxDiff < 1e-9, s"periodicX=$per fg=$fg maxDiff $maxDiff")
-      assert(math.abs(FillTable.lastLoessRefIterations - coreIts) <= 1,
-        s"periodicX=$per fg=$fg its ${FillTable.lastLoessRefIterations} " +
-          s"vs $coreIts")
+      assert(math.abs(trace.length - coreIts) <= 1,
+        s"periodicX=$per fg=$fg its ${trace.length} vs $coreIts")
     }
     // maxIterations == 1 mirrors the reference's raw single-pass branch
     val one = FillTable.loessReferenceTable(spark, gridDf, "x", "y", "v",
@@ -340,6 +344,88 @@ class FillTableSpec extends AnyFunSuite {
         if (d > maxDiff) maxDiff = d
       }
       assert(maxDiff < 1e-4, s"periodicX=$per maxDiff $maxDiff")
+    }
+  }
+
+  /** Runs `body` and counts the Spark jobs it starts; the listener bus is
+    * drained before and after, so the count holds every job of `body`
+    * and no earlier one.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      ListenerBus.drain(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** 16x16 hole in a 32x32 lattice: more passes than a 3-cell window
+    * fills, so every pass of a capped run has holes left.
+    */
+  private def holeBlob() = {
+    val iC = floor(col("id") / n)
+    val jC = col("id") % n
+    spark.range(n.toLong * n).select(
+      iC.cast("double").as("x"), jC.cast("double").as("y"),
+      when(!(iC >= 8 && iC <= 23 && jC >= 8 && jC <= 23),
+        ((iC * 7 + jC * 13) % 19).cast("double") + 0.25)
+        .otherwise(lit(Double.NaN)).as("v"))
+  }
+
+  test("each fill iteration costs two jobs: its statistic rides the " +
+      "checkpoint") {
+    // per iteration the halo shuffle's map stage runs as one job (adaptive
+    // execution) and the localCheckpoint as the other; the stop statistic
+    // and the coarse restriction ride that checkpoint job through
+    // accumulators. A separate per-pass agg or count (`agg(max(res))
+    // .head()`) would make it three. Two runs capped at k1 and k2
+    // iterations (neither converges) differ by exactly the iterations'
+    // jobs: the axes, the seed and the first guess cancel.
+    type Run = Int => (DataFrame, Vector[FillTable.Step])
+    def perIteration(run: Run, k1: Int, k2: Int): Double = {
+      val ((_, t1), j1) = jobsOf(run(k1))
+      val ((_, t2), j2) = jobsOf(run(k2))
+      assert(t1.map(_.iteration) === (0 until k1))
+      assert(t2.map(_.iteration) === (0 until k2))
+      (j2 - j1).toDouble / (k2 - k1)
+    }
+    // 16 blocks: the coarse correction is active and restricts through
+    // its accumulator, which must not add a job either
+    val gs: Run = k => FillTable.gaussSeidelTraced(spark, planeGrid(), "x",
+      "y", "v", blockSize = 8, haloWidth = 4, relaxation = 1.0,
+      innerSweeps = 2, maxSuperIterations = k, epsilon = 1e-13,
+      periodicX = false, coarseDamping = 1.0)
+    def loess(firstGuess: Option[String]): Run = k =>
+      FillTable.loessTraced(spark, holeBlob(), "x", "y", "v", nxWin = 3,
+        nyWin = 3, blockSize = 8, firstGuess = firstGuess,
+        maxIterations = k, epsilon = 0.0, periodicX = false)
+    assert(gs(2)._2.head.coarseActive)
+    assert(perIteration(gs, 2, 4) === 2.0)
+    assert(perIteration(loess(None), 1, 2) === 2.0)
+    assert(perIteration(loess(Some("zonal_average")), 2, 4) === 2.0)
+  }
+
+  test("an unknown firstGuess fails before any Spark job runs") {
+    // maxIterations == 1 is the single raw pass, which needs no first
+    // guess; the name must still be checked, and before the axes job
+    for (its <- Seq(1, 3)) {
+      val (_, jobs) = jobsOf(intercept[IllegalArgumentException] {
+        FillTable.loessReferenceTable(spark, holeBlob(), "x", "y", "v",
+          blockSize = 8, firstGuess = "bogus", maxIterations = its)
+      })
+      assert(jobs === 0, s"maxIterations=$its")
+      intercept[IllegalArgumentException] {
+        graft.core.Fill.loessReference(Array.fill(16)(1.0), 4, 4, 1, 1,
+          firstGuess = "bogus", maxIterations = its)
+      }
     }
   }
 }
