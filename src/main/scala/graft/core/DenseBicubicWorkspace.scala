@@ -3,7 +3,7 @@ package graft.core
 /** Whole-grid natural-spline bicubic interpolator for fixed grid
   * dimensions — the reference's bicubic (`bicubic.hpp:56-186`) with the
   * window spanning the whole grid; per-query windowed (6x6) semantics
-  * live in [[graft.operators.BivariateKernel]].
+  * live in [[graft.operators.WindowFit]].
   *
   * `load()` does all value-dependent arithmetic once per grid:
   *   - the natural-spline system of each axis is factored once

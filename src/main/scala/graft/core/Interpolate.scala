@@ -15,6 +15,7 @@ package graft.core
   * reference's Fill<T>::value() behavior.
   */
 object Interpolate {
+  import Univariate1D.bracket
 
   /** Piecewise-linear interpolation, NaN outside the domain. */
   def linear(xa: Array[Double], ya: Array[Double], x: Double): Double = {
@@ -23,17 +24,6 @@ object Interpolate {
     val i = bracket(xa, x)
     val t = (x - xa(i)) / (xa(i + 1) - xa(i))
     ya(i) + t * (ya(i + 1) - ya(i))
-  }
-
-  /** Index i with xa(i) <= x <= xa(i+1) (ascending xa). */
-  private def bracket(xa: Array[Double], x: Double): Int = {
-    var lo = 0
-    var hi = xa.length - 1
-    while (hi - lo > 1) {
-      val mid = (lo + hi) >>> 1
-      if (xa(mid) <= x) lo = mid else hi = mid
-    }
-    lo
   }
 
   /** Natural cubic spline second-coefficient vector c (c(0)=c(n-1)=0):

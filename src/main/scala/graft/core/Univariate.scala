@@ -35,6 +35,7 @@ object Univariate1D {
     case other => throw new IllegalArgumentException(s"method $other")
   }
 
+  /** Index i with xa(i) <= x <= xa(i+1) (ascending xa, binary search). */
   private[core] def bracket(xa: Array[Double], x: Double): Int = {
     var lo = 0
     var hi = xa.length - 1

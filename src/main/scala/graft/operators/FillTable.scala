@@ -294,11 +294,13 @@ object FillTable {
       : Dataset[(Int, Int, FillCell, Boolean)] = {
     import state.sparkSession.implicits._
     state.mapPartitions { cells =>
-      // dedupe over at most 9 targets with a linear scan of ONE
-      // task-shared scratch array (reset per cell via nSeen) — no
-      // per-cell heap allocation on the hottest distributed loop; safe
-      // because flatMap fully drains each cell's targets before the
-      // next cell starts
+      // the block offsets (home 0 first) and the dedupe keys live in
+      // task-shared scratch arrays refilled per cell; safe because
+      // flatMap fully drains each cell's targets before the next cell
+      // starts. Each cell still allocates its target iterators and the
+      // emitted rows.
+      val dis = new Array[Int](3)
+      val djs = new Array[Int](3)
       val seen = new Array[Long](9)
       cells.flatMap { c =>
         val bi = c.ci / b
@@ -310,19 +312,19 @@ object FillTable {
         // with a wide halo), so targets are deduped per cell — and the
         // home copy must win the dedupe, or a block could lose one of its
         // own cells to a halo-flagged duplicate
-        var dbis: List[Int] = List(0)
+        var ndi = 1
         if ((c.ci % b >= b - wx || (perX && c.ci >= nx - wx)) &&
-          (bi < nbx - 1 || perX)) dbis = dbis :+ 1
-        if (c.ci % b < wx && (bi > 0 || perX)) dbis = dbis :+ -1
-        var dbjs: List[Int] = List(0)
-        if (c.cj % b >= b - wy && bj < nby - 1) dbjs = dbjs :+ 1
-        if (c.cj % b < wy && bj > 0) dbjs = dbjs :+ -1
+          (bi < nbx - 1 || perX)) { dis(ndi) = 1; ndi += 1 }
+        if (c.ci % b < wx && (bi > 0 || perX)) { dis(ndi) = -1; ndi += 1 }
+        var ndj = 1
+        if (c.cj % b >= b - wy && bj < nby - 1) { djs(ndj) = 1; ndj += 1 }
+        if (c.cj % b < wy && bj > 0) { djs(ndj) = -1; ndj += 1 }
         var nSeen = 0
         for {
-          di <- dbis.iterator
-          dj <- dbjs.iterator
-          tbi = if (perX) (bi + di + nbx) % nbx else bi + di
-          tbj = bj + dj
+          a <- Iterator.range(0, ndi)
+          e <- Iterator.range(0, ndj)
+          tbi = if (perX) (bi + dis(a) + nbx) % nbx else bi + dis(a)
+          tbj = bj + djs(e)
           key = (tbi.toLong << 32) | (tbj & 0xFFFFFFFFL)
           if {
             var dup = false
@@ -331,7 +333,7 @@ object FillTable {
             if (!dup) { seen(nSeen) = key; nSeen += 1 }
             !dup
           }
-        } yield (tbi, tbj, c, di != 0 || dj != 0)
+        } yield (tbi, tbj, c, a != 0 || e != 0)
       }
     }
   }

@@ -11,15 +11,35 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType,
 import graft.core.{Axis, Bicubic, Boundary, Interpolate}
 import graft.sources.GridLoader
 
+/** A broadcast grid as x-y planes stacked over its plane axes (none,
+  * z, or z then u), x-major: node (i, j) of flat plane p (row-major over
+  * the plane axes) is `values((i * ny + j) * planes + p)`.
+  */
+sealed trait PlaneStack extends Serializable {
+  def xAxis: Axis
+  def yAxis: Axis
+  def planeAxes: Seq[Axis]
+  def values: Array[Double]
+
+  /** The x-y grid of flat plane `p`. */
+  def xyPlane(p: Int): Grid2D = {
+    val planes = planeAxes.map(_.size).product
+    Grid2D(xAxis, yAxis, Array.tabulate(xAxis.size * yAxis.size)(ij =>
+      values(ij * planes + p)))
+  }
+}
+
 /** Dense 2-D grid (x-major storage) + its axes — the broadcastable analog
   * of the reference Grid2D (`/root/reference/cxx/include/pyinterp/pybind/
   * grid.hpp:184-342`). `values(i * ny + j)` is z(x_i, y_j).
   */
 final case class Grid2D(xAxis: Axis, yAxis: Axis, values: Array[Double])
-    extends Serializable {
+    extends PlaneStack {
   require(values.length == xAxis.size.toLong * yAxis.size,
     s"grid size ${values.length} != ${xAxis.size}x${yAxis.size}")
   @inline def apply(i: Int, j: Int): Double = values(i * yAxis.size + j)
+  def planeAxes: Seq[Axis] = Nil
+  override def xyPlane(p: Int): Grid2D = this
 }
 
 /** 1-D grid (`core.Grid` with one axis): the `univariate` /
@@ -34,20 +54,21 @@ final case class Grid1D(axis: Axis, values: Array[Double])
   * carried as epoch-encoded doubles).
   */
 final case class Grid3D(xAxis: Axis, yAxis: Axis, zAxis: Axis,
-                        values: Array[Double]) extends Serializable {
+                        values: Array[Double]) extends PlaneStack {
   @inline def apply(i: Int, j: Int, k: Int): Double =
     values((i.toLong * yAxis.size * zAxis.size + j.toLong * zAxis.size + k).toInt)
-  def plane(k: Int): (Int, Int) => Double = (i, j) => apply(i, j, k)
+  def planeAxes: Seq[Axis] = Seq(zAxis)
 }
 
 /** 4-D grid (x, y, z, u) — u typically a level axis, z possibly temporal
   * (`pyinterp/core/__init__.pyi:599-611` Grid4D shape).
   */
 final case class Grid4D(xAxis: Axis, yAxis: Axis, zAxis: Axis, uAxis: Axis,
-                        values: Array[Double]) extends Serializable {
+                        values: Array[Double]) extends PlaneStack {
   @inline def apply(i: Int, j: Int, k: Int, l: Int): Double =
     values((((i.toLong * yAxis.size + j) * zAxis.size + k) *
       uAxis.size + l).toInt)
+  def planeAxes: Seq[Axis] = Seq(zAxis, uAxis)
 }
 
 /** Grid interpolation as a shuffle-free map stage: the grid is broadcast
@@ -58,9 +79,11 @@ final case class Grid4D(xAxis: Axis, yAxis: Axis, zAxis: Axis, uAxis: Axis,
   *
   * Methods: geometric {bilinear, idw, nearest}
   * (`math/interpolate/geometric/bivariate.hpp`) and windowed {bicubic,
-  * spline-bilinear} (`math/interpolate/bivariate/bicubic.hpp`) with the
-  * reference default half-window of 3 (6x6) and undef|shrink boundaries
-  * (`pyinterp/regular_grid_interpolator.py:66-79`).
+  * spline-bilinear, the separable univariate family}
+  * (`math/interpolate/bivariate/bicubic.hpp`) with the reference default
+  * half-window of 3 (6x6) and its boundary modes
+  * (`pyinterp/regular_grid_interpolator.py:66-79`). Rank 3 and 4 combine
+  * the x-y planes along z and u ([[GridInterpolator.planeStack]]).
   */
 object GridInterpolator {
 
@@ -69,35 +92,103 @@ object GridInterpolator {
   def bivariate(spark: SparkSession, df: DataFrame, xCol: String, yCol: String,
                 grid: Grid2D, method: String, halfWindow: Int = 3,
                 boundary: Boundary.Value = Boundary.Undef,
-                outputCol: String = "value",
-                sortProbes: Boolean = true): DataFrame = {
-    val bc: Broadcast[Grid2D] = spark.sparkContext.broadcast(grid)
-    // windowed methods keep a per-window cache (fits reused across probes
-    // in the same 6x6 window); a PARTITION-LOCAL sort by grid cell turns
+                outputCol: String = "value"): DataFrame =
+    planeStack(spark, df, Seq(xCol, yCol), grid, method, Nil, halfWindow,
+      boundary, outputCol)
+
+  /** The one broadcast grid path behind [[bivariate]], [[trivariate]] and
+    * [[QuadrivariateInterpolator.quadrivariate]]. `coordCols` are x, y and
+    * one column per plane axis of `grid`, `planeMethods` the plane axes'
+    * combines. Per partition, one [[BivariateKernel]] per x-y plane is
+    * built on first use; per probe, each plane axis is bracketed with
+    * `findIndexes` (a miss yields NaN) and the bracketing planes are
+    * combined by [[PlaneCombine]] (u outer, z inner; nearest snaps to the
+    * closer node, ties to the lower).
+    */
+  private[operators] def planeStack(spark: SparkSession, df: DataFrame,
+                                    coordCols: Seq[String], grid: PlaneStack,
+                                    method: String, planeMethods: Seq[String],
+                                    halfWindow: Int, boundary: Boundary.Value,
+                                    outputCol: String): DataFrame = {
+    val bc: Broadcast[PlaneStack] = spark.sparkContext.broadcast(grid)
+    // windowed methods keep a per-window cache (one fit reused across
+    // probes in the same window); a PARTITION-LOCAL sort by x-y cell turns
     // scattered probes into runs of cache hits — no shuffle, and at scale
     // the O(p log p) per-task sort is far cheaper than per-row refits
+    val (xCol, yCol) = (coordCols(0), coordCols(1))
     val input =
-      if (!sortProbes || geometricMethods.contains(method)) df
+      if (geometricMethods.contains(method)) df
       else if (grid.xAxis.isRegular && grid.yAxis.isRegular)
         df.sortWithinPartitions(
           floor((col(xCol) - lit(grid.xAxis.front)) / lit(grid.xAxis.step)),
           floor((col(yCol) - lit(grid.yAxis.front)) / lit(grid.yAxis.step)))
       else df.sortWithinPartitions(col(xCol), col(yCol))
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = false))
-    val enc: ExpressionEncoder[Row] = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val xIdx = df.schema.fieldIndex(xCol)
-    val yIdx = df.schema.fieldIndex(yCol)
     val m = method
+    val pm = planeMethods
     val hw = halfWindow
     val bdy = boundary
-    input.mapPartitions { iter =>
+    appendValue(input, coordCols, outputCol) { () =>
       val g = bc.value
-      val interp = new BivariateKernel(g, m, hw, bdy)
+      val axes = g.planeAxes.toArray
+      val kernels = new Array[BivariateKernel](axes.map(_.size).product)
+      val lo = new Array[Int](axes.length)
+      val hi = new Array[Int](axes.length)
+      val combine = new PlaneCombine(pm)
+      def frame(d: Int, v: Double): Boolean = axes(d).findIndexes(v) match {
+        case None => false
+        case Some((k0, k1)) =>
+          val v0 = axes(d)(k0)
+          val v1 = axes(d)(k1)
+          lo(d) = k0
+          hi(d) = k1
+          combine.set(d, if (v1 == v0) 0.0 else (v - v0) / (v1 - v0),
+            if (math.abs(v - v0) <= math.abs(v1 - v)) 0 else 1)
+          true
+      }
+      def plane(offsets: Array[Int]): BivariateKernel = {
+        var p = 0
+        var d = 0
+        while (d < axes.length) {
+          p = p * axes(d).size + (if (offsets(d) == 0) lo(d) else hi(d))
+          d += 1
+        }
+        if (kernels(p) == null)
+          kernels(p) = new BivariateKernel(g.xyPlane(p), m, hw, bdy)
+        kernels(p)
+      }
+      c => {
+        var d = 0
+        while (d < axes.length && frame(d, c(d + 2))) d += 1
+        if (d < axes.length) Double.NaN
+        else combine(offsets => plane(offsets)(c(0), c(1)))
+      }
+    }
+  }
+
+  /** `df` with a non-null double `outputCol` appended. `kernel` is called
+    * once per partition and returns the row evaluator, which maps the
+    * values of `coordCols` to the output; a row with a null coordinate
+    * gets NaN.
+    */
+  private def appendValue(df: DataFrame, coordCols: Seq[String],
+                          outputCol: String)
+                         (kernel: () => Array[Double] => Double)
+      : DataFrame = {
+    val enc: ExpressionEncoder[Row] = ExpressionEncoder(RowEncoder.encoderFor(
+      StructType(df.schema.fields :+
+        StructField(outputCol, DoubleType, nullable = false))))
+    val idx = coordCols.map(df.schema.fieldIndex).toArray
+    df.mapPartitions { iter =>
+      val eval = kernel()
+      val coords = new Array[Double](idx.length)
       iter.map { row =>
-        val v = if (row.isNullAt(xIdx) || row.isNullAt(yIdx)) Double.NaN
-          else interp(row.getDouble(xIdx), row.getDouble(yIdx))
-        Row.fromSeq(row.toSeq :+ v)
+        var d = 0
+        while (d < idx.length && !row.isNullAt(idx(d))) {
+          coords(d) = row.getDouble(idx(d))
+          d += 1
+        }
+        Row.fromSeq(row.toSeq :+
+          (if (d < idx.length) Double.NaN else eval(coords)))
       }
     }(enc)
   }
@@ -602,24 +693,17 @@ object GridInterpolator {
                  derivative: Boolean = false,
                  outputCol: String = "value"): DataFrame = {
     val bc = spark.sparkContext.broadcast(grid)
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = false))
-    val enc: ExpressionEncoder[Row] = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val xIdx = df.schema.fieldIndex(xCol)
     val m = method
     val deriv = derivative
-    df.mapPartitions { iter =>
+    appendValue(df, Seq(xCol), outputCol) { () =>
       val g = bc.value
       val interp = graft.core.Univariate1D(m)
       val ok = interp.fit(g.axis.values, g.values)
-      iter.map { row =>
-        val v =
-          if (!ok || row.isNullAt(xIdx)) Double.NaN
-          else if (deriv) interp.derivative(row.getDouble(xIdx))
-          else interp.value(row.getDouble(xIdx))
-        Row.fromSeq(row.toSeq :+ v)
-      }
-    }(enc)
+      c =>
+        if (!ok) Double.NaN
+        else if (deriv) interp.derivative(c(0))
+        else interp.value(c(0))
+    }
   }
 
   /** Trivariate interpolation: bivariate on the two z-bracketing planes,
@@ -631,66 +715,9 @@ object GridInterpolator {
                  yCol: String, zCol: String, grid: Grid3D, method: String,
                  zMethod: String = "linear", halfWindow: Int = 3,
                  boundary: Boundary.Value = Boundary.Undef,
-                 outputCol: String = "value"): DataFrame = {
-    val bc = spark.sparkContext.broadcast(grid)
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = false))
-    val enc: ExpressionEncoder[Row] = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val xIdx = df.schema.fieldIndex(xCol)
-    val yIdx = df.schema.fieldIndex(yCol)
-    val zIdx = df.schema.fieldIndex(zCol)
-    val m = method
-    val zm = zMethod
-    val hw = halfWindow
-    val bdy = boundary
-    df.mapPartitions { iter =>
-      val g = bc.value
-      val nz = g.zAxis.size
-      // one bivariate kernel per z-plane, built lazily and cached
-      val planes = new Array[BivariateKernel](nz)
-      def planeKernel(k: Int): BivariateKernel = {
-        if (planes(k) == null) {
-          val vals = new Array[Double](g.xAxis.size * g.yAxis.size)
-          var i = 0
-          while (i < g.xAxis.size) {
-            var j = 0
-            while (j < g.yAxis.size) {
-              vals(i * g.yAxis.size + j) = g(i, j, k)
-              j += 1
-            }
-            i += 1
-          }
-          planes(k) = new BivariateKernel(
-            Grid2D(g.xAxis, g.yAxis, vals), m, hw, bdy)
-        }
-        planes(k)
-      }
-      iter.map { row =>
-        val v = if (row.isNullAt(xIdx) || row.isNullAt(yIdx) ||
-            row.isNullAt(zIdx)) Double.NaN else {
-          val x = row.getDouble(xIdx)
-          val y = row.getDouble(yIdx)
-          val z = row.getDouble(zIdx)
-          g.zAxis.findIndexes(z) match {
-            case None => Double.NaN
-            case Some((k0, k1)) =>
-              val z0 = g.zAxis(k0)
-              val z1 = g.zAxis(k1)
-              if (zm == "nearest") {
-                val k = if (math.abs(z - z0) <= math.abs(z1 - z)) k0 else k1
-                planeKernel(k)(x, y)
-              } else {
-                val v0 = planeKernel(k0)(x, y)
-                val v1 = planeKernel(k1)(x, y)
-                val t = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
-                v0 + t * (v1 - v0)
-              }
-          }
-        }
-        Row.fromSeq(row.toSeq :+ v)
-      }
-    }(enc)
-  }
+                 outputCol: String = "value"): DataFrame =
+    planeStack(spark, df, Seq(xCol, yCol, zCol), grid, method,
+      Seq(zMethod), halfWindow, boundary, outputCol)
 }
 
 /** Quadrivariate: 2 (or 4) bivariate surfaces on the bracketing (z, u)
@@ -705,92 +732,56 @@ object QuadrivariateInterpolator {
                     method: String, zMethod: String = "linear",
                     uMethod: String = "linear", halfWindow: Int = 3,
                     boundary: Boundary.Value = Boundary.Undef,
-                    outputCol: String = "value"): DataFrame = {
-    val bc = spark.sparkContext.broadcast(grid)
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = false))
-    val enc: ExpressionEncoder[Row] = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val xIdx = df.schema.fieldIndex(xCol)
-    val yIdx = df.schema.fieldIndex(yCol)
-    val zIdx = df.schema.fieldIndex(zCol)
-    val uIdx = df.schema.fieldIndex(uCol)
-    val m = method
-    val zm = zMethod
-    val um = uMethod
-    val hw = halfWindow
-    val bdy = boundary
-    df.mapPartitions { iter =>
-      val g = bc.value
-      // per-(z-plane, u-level) bivariate kernels, built lazily
-      val kernels = new java.util.HashMap[(Int, Int), BivariateKernel]()
-      def kernel(k: Int, l: Int): BivariateKernel = {
-        var kr = kernels.get((k, l))
-        if (kr == null) {
-          val vals = new Array[Double](g.xAxis.size * g.yAxis.size)
-          var i = 0
-          while (i < g.xAxis.size) {
-            var j = 0
-            while (j < g.yAxis.size) {
-              vals(i * g.yAxis.size + j) = g(i, j, k, l)
-              j += 1
-            }
-            i += 1
-          }
-          kr = new BivariateKernel(Grid2D(g.xAxis, g.yAxis, vals), m, hw, bdy)
-          kernels.put((k, l), kr)
-        }
-        kr
-      }
-      def alongZ(x: Double, y: Double, z: Double, l: Int): Double =
-        g.zAxis.findIndexes(z) match {
-          case None => Double.NaN
-          case Some((k0, k1)) =>
-            val z0 = g.zAxis(k0)
-            val z1 = g.zAxis(k1)
-            if (zm == "nearest") {
-              val k = if (math.abs(z - z0) <= math.abs(z1 - z)) k0 else k1
-              kernel(k, l)(x, y)
-            } else {
-              val v0 = kernel(k0, l)(x, y)
-              val v1 = kernel(k1, l)(x, y)
-              val t = if (z1 == z0) 0.0 else (z - z0) / (z1 - z0)
-              v0 + t * (v1 - v0)
-            }
-        }
-      iter.map { row =>
-        val v = if (row.isNullAt(xIdx) || row.isNullAt(yIdx) ||
-            row.isNullAt(zIdx) || row.isNullAt(uIdx)) Double.NaN else {
-          val x = row.getDouble(xIdx)
-          val y = row.getDouble(yIdx)
-          val z = row.getDouble(zIdx)
-          val u = row.getDouble(uIdx)
-          g.uAxis.findIndexes(u) match {
-            case None => Double.NaN
-            case Some((l0, l1)) =>
-              val u0 = g.uAxis(l0)
-              val u1 = g.uAxis(l1)
-              if (um == "nearest") {
-                val l = if (math.abs(u - u0) <= math.abs(u1 - u)) l0 else l1
-                alongZ(x, y, z, l)
-              } else {
-                val v0 = alongZ(x, y, z, l0)
-                val v1 = alongZ(x, y, z, l1)
-                val t = if (u1 == u0) 0.0 else (u - u0) / (u1 - u0)
-                v0 + t * (v1 - v0)
-              }
-          }
-        }
-        Row.fromSeq(row.toSeq :+ v)
-      }
-    }(enc)
+                    outputCol: String = "value"): DataFrame =
+    GridInterpolator.planeStack(spark, df, Seq(xCol, yCol, zCol, uCol), grid,
+      method, Seq(zMethod, uMethod), halfWindow, boundary, outputCol)
+}
+
+/** The plane combine of the 3-D and 4-D grid paths, shared by
+  * [[GridInterpolator.planeStack]] and [[WindowedTileJoin]]. Plane axis d
+  * (the last outermost) with method "nearest" evaluates only plane
+  * `snap(d)` (0 = lower bracket, 1 = upper); any other method evaluates
+  * both bracketing planes and combines v0 + t(d)·(v1 − v0), even at t = 0
+  * or 1, so a NaN in the zero-weight plane propagates. Each caller [[set]]s
+  * every axis's fraction and nearest offset per probe by its own rule;
+  * `apply` hands `plane` the bracket offsets (0 or 1 per axis) of each
+  * plane it evaluates.
+  */
+private[operators] final class PlaneCombine(methods: Seq[String]) {
+  private val nearest = methods.map(_ == "nearest").toArray
+  private val t = new Array[Double](nearest.length)
+  private val snap = new Array[Int](nearest.length)
+  private val offsets = new Array[Int](nearest.length)
+
+  def set(d: Int, fraction: Double, nearestOffset: Int): Unit = {
+    t(d) = fraction
+    snap(d) = nearestOffset
   }
+
+  def apply(plane: Array[Int] => Double): Double =
+    along(nearest.length - 1, plane)
+
+  private def along(d: Int, plane: Array[Int] => Double): Double =
+    if (d < 0) plane(offsets)
+    else if (nearest(d)) {
+      offsets(d) = snap(d)
+      along(d - 1, plane)
+    } else {
+      offsets(d) = 0
+      val v0 = along(d - 1, plane)
+      offsets(d) = 1
+      val v1 = along(d - 1, plane)
+      v0 + t(d) * (v1 - v0)
+    }
 }
 
 /** Per-partition bivariate kernel with the geometric / windowed dispatch
-  * of `pyinterp/regular_grid_interpolator.py:45-63`. Windowed path keeps
-  * a per-instance window cache (reload only when the query leaves the
-  * cached window — `math/interpolate/cache.hpp` behavior), so feeding
-  * cell-sorted partitions makes consecutive lookups cache hits.
+  * of `pyinterp/regular_grid_interpolator.py:45-63`. A windowed method
+  * loads the probe's window (`Axis.window` under `boundary`; a periodic x
+  * unwrapped monotonic across the seam) into one [[WindowFit]] and keeps
+  * it until a probe leaves the window (`math/interpolate/cache.hpp`
+  * behavior), so cell-sorted partitions make consecutive lookups cache
+  * hits.
   */
 final class BivariateKernel(grid: Grid2D, method: String, halfWindow: Int,
                             boundary: Boundary.Value) extends Serializable {
@@ -798,69 +789,19 @@ final class BivariateKernel(grid: Grid2D, method: String, halfWindow: Int,
   private val yAxis = grid.yAxis
 
   // window cache state (windowed methods)
-  private var cachedXIdx: Array[Int] = null
-  private var cachedYIdx: Array[Int] = null
-  private var cachedBicubic: Bicubic = null
-  private var cachedXs: Array[Double] = null
-  private var cachedYs: Array[Double] = null
-  private var cachedZ: Array[Array[Double]] = null
+  @transient private var cachedXIdx: Array[Int] = null
+  @transient private var cachedYIdx: Array[Int] = null
+  @transient private var cachedFit: WindowFit = null
 
   def apply(x: Double, y: Double): Double = method match {
     case "bilinear" | "idw" | "nearest" => geometric(x, y)
-    case "bicubic" => windowedBicubic(x, y)
-    case "spline_bilinear" => windowedSplineLinear(x, y)
-    // windowed separable univariate methods
-    // (`regular_grid_interpolator.py:49-63` windowed set)
-    case "akima" | "akima_periodic" | "c_spline" | "c_spline_not_a_knot" |
-         "c_spline_periodic" | "linear" | "polynomial" | "steffen" =>
-      windowedSeparable(x, y)
+    // windowed bicubic, spline_bilinear and the separable univariate
+    // methods (`regular_grid_interpolator.py:49-63` windowed set)
+    case "bicubic" | "spline_bilinear" | "akima" | "akima_periodic" |
+         "c_spline" | "c_spline_not_a_knot" | "c_spline_periodic" |
+         "linear" | "polynomial" | "steffen" =>
+      if (loadWindow(x, y)) cachedFit.eval(queryX(x), y) else Double.NaN
     case other => throw new IllegalArgumentException(s"method $other")
-  }
-
-  @transient private lazy val uniY = graft.core.Univariate1D(method)
-  // reused across evaluations: window shapes are constant per kernel
-  @transient private var sepTmp: Array[Double] = null
-  // per-window cached row fits: the x-direction fits are query-independent,
-  // so an unchanged window answers each probe with evaluations + ONE
-  // y-direction fit instead of (rows+1) fits (the q_akima_grid hot spot)
-  @transient private var sepRowFits: Array[graft.core.Univariate1D] = null
-  @transient private var sepRowOk: Array[Boolean] = null
-  private var sepFitsValid = false
-
-  /** Separable application of a univariate method: fit along x for each
-    * window row, then along y (`math/interpolate/bivariate/spline.hpp`
-    * structure generalized to every univariate kernel).
-    */
-  private def windowedSeparable(x: Double, y: Double): Double = {
-    if (!loadWindow(x, y)) return Double.NaN
-    val xq = queryX(x)
-    val ny = cachedYs.length
-    if (sepTmp == null || sepTmp.length != ny)
-      sepTmp = new Array[Double](ny)
-    if (!sepFitsValid) {
-      if (sepRowFits == null || sepRowFits.length != ny) {
-        sepRowFits = Array.fill(ny)(graft.core.Univariate1D(method))
-        sepRowOk = new Array[Boolean](ny)
-      }
-      var j = 0
-      while (j < ny) {
-        // fresh slice per row: fit() retains the array reference
-        val colv = new Array[Double](cachedXs.length)
-        var i = 0
-        while (i < cachedXs.length) { colv(i) = cachedZ(i)(j); i += 1 }
-        sepRowOk(j) = sepRowFits(j).fit(cachedXs, colv)
-        j += 1
-      }
-      sepFitsValid = true
-    }
-    var j = 0
-    while (j < ny) {
-      if (!sepRowOk(j)) return Double.NaN
-      sepTmp(j) = sepRowFits(j).value(xq)
-      j += 1
-    }
-    if (!uniY.fit(cachedYs, sepTmp)) return Double.NaN
-    uniY.value(y)
   }
 
   private def geometric(x: Double, y: Double): Double = {
@@ -910,24 +851,10 @@ final class BivariateKernel(grid: Grid2D, method: String, halfWindow: Int,
       prev = xv
       i += 1
     }
-    val ys = yi.map(yAxis(_))
-    val z = Array.ofDim[Double](xi.length, yi.length)
-    i = 0
-    while (i < xi.length) {
-      var j = 0
-      while (j < yi.length) {
-        z(i)(j) = grid(xi(i), yi(j))
-        j += 1
-      }
-      i += 1
-    }
     cachedXIdx = xi
     cachedYIdx = yi
-    cachedXs = xs
-    cachedYs = ys
-    cachedZ = z
-    cachedBicubic = null
-    sepFitsValid = false
+    cachedFit = new WindowFit(method, xs, yi.map(yAxis(_)),
+      Array.tabulate(xi.length, yi.length)((i, j) => grid(xi(i), yi(j))))
     true
   }
 
@@ -935,98 +862,54 @@ final class BivariateKernel(grid: Grid2D, method: String, halfWindow: Int,
   private def queryX(x: Double): Double = {
     if (!xAxis.isPeriodic) return x
     var xq = xAxis.normalize(x)
-    if (xq < cachedXs(0)) xq += xAxis.period
+    if (xq < cachedFit.xs(0)) xq += xAxis.period
     xq
-  }
-
-  private def windowedBicubic(x: Double, y: Double): Double = {
-    if (!loadWindow(x, y)) return Double.NaN
-    if (cachedBicubic == null)
-      cachedBicubic = new Bicubic(cachedXs, cachedYs, cachedZ)
-    cachedBicubic(queryX(x), y)
-  }
-
-  /** Separable spline: cspline along x for each window row, then along y
-    * (`math/interpolate/bivariate/spline.hpp` behavior).
-    */
-  private def windowedSplineLinear(x: Double, y: Double): Double = {
-    if (!loadWindow(x, y)) return Double.NaN
-    val xq = queryX(x)
-    val tmp = new Array[Double](cachedYs.length)
-    var j = 0
-    while (j < cachedYs.length) {
-      val colv = new Array[Double](cachedXs.length)
-      var i = 0
-      while (i < cachedXs.length) { colv(i) = cachedZ(i)(j); i += 1 }
-      tmp(j) = Interpolate.cspline(cachedXs, colv, xq)
-      j += 1
-    }
-    Interpolate.cspline(cachedYs, tmp, y)
   }
 }
 
-/** One assembled (2·halfWindow)² window's kernel: the SAME evaluation as
-  * [[BivariateKernel]] — lazily-built [[graft.core.Bicubic]], per-row
-  * separable [[graft.core.Univariate1D]] fits, or cspline
-  * (spline_bilinear) — over a fixed window. The tile-local evaluation
-  * stage of [[WindowedTileJoin]] builds one per window (per bracketing
-  * z/u plane on the 3-D/4-D paths) from its dense cell block.
+/** The windowed evaluation of one assembled window: `xs` × `ys` nodes
+  * with `z(i)(j)` at (xs(i), ys(j)). Bicubic is a [[graft.core.Bicubic]]
+  * built on first use; the separable univariate methods fit
+  * [[graft.core.Univariate1D]] along x per window row (kept for the
+  * window's lifetime), then along y per probe; spline_bilinear is a
+  * cspline along x per row, then along y. The window need not be
+  * square: `Boundary.Shrink` cuts it at a grid edge. [[BivariateKernel]]
+  * builds one per window load, the tile-local stage of
+  * [[WindowedTileJoin]] one per window and bracketing z/u plane.
   */
-private[operators] final class WindowFit(method: String, n: Int,
-    xs: Array[Double], ys: Array[Double], z: Array[Array[Double]]) {
+private[operators] final class WindowFit(method: String,
+    val xs: Array[Double], ys: Array[Double], z: Array[Array[Double]]) {
   private var bicubic: Bicubic = null
   private var rowFits: Array[graft.core.Univariate1D] = null
   private var rowOk: Array[Boolean] = null
-  private var sepFitsValid = false
   private lazy val uniY = graft.core.Univariate1D(method)
-  private val sepTmp = new Array[Double](n)
+  private lazy val sepTmp = new Array[Double](ys.length)
 
   def eval(x: Double, y: Double): Double = method match {
     case "bicubic" =>
       if (bicubic == null) bicubic = new Bicubic(xs, ys, z)
       bicubic(x, y)
-    case "spline_bilinear" => splineLinear(x, y)
+    case "spline_bilinear" =>
+      Interpolate.cspline(ys, Array.tabulate(ys.length)(j =>
+        Interpolate.cspline(xs, row(j), x)), y)
     case _ => sepEval(x, y)
   }
 
-  /** Mirror of [[BivariateKernel]].windowedSeparable: fit along x per
-    * window row (cached for the window's lifetime), evaluate, fit along y.
-    */
+  /** Window row j along x; a fresh array, since fit() retains it. */
+  private def row(j: Int): Array[Double] = Array.tabulate(xs.length)(z(_)(j))
+
   private def sepEval(x: Double, y: Double): Double = {
-    if (!sepFitsValid) {
-      rowFits = Array.fill(n)(graft.core.Univariate1D(method))
-      rowOk = new Array[Boolean](n)
-      var j = 0
-      while (j < n) {
-        val colv = new Array[Double](n)
-        var i = 0
-        while (i < n) { colv(i) = z(i)(j); i += 1 }
-        rowOk(j) = rowFits(j).fit(xs, colv)
-        j += 1
-      }
-      sepFitsValid = true
+    if (rowFits == null) {
+      rowFits = Array.fill(ys.length)(graft.core.Univariate1D(method))
+      rowOk = Array.tabulate(ys.length)(j => rowFits(j).fit(xs, row(j)))
     }
     var j = 0
-    while (j < n) {
+    while (j < ys.length) {
       if (!rowOk(j)) return Double.NaN
       sepTmp(j) = rowFits(j).value(x)
       j += 1
     }
     if (!uniY.fit(ys, sepTmp)) return Double.NaN
     uniY.value(y)
-  }
-
-  /** Mirror of [[BivariateKernel]].windowedSplineLinear. */
-  private def splineLinear(x: Double, y: Double): Double = {
-    val tmp = new Array[Double](n)
-    var j = 0
-    while (j < n) {
-      val colv = new Array[Double](n)
-      var i = 0
-      while (i < n) { colv(i) = z(i)(j); i += 1 }
-      tmp(j) = Interpolate.cspline(xs, colv, x)
-      j += 1
-    }
-    Interpolate.cspline(ys, tmp, y)
   }
 }

@@ -38,9 +38,10 @@ private[operators] final case class TileCell(
   *    `(1 + (n-1)/T)² · (1 + 1/Tz) · (1 + 1/Tu)` ≈ 1.2-1.5, NOT 36-144;
   *  - per tile, the cell replicas fill a dense local array (missing
   *    cells stay NaN — the masked-cell semantics), probes are sorted by
-  *    window origin, and the SAME [[WindowFit]] kernels as the broadcast
-  *    path evaluate with a last-window fit cache — exactly the old
-  *    per-partition evaluators, now fed tile-locally.
+  *    window origin, and the SAME [[WindowFit]] and [[PlaneCombine]] as
+  *    the broadcast [[BivariateKernel]] and
+  *    [[GridInterpolator.planeStack]] evaluate with a last-window fit
+  *    cache.
   *
   * Shuffle volume is one pass of the probe table + ~1.2-1.5 passes of
   * the lattice, independent of the stencil size — the plan that survives
@@ -213,7 +214,7 @@ private[operators] object WindowedTileJoin {
             else Array.tabulate(nn)(j => byv.value(wj + j))
           val zz = Array.tabulate(nn, nn)((i, j) =>
             arr((((wi - x0 + i) * ex + (wj - y0 + j)) * ek + kk) * el + ll))
-          new WindowFit(m, nn, xsArr, ysArr, zz)
+          new WindowFit(m, xsArr, ysArr, zz)
         }
         // plane p = dk*2 + dl relative to (k0, l0); built lazily so
         // nearest-combine probes only assemble the plane they snap to
@@ -225,6 +226,8 @@ private[operators] object WindowedTileJoin {
           }
           fits(idx)
         }
+        // the combine of the broadcast path; nearest snaps at t <= 0.5
+        val combine = new PlaneCombine(Seq(zm, um).take(ar - 2))
         ps.grouped(chunkSize).flatMap { chunkSeq =>
           val pArr = chunkSeq.toArray
           java.util.Arrays.sort(pArr, Ordering.by((p: TileProbe) =>
@@ -235,32 +238,12 @@ private[operators] object WindowedTileJoin {
               lastWi = p.wi; lastWj = p.wj; lastK0 = p.k0; lastL0 = p.l0
               java.util.Arrays.fill(built, false)
             }
-            // the combines of the broadcast path
-            // (GridInterpolator.trivariate, QuadrivariateInterpolator):
-            // u outer, z inner; nearest snaps per axis; linear evaluates
-            // BOTH bracketing planes and combines v0 + t*(v1-v0) even at
-            // t = 0 or 1, so a NaN-masked window in the nominally
-            // zero-weight plane propagates exactly like the broadcast
-            // kernel — bit-identical op order
-            def zCombine(dl: Int): Double =
-              if (zm == "nearest") {
-                if (p.tz <= 0.5) fit(p, 0, dl).eval(p.x, p.y)
-                else fit(p, 1, dl).eval(p.x, p.y)
-              } else {
-                val v0 = fit(p, 0, dl).eval(p.x, p.y)
-                val v1 = fit(p, 1, dl).eval(p.x, p.y)
-                v0 + p.tz * (v1 - v0)
-              }
-            val v =
-              if (ar == 2) fit(p, 0, 0).eval(p.x, p.y)
-              else if (ar == 3) zCombine(0)
-              else if (um == "nearest") {
-                if (p.tu <= 0.5) zCombine(0) else zCombine(1)
-              } else {
-                val v0 = zCombine(0)
-                val v1 = zCombine(1)
-                v0 + p.tu * (v1 - v0)
-              }
+            if (ar >= 3) combine.set(0, p.tz, if (p.tz <= 0.5) 0 else 1)
+            if (ar == 4) combine.set(1, p.tu, if (p.tu <= 0.5) 0 else 1)
+            val v = combine { o =>
+              fit(p, if (ar >= 3) o(0) else 0, if (ar == 4) o(1) else 0)
+                .eval(p.x, p.y)
+            }
             (p.rid, v)
           }
         }

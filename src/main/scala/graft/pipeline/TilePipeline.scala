@@ -2,9 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Axis, GeoHash}
-import graft.operators.{BivariateKernel, Grid2D}
-import graft.core.Boundary
+import graft.core.GeoHash
 
 /** The flagship job: H3-style spatial join + bicubic resample of decoded
   * image rasters onto regular per-cell tile grids, with Binning2D-style

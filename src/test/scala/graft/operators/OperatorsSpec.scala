@@ -476,6 +476,85 @@ class GridInterpolatorSpec extends AnyFunSuite {
       "bilinear").select("value").as[Double].head()
     assert(math.abs(out - (1.5 + 2.5 + 2.5)) < 1e-9)
   }
+
+  test("windowed methods under shrink and expand boundaries equal a reference window bit for bit") {
+    import graft.core.{Bicubic, Boundary, Interpolate, Univariate1D}
+    // irregular x (9 nodes), regular y (11 nodes): near an edge `Shrink`
+    // cuts the 6x6 window to 4 or 5 nodes on that axis only, so windows
+    // are non-square; `Expand` repeats the edge node instead
+    val xA = Axis(Array.tabulate(9)(i => i + 0.05 * i * i))
+    val yA = Axis.regular(-2.0, 3.0, 11)
+    val grid = Grid2D(xA, yA, Array.tabulate(9 * 11)(ij =>
+      math.sin(0.7 * ij) + 0.1 * (ij % 5)))
+    def mid(a: Axis, i: Int, f: Double) = a(i) + f * (a(i + 1) - a(i))
+    val probes = Seq(
+      (mid(xA, 0, 0.3), mid(yA, 5, 0.4)),  // left edge
+      (mid(xA, 7, 0.6), mid(yA, 4, 0.2)),  // right edge
+      (mid(xA, 4, 0.5), mid(yA, 0, 0.7)),  // bottom edge
+      (mid(xA, 3, 0.2), mid(yA, 9, 0.5)),  // top edge
+      (mid(xA, 0, 0.4), mid(yA, 8, 0.3)),  // corner: 4 x 5 under Shrink
+      (mid(xA, 6, 0.9), mid(yA, 1, 0.1)),  // corner: 5 x 5 under Shrink
+      // edge-adjacent, but the full 6x6 window still fits: no node is
+      // repeated, so Expand yields finite values to compare here
+      (mid(xA, 2, 0.5), mid(yA, 7, 0.6)),
+      (mid(xA, 5, 0.3), mid(yA, 2, 0.4)))
+    def row(z: Array[Array[Double]], j: Int) = z.map(_(j))
+    def reference(x: Double, y: Double, bdy: Boundary.Value,
+                  m: String): Double =
+      (xA.window(x, 3, bdy), yA.window(y, 3, bdy)) match {
+        case (Some((xi, _)), Some((yi, _))) =>
+          val xs = xi.map(xA(_))
+          val ys = yi.map(yA(_))
+          val z = Array.tabulate(xi.length, yi.length)((i, j) =>
+            grid(xi(i), yi(j)))
+          m match {
+            case "bicubic" => new Bicubic(xs, ys, z)(x, y)
+            case "spline_bilinear" => Interpolate.cspline(ys,
+              ys.indices.map(j => Interpolate.cspline(xs, row(z, j), x))
+                .toArray, y)
+            case _ =>
+              val fits = ys.indices.map(_ => Univariate1D(m))
+              if (!ys.indices.forall(j => fits(j).fit(xs, row(z, j))))
+                Double.NaN
+              else {
+                val fy = Univariate1D(m)
+                if (!fy.fit(ys, fits.map(_.value(x)).toArray)) Double.NaN
+                else fy.value(y)
+              }
+          }
+        case _ => Double.NaN
+      }
+    val shapes = probes.map { case (x, y) =>
+      (xA.window(x, 3, Boundary.Shrink).get._1.length,
+        yA.window(y, 3, Boundary.Shrink).get._1.length)
+    }
+    assert(shapes.contains((4, 5)) && shapes.contains((6, 4)), s"$shapes")
+    val df = probes.zipWithIndex.map { case ((x, y), id) => (id, x, y) }
+      .toDF("id", "x", "y")
+    val finite = scala.collection.mutable.Map[(Boundary.Value, String), Int]()
+      .withDefaultValue(0)
+    val methods = Seq("bicubic", "akima", "c_spline", "spline_bilinear")
+    for (bdy <- Seq(Boundary.Shrink, Boundary.Expand); m <- methods) {
+      val got = GridInterpolator.bivariate(spark, df, "x", "y", grid, m,
+          boundary = bdy).select("id", "value").as[(Int, Double)].collect()
+        .toMap
+      probes.zipWithIndex.foreach { case ((x, y), id) =>
+        val want = reference(x, y, bdy, m)
+        assert(java.lang.Double.doubleToRawLongBits(got(id)) ===
+          java.lang.Double.doubleToRawLongBits(want),
+          s"$bdy $m probe $id: ${got(id)} vs $want")
+        if (!want.isNaN) finite((bdy, m)) += 1
+      }
+    }
+    // finite values are compared in every mode: Shrink on every probe
+    // (akima, which needs 5 nodes per axis, only where no axis is cut to
+    // 4), Expand on the two edge-adjacent probes. Expand's edge windows
+    // repeat the edge node, a zero step, so they come out NaN on both
+    // sides: that is a known defect, not the intended result
+    assert(methods.forall(m => finite((Boundary.Shrink, m)) >=
+      (if (m == "akima") 3 else probes.length) &&
+      finite((Boundary.Expand, m)) >= 2), finite.toString)
+  }
 }
 
 class QuadrivariateSpec extends org.scalatest.funsuite.AnyFunSuite {
