@@ -10,12 +10,16 @@ package graft.core
   *     value; unbounded out-of-range queries return -1.
   *   - `findIndexes(x)` returns the pair of indexes framing `x`
   *     (`axis.hpp:722-778`), wrapping on periodic axes.
-  *   - `window(x, half, boundary)` builds the 2*half index window used by
-  *     windowed interpolators (`axis.hpp:816-881`).
+  *   - `window(x, half, boundary)` gives the run of up to 2*half nodes
+  *     that windowed interpolators read (`axis.hpp:816-881`).
   */
 object Boundary extends Enumeration {
-  /** Boundary modes of the reference (`math/axis.hpp:32-38`). */
-  val Expand, Wrap, Sym, Undef, Shrink = Value
+  /** The window boundary modes of the reference's regular-grid Python
+    * surface (`regular_grid_interpolator.py:66,76-79`): near a
+    * non-periodic edge `Undef` gives no window and `Shrink` cuts it at
+    * the edge. A periodic axis wraps under either.
+    */
+  val Undef, Shrink = Value
 }
 
 final case class Axis(
@@ -103,76 +107,63 @@ final case class Axis(
   }
 
   /** Frame `x` between two adjacent axis indexes (i0 < i1 for ascending).
-    * Returns null when the coordinate cannot be framed (matches
+    * Returns None when the coordinate cannot be framed (matches
     * `axis.hpp:722-778` returning nullopt).
     */
   def findIndexes(coordinate: Double): Option[(Int, Int)] = {
-    if (coordinate.isNaN) return None
+    val f = frame(coordinate)
+    if (f < 0) None else Some(((f >>> 32).toInt, f.toInt))
+  }
+
+  /** [[findIndexes]] without a heap object: i0 in the high and i1 in the
+    * low 32 bits, or -1.
+    */
+  private def frame(coordinate: Double): Long = {
+    if (coordinate.isNaN) return -1L
     val x = normalize(coordinate)
     val i0raw = findIndex(x, bounded = false)
-    if (i0raw == -1) {
-      return if (isPeriodic) Some((size - 1, 0)) else None
-    }
+    if (i0raw == -1) return if (isPeriodic) Axis.pack(size - 1, 0) else -1L
     val delta = x - values(i0raw)
     if (delta == 0) {
-      if (size == 1) return None
+      if (size == 1) return -1L
       val i1 = if (i0raw == size - 1) i0raw - 1 else i0raw + 1
-      return Some((math.min(i0raw, i1), math.max(i0raw, i1)))
+      return Axis.pack(math.min(i0raw, i1), math.max(i0raw, i1))
     }
     var i0 = i0raw
     var i1 = i0raw
     if (delta < 0) i0 = if (isAscending) i0 - 1 else i0 + 1
     else i1 = if (isAscending) i0raw + 1 else i0raw - 1
     if (isPeriodic)
-      Some((GeoMath.floorMod(i0, size), GeoMath.floorMod(i1, size)))
-    else if (i0 >= 0 && i1 >= 0 && i0 < size && i1 < size) Some((i0, i1))
-    else None
+      Axis.pack(GeoMath.floorMod(i0, size), GeoMath.floorMod(i1, size))
+    else if (i0 >= 0 && i1 >= 0 && i0 < size && i1 < size) Axis.pack(i0, i1)
+    else -1L
   }
 
-  private def handleBoundary(b: Boundary.Value, idx: Int): Int = {
-    if (isPeriodic) return GeoMath.floorMod(idx, size)
-    b match {
-      case Boundary.Expand => math.max(0, math.min(idx, size - 1))
-      case Boundary.Wrap   => GeoMath.floorMod(idx, size)
-      case Boundary.Sym =>
-        if (idx < 0) GeoMath.floorMod(-idx, size)
-        else size - 2 - GeoMath.floorMod(idx - size, size)
-      case _ => -1
-    }
-  }
-
-  /** Index window of length 2*half around `x` (reference
-    * `axis.hpp:816-881`); returns the indexes plus the (i0,i1) center
-    * positions inside the window, or None if the boundary mode rejects it.
+  /** The window around `x` on an ascending axis (reference
+    * `axis.hpp:816-881`) as a run of nodes: node k of the run is
+    * [[node]]`(first, k)`, read with [[Axis.runFirst]] and
+    * [[Axis.runLength]]. Let (i0, i1) frame `x`. A periodic axis gives the
+    * 2*half nodes from i0 - (half - 1), wrapping. A non-periodic one
+    * clips [i0 - half + 1, i1 + half - 1] to the axis: `Shrink` keeps the
+    * clipped run, `Undef` gives none if anything was clipped. A run needs
+    * 2 nodes; none is -1.
     */
   def window(coordinate: Double, half: Int, boundary: Boundary.Value)
-      : Option[(Array[Int], (Int, Int))] = {
-    if (half == 0) return None
-    val framed = findIndexes(coordinate) match {
-      case Some(f) => f
-      case None =>
-        return if (size == 1 && normalize(coordinate) == values(0))
-          Some((Array.fill(half * 2)(0), (0, 0)))
-        else None
-    }
-    val buf = scala.collection.mutable.ArrayDeque[Int](framed._1, framed._2)
-    var center = (0, 1)
-    var shift = 1
-    while (shift < half) {
-      var before = framed._1 - shift
-      if (before < 0) before = handleBoundary(boundary, before)
-      if (before >= 0) {
-        buf.prepend(before)
-        center = (center._1 + 1, center._2 + 1)
-      } else if (boundary != Boundary.Shrink) return None
-      var after = framed._2 + shift
-      if (after >= size) after = handleBoundary(boundary, after)
-      if (after >= 0) buf.append(after)
-      else if (boundary != Boundary.Shrink) return None
-      shift += 1
-    }
-    Some((buf.toArray, center))
+      : Long = {
+    val f = frame(coordinate)
+    if (f < 0 || half < 1) return -1L
+    val lo = (f >>> 32).toInt - (half - 1)
+    if (isPeriodic) return Axis.pack(2 * half, lo)
+    val hi = f.toInt + half - 1
+    val first = math.max(0, lo)
+    val last = math.min(size - 1, hi)
+    if (last - first < 1 ||
+        (boundary == Boundary.Undef && (lo < 0 || hi >= size))) -1L
+    else Axis.pack(last - first + 1, first)
   }
+
+  /** Node `k` of the run that starts at `first`. */
+  def node(first: Int, k: Int): Int = GeoMath.floorMod(first + k, size)
 
   /** Axis.contains (`math/axis.hpp:401-416`): periodic axes contain
     * everything; otherwise min<=x<=max.
@@ -182,6 +173,13 @@ final case class Axis(
 }
 
 object Axis {
+  /** `hi` and `lo` in one Long, `hi` in the high 32 bits. A window run
+    * is `pack(length, first)`: positive, so -1 stays free for none.
+    */
+  def pack(hi: Int, lo: Int): Long = (hi.toLong << 32) | (lo & 0xffffffffL)
+  def runFirst(run: Long): Int = run.toInt
+  def runLength(run: Long): Int = (run >>> 32).toInt
+
   /** Evenly spaced axis over [start, stop] with `num` samples. */
   def regular(start: Double, stop: Double, num: Int,
               period: Double = 0.0): Axis = {

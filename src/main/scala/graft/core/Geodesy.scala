@@ -65,22 +65,4 @@ object Geodesy {
         math.pow(math.sin(dLon / 2), 2)
     2 * MeanRadius * math.asin(math.min(1.0, math.sqrt(a)))
   }
-
-  /** Spherical excess area of a lon/lat polygon ring (m^2), positive,
-    * shoelace on the unit sphere (adequate stand-in for the reference's
-    * geographic area strategies for small cells, cf. `int64.hpp:124-136`).
-    */
-  def sphericalRingArea(ring: Array[(Double, Double)]): Double = {
-    var total = 0.0
-    val n = ring.length
-    var i = 0
-    while (i < n) {
-      val (lon1, lat1) = ring(i)
-      val (lon2, lat2) = ring((i + 1) % n)
-      total += toRad(lon2 - lon1) *
-        (2.0 + math.sin(toRad(lat1)) + math.sin(toRad(lat2)))
-      i += 1
-    }
-    math.abs(total * MeanRadius * MeanRadius / 2.0)
-  }
 }

@@ -316,8 +316,6 @@ final class Bicubic(xs: Array[Double], ys: Array[Double],
     }
   }
 
-  def hasNaN: Boolean = z.exists(_.exists(_.isNaN))
-
   /** Evaluate at (x, y); NaN if out of the window. */
   def apply(x: Double, y: Double): Double = {
     if (x < xs(0) || x > xs(nx - 1) || y < ys(0) || y > ys(ny - 1))

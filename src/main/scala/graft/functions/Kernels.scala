@@ -66,13 +66,6 @@ object Kernels {
   def stCoveredBy(x: Double, y: Double, poly: org.apache.spark.unsafe.types.UTF8String): Boolean =
     cachedPoly(poly.toString).coveredBy(x, y)
 
-  def ecefX(lon: Double, lat: Double, alt: Double): Double =
-    Geodesy.llaToEcef(lon, lat, alt)._1
-  def ecefY(lon: Double, lat: Double, alt: Double): Double =
-    Geodesy.llaToEcef(lon, lat, alt)._2
-  def ecefZ(lon: Double, lat: Double, alt: Double): Double =
-    Geodesy.llaToEcef(lon, lat, alt)._3
-
   def haversine(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double =
     Geodesy.haversine(lon1, lat1, lon2, lat2)
 

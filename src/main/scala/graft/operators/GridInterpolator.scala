@@ -81,13 +81,19 @@ final case class Grid4D(xAxis: Axis, yAxis: Axis, zAxis: Axis, uAxis: Axis,
   * (`math/interpolate/geometric/bivariate.hpp`) and windowed {bicubic,
   * spline-bilinear, the separable univariate family}
   * (`math/interpolate/bivariate/bicubic.hpp`) with the reference default
-  * half-window of 3 (6x6) and its boundary modes
+  * half-window of 3 (6x6) and the boundary modes `Undef` and `Shrink`
   * (`pyinterp/regular_grid_interpolator.py:66-79`). Rank 3 and 4 combine
   * the x-y planes along z and u ([[GridInterpolator.planeStack]]).
   */
 object GridInterpolator {
 
   private val geometricMethods = Set("bilinear", "idw", "nearest")
+  /** Windowed bicubic, spline_bilinear and the separable univariate
+    * methods (`regular_grid_interpolator.py:49-63` windowed set).
+    */
+  private[operators] val windowedMethods = Set("bicubic", "spline_bilinear",
+    "akima", "akima_periodic", "c_spline", "c_spline_not_a_knot",
+    "c_spline_periodic", "linear", "polynomial", "steffen")
 
   def bivariate(spark: SparkSession, df: DataFrame, xCol: String, yCol: String,
                 grid: Grid2D, method: String, halfWindow: Int = 3,
@@ -103,22 +109,28 @@ object GridInterpolator {
     * built on first use; per probe, each plane axis is bracketed with
     * `findIndexes` (a miss yields NaN) and the bracketing planes are
     * combined by [[PlaneCombine]] (u outer, z inner; nearest snaps to the
-    * closer node, ties to the lower).
+    * closer node, ties to the lower). The method name, and ascending x
+    * and y axes for a windowed method, are checked here on the driver.
     */
   private[operators] def planeStack(spark: SparkSession, df: DataFrame,
                                     coordCols: Seq[String], grid: PlaneStack,
                                     method: String, planeMethods: Seq[String],
                                     halfWindow: Int, boundary: Boundary.Value,
                                     outputCol: String): DataFrame = {
+    val windowed = windowedMethods(method)
+    require(windowed || geometricMethods(method), s"method $method")
+    require(!windowed || (grid.xAxis.isAscending && grid.yAxis.isAscending),
+      s"windowed method $method requires ascending x and y axes")
     val bc: Broadcast[PlaneStack] = spark.sparkContext.broadcast(grid)
     // windowed methods keep a per-window cache (one fit reused across
     // probes in the same window); a PARTITION-LOCAL sort by x-y cell turns
     // scattered probes into runs of cache hits — no shuffle, and at scale
     // the O(p log p) per-task sort is far cheaper than per-row refits
+    // (a single-node axis has no step to divide by, and no window)
     val (xCol, yCol) = (coordCols(0), coordCols(1))
     val input =
-      if (geometricMethods.contains(method)) df
-      else if (grid.xAxis.isRegular && grid.yAxis.isRegular)
+      if (!windowed) df
+      else if (Seq(grid.xAxis, grid.yAxis).forall(a => a.isRegular && a.size > 1))
         df.sortWithinPartitions(
           floor((col(xCol) - lit(grid.xAxis.front)) / lit(grid.xAxis.step)),
           floor((col(yCol) - lit(grid.yAxis.front)) / lit(grid.yAxis.step)))
@@ -777,29 +789,26 @@ private[operators] final class PlaneCombine(methods: Seq[String]) {
 
 /** Per-partition bivariate kernel with the geometric / windowed dispatch
   * of `pyinterp/regular_grid_interpolator.py:45-63`. A windowed method
-  * loads the probe's window (`Axis.window` under `boundary`; a periodic x
-  * unwrapped monotonic across the seam) into one [[WindowFit]] and keeps
-  * it until a probe leaves the window (`math/interpolate/cache.hpp`
-  * behavior), so cell-sorted partitions make consecutive lookups cache
-  * hits.
+  * loads the probe's window (the runs of `Axis.window` under `boundary`;
+  * a periodic x unwrapped monotonic across the seam) into one
+  * [[WindowFit]] and keeps it until a probe leaves the window
+  * (`math/interpolate/cache.hpp` behavior), so cell-sorted partitions
+  * make consecutive lookups cache hits, which compare four ints.
   */
 final class BivariateKernel(grid: Grid2D, method: String, halfWindow: Int,
                             boundary: Boundary.Value) extends Serializable {
   private val xAxis = grid.xAxis
   private val yAxis = grid.yAxis
 
-  // window cache state (windowed methods)
-  @transient private var cachedXIdx: Array[Int] = null
-  @transient private var cachedYIdx: Array[Int] = null
+  private val windowed = GridInterpolator.windowedMethods(method)
+
+  // window cache state (windowed methods): the cached x and y runs
+  @transient private var cachedX0, cachedXn, cachedY0, cachedYn = 0
   @transient private var cachedFit: WindowFit = null
 
   def apply(x: Double, y: Double): Double = method match {
     case "bilinear" | "idw" | "nearest" => geometric(x, y)
-    // windowed bicubic, spline_bilinear and the separable univariate
-    // methods (`regular_grid_interpolator.py:49-63` windowed set)
-    case "bicubic" | "spline_bilinear" | "akima" | "akima_periodic" |
-         "c_spline" | "c_spline_not_a_knot" | "c_spline_periodic" |
-         "linear" | "polynomial" | "steffen" =>
+    case _ if windowed =>
       if (loadWindow(x, y)) cachedFit.eval(queryX(x), y) else Double.NaN
     case other => throw new IllegalArgumentException(s"method $other")
   }
@@ -832,11 +841,15 @@ final class BivariateKernel(grid: Grid2D, method: String, halfWindow: Int,
   private def loadWindow(x: Double, y: Double): Boolean = {
     val wx = xAxis.window(x, halfWindow, boundary)
     val wy = yAxis.window(y, halfWindow, boundary)
-    if (wx.isEmpty || wy.isEmpty) return false
-    val xi = wx.get._1
-    val yi = wy.get._1
-    if (cachedXIdx != null && java.util.Arrays.equals(xi, cachedXIdx) &&
-        java.util.Arrays.equals(yi, cachedYIdx)) return true
+    if (wx < 0 || wy < 0) return false
+    val x0 = Axis.runFirst(wx)
+    val xn = Axis.runLength(wx)
+    val y0 = Axis.runFirst(wy)
+    val yn = Axis.runLength(wy)
+    if (cachedFit != null && x0 == cachedX0 && xn == cachedXn &&
+        y0 == cachedY0 && yn == cachedYn) return true
+    val xi = Array.tabulate(xn)(xAxis.node(x0, _))
+    val yi = Array.tabulate(yn)(yAxis.node(y0, _))
     val xs = new Array[Double](xi.length)
     var unwrapOffset = 0.0
     var prev = Double.NegativeInfinity
@@ -851,8 +864,10 @@ final class BivariateKernel(grid: Grid2D, method: String, halfWindow: Int,
       prev = xv
       i += 1
     }
-    cachedXIdx = xi
-    cachedYIdx = yi
+    cachedX0 = x0
+    cachedXn = xn
+    cachedY0 = y0
+    cachedYn = yn
     cachedFit = new WindowFit(method, xs, yi.map(yAxis(_)),
       Array.tabulate(xi.length, yi.length)((i, j) => grid(xi(i), yi(j))))
     true

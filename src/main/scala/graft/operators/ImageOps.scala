@@ -147,15 +147,4 @@ object ImageOps {
       // Seq[Any] so the Long ahash is not widened to Double
       Seq[Any](mean, std, mn, mx, edge, hash)
     }
-
-  /** PSNR of each image against a reference raster function — the per-row
-    * decoded-pixel gate of `BASELINE.json.input_hint`.
-    */
-  def psnrAgainst(df: DataFrame, expected: (Row, Int, Int) => Array[Float],
-                  bytesCol: String = "bytes"): DataFrame =
-    withMapped(df, bytesCol, Seq(StructField("psnr", DoubleType))) {
-      (bytes, row) =>
-        val (px, w, h) = ImageCodec.decode(bytes)
-        Seq(ImageCodec.psnr(expected(row, w, h), px))
-    }
 }

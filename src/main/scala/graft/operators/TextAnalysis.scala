@@ -15,13 +15,6 @@ object TextAnalysis {
   def tokenCount(text: Column): Column =
     size(split(trim(text), "\\s+"))
 
-  /** BPE-ish subword unit estimate: words + punctuation marks counted
-    * separately (a cheap, deterministic proxy for tokenizer length).
-    */
-  def subwordCount(text: Column): Column =
-    size(split(trim(text), "\\s+")) +
-      length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]{}]", ""))
-
   /** Quality score in [0,1]: blend of length, punctuation ratio, mean word
     * length and uppercase ratio — the standard cheap quality heuristics.
     */

@@ -477,11 +477,11 @@ class GridInterpolatorSpec extends AnyFunSuite {
     assert(math.abs(out - (1.5 + 2.5 + 2.5)) < 1e-9)
   }
 
-  test("windowed methods under shrink and expand boundaries equal a reference window bit for bit") {
+  test("windowed methods under the shrink boundary equal a reference window bit for bit") {
     import graft.core.{Bicubic, Boundary, Interpolate, Univariate1D}
     // irregular x (9 nodes), regular y (11 nodes): near an edge `Shrink`
     // cuts the 6x6 window to 4 or 5 nodes on that axis only, so windows
-    // are non-square; `Expand` repeats the edge node instead
+    // are non-square
     val xA = Axis(Array.tabulate(9)(i => i + 0.05 * i * i))
     val yA = Axis.regular(-2.0, 3.0, 11)
     val grid = Grid2D(xA, yA, Array.tabulate(9 * 11)(ij =>
@@ -494,19 +494,43 @@ class GridInterpolatorSpec extends AnyFunSuite {
       (mid(xA, 3, 0.2), mid(yA, 9, 0.5)),  // top edge
       (mid(xA, 0, 0.4), mid(yA, 8, 0.3)),  // corner: 4 x 5 under Shrink
       (mid(xA, 6, 0.9), mid(yA, 1, 0.1)),  // corner: 5 x 5 under Shrink
-      // edge-adjacent, but the full 6x6 window still fits: no node is
-      // repeated, so Expand yields finite values to compare here
+      // edge-adjacent, but the full 6x6 window still fits
       (mid(xA, 2, 0.5), mid(yA, 7, 0.6)),
       (mid(xA, 5, 0.3), mid(yA, 2, 0.4)))
+    // the edge band: 20x20 nodes, f = sin(0.3x) + cos(0.2y), 400 probes
+    // within 2 cells of an edge
+    val bandA = Axis.regular(0.0, 19.0, 20)
+    val band = Grid2D(bandA, bandA, Array.tabulate(20 * 20)(ij =>
+      math.sin(0.3 * (ij / 20)) + math.cos(0.2 * (ij % 20))))
+    val rnd = new scala.util.Random(13)
+    val bandProbes = Iterator.continually(
+        (19 * rnd.nextDouble(), 19 * rnd.nextDouble()))
+      .filter { case (x, y) => Seq(x, 19 - x, y, 19 - y).min < 2 }
+      .take(400).toSeq
+    // a single node on x or on y gives no window
+    val single = Axis(Array(0.5))
+    val singleX = Grid2D(single, yA, Array.tabulate(11)(_.toDouble))
+    val singleY = Grid2D(yA, single, Array.tabulate(11)(_.toDouble))
+    val singleXProbes = Seq((0.5, mid(yA, 5, 0.4)), (0.5, yA(0)), (0.7, 1.0))
+    val singleYProbes = singleXProbes.map(_.swap)
+
+    def run(g: Grid2D, x: Double, y: Double) = {
+      val (wx, wy) = (g.xAxis.window(x, 3, Boundary.Shrink),
+        g.yAxis.window(y, 3, Boundary.Shrink))
+      if (wx < 0 || wy < 0) None
+      else Some((Array.tabulate(Axis.runLength(wx))(
+          g.xAxis.node(Axis.runFirst(wx), _)),
+        Array.tabulate(Axis.runLength(wy))(
+          g.yAxis.node(Axis.runFirst(wy), _))))
+    }
     def row(z: Array[Array[Double]], j: Int) = z.map(_(j))
-    def reference(x: Double, y: Double, bdy: Boundary.Value,
-                  m: String): Double =
-      (xA.window(x, 3, bdy), yA.window(y, 3, bdy)) match {
-        case (Some((xi, _)), Some((yi, _))) =>
-          val xs = xi.map(xA(_))
-          val ys = yi.map(yA(_))
+    def reference(g: Grid2D, x: Double, y: Double, m: String): Double =
+      run(g, x, y) match {
+        case Some((xi, yi)) =>
+          val xs = xi.map(g.xAxis(_))
+          val ys = yi.map(g.yAxis(_))
           val z = Array.tabulate(xi.length, yi.length)((i, j) =>
-            grid(xi(i), yi(j)))
+            g(xi(i), yi(j)))
           m match {
             case "bicubic" => new Bicubic(xs, ys, z)(x, y)
             case "spline_bilinear" => Interpolate.cspline(ys,
@@ -522,38 +546,96 @@ class GridInterpolatorSpec extends AnyFunSuite {
                 else fy.value(y)
               }
           }
-        case _ => Double.NaN
+        case None => Double.NaN
       }
     val shapes = probes.map { case (x, y) =>
-      (xA.window(x, 3, Boundary.Shrink).get._1.length,
-        yA.window(y, 3, Boundary.Shrink).get._1.length)
+      run(grid, x, y).map { case (xi, yi) => (xi.length, yi.length) }.get
     }
     assert(shapes.contains((4, 5)) && shapes.contains((6, 4)), s"$shapes")
-    val df = probes.zipWithIndex.map { case ((x, y), id) => (id, x, y) }
-      .toDF("id", "x", "y")
-    val finite = scala.collection.mutable.Map[(Boundary.Value, String), Int]()
-      .withDefaultValue(0)
-    val methods = Seq("bicubic", "akima", "c_spline", "spline_bilinear")
-    for (bdy <- Seq(Boundary.Shrink, Boundary.Expand); m <- methods) {
-      val got = GridInterpolator.bivariate(spark, df, "x", "y", grid, m,
-          boundary = bdy).select("id", "value").as[(Int, Double)].collect()
-        .toMap
-      probes.zipWithIndex.foreach { case ((x, y), id) =>
-        val want = reference(x, y, bdy, m)
+    // every value equals the reference bit for bit; returns the ids of
+    // the finite ones
+    def check(g: Grid2D, ps: Seq[(Double, Double)], m: String): Set[Int] = {
+      val df = ps.zipWithIndex.map { case ((x, y), id) => (id, x, y) }
+        .toDF("id", "x", "y")
+      val got = GridInterpolator.bivariate(spark, df, "x", "y", g, m,
+          boundary = Boundary.Shrink).select("id", "value")
+        .as[(Int, Double)].collect().toMap
+      ps.indices.foreach { id =>
+        val want = reference(g, ps(id)._1, ps(id)._2, m)
         assert(java.lang.Double.doubleToRawLongBits(got(id)) ===
           java.lang.Double.doubleToRawLongBits(want),
-          s"$bdy $m probe $id: ${got(id)} vs $want")
-        if (!want.isNaN) finite((bdy, m)) += 1
+          s"$m probe $id ${ps(id)}: ${got(id)} vs $want")
+      }
+      ps.indices.filterNot(got(_).isNaN).toSet
+    }
+    // Shrink is finite on every probe, except that akima needs 5 nodes
+    // per axis: 3 of the 8 probes above keep that many
+    for (m <- Seq("bicubic", "akima", "c_spline", "spline_bilinear"))
+      assert(check(grid, probes, m).size >=
+        (if (m == "akima") 3 else probes.length), m)
+    for (m <- GridInterpolator.windowedMethods) {
+      val finite = check(band, bandProbes, m)
+      bandProbes.indices.foreach { id =>
+        val (xi, yi) = run(band, bandProbes(id)._1, bandProbes(id)._2).get
+        val enough = !m.startsWith("akima") || xi.length.min(yi.length) >= 5
+        assert(finite(id) == enough, s"$m band probe $id ${bandProbes(id)}")
+      }
+      assert(check(singleX, singleXProbes, m).isEmpty, m)
+      assert(check(singleY, singleYProbes, m).isEmpty, m)
+    }
+  }
+
+  test("windowed methods fail on a descending axis, geometric ones equal the ascending grid") {
+    val asc = Axis.regular(0.0, 19.0, 20)
+    val desc = Axis(asc.values.reverse)
+    val yA = Axis.regular(0.0, 9.0, 10)
+    def f(x: Double, y: Double) = math.sin(0.3 * x) + math.cos(0.2 * y)
+    def grid(xA: Axis, yA: Axis) = Grid2D(xA, yA,
+      Array.tabulate(xA.size * yA.size)(ij =>
+        f(xA(ij / yA.size), yA(ij % yA.size))))
+    val rnd = new scala.util.Random(7)
+    val df = Seq.tabulate(200)(id =>
+        (id, 3 + 13 * rnd.nextDouble(), 3 + 3 * rnd.nextDouble()))
+      .toDF("id", "x", "y")
+    // the checks run on the driver, before any job
+    for (g <- Seq(grid(desc, yA), grid(yA, desc)))
+      intercept[IllegalArgumentException](
+        GridInterpolator.bivariate(spark, df, "x", "y", g, "bicubic"))
+    intercept[IllegalArgumentException](GridInterpolator.bivariate(spark,
+      df, "x", "y", grid(asc, yA), "bogus"))
+    def values(g: Grid2D, m: String) = GridInterpolator.bivariate(spark,
+      df, "x", "y", g, m).select("id", "value").as[(Int, Double)]
+      .collect().toMap
+    for (m <- Seq("bilinear", "idw", "nearest")) {
+      val (a, d) = (values(grid(asc, yA), m), values(grid(desc, yA), m))
+      assert(a.keySet == (0 until 200).toSet && a.values.forall(!_.isNaN))
+      a.foreach { case (id, v) =>
+        assert(math.abs(d(id) - v) <= 1e-12, s"$m probe $id: ${d(id)} vs $v")
       }
     }
-    // finite values are compared in every mode: Shrink on every probe
-    // (akima, which needs 5 nodes per axis, only where no axis is cut to
-    // 4), Expand on the two edge-adjacent probes. Expand's edge windows
-    // repeat the edge node, a zero step, so they come out NaN on both
-    // sides: that is a known defect, not the intended result
-    assert(methods.forall(m => finite((Boundary.Shrink, m)) >=
-      (if (m == "akima") 3 else probes.length) &&
-      finite((Boundary.Expand, m)) >= 2), finite.toString)
+  }
+
+  test("a bicubic window-cache hit allocates nothing per probe") {
+    val kernel = new BivariateKernel(makeGrid(), "bicubic", 3,
+      graft.core.Boundary.Undef)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread.getId
+    var sum = 0.0
+    // 100k probes in the one cell [1.0, 1.05]^2 of the step-0.05 grid
+    def probe(n: Int): Unit = {
+      var k = 0
+      while (k < n) {
+        sum += kernel(1.005 + 0.04 * (k % 97) / 97, 1.005 + 0.04 * (k % 89) / 89)
+        k += 1
+      }
+    }
+    probe(100000) // warm-up
+    val before = mx.getThreadAllocatedBytes(tid)
+    probe(100000)
+    val perProbe = (mx.getThreadAllocatedBytes(tid) - before) / 100000.0
+    assert(!sum.isNaN)
+    assert(perProbe < 16, s"$perProbe B per probe")
   }
 }
 
